@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** The reference's streaming core re-expressed as Structured Streaming: two
@@ -48,28 +49,86 @@ object FlowStreams {
     df.withColumn("event_date",
       date_add(to_date(lit("1970-01-01")), (col("timeReceived") / 86400).cast("int")))
 
-  /** Partial 5-minute rollup of one micro-batch (`create.sh:92-110` performs
-    * this per insert block). Runs as a *batch* plan inside foreachBatch.
+  /** Partial 5-minute rollup of one micro-batch, aggregated per insert
+    * block as the reference's MV does (`create.sh:92-110`): an insert block
+    * here is one input partition, folded in place with no exchange, so a
+    * batch is one stage of one task per partition. Equal keys from
+    * different partitions stay separate partial rows, like unmerged
+    * SummingMergeTree parts (`README.md:164-172`); every reader
+    * ([[mergeRollup]], [[optimizeRollupOnline]]) sums them. Runs as a
+    * *batch* plan inside foreachBatch.
     *
     * Shape mirrors `flows_5m` (`create.sh:70-90`): rows keyed
     * (Date, Timeslot, SrcAS, DstAS) carrying the Nested per-EType sub-map —
     * here a sorted ArrayType(Struct(etype, bytes, packets, flow_count)) —
-    * plus the summed totals. Two-level aggregation: the inner per-etype agg
-    * is the single shuffle; the map re-collect happens on already-reduced
-    * rows. */
-  def rollupPartials(df: DataFrame): DataFrame =
-    projectRaw(df)
-      .groupBy(
-        col("event_date"),
-        ((col("timeReceived") / 300).cast("long") * 300).as("timeslot"),
-        col("srcAS"), col("dstAS"), col("etype"))
-      .agg(sum("bytes").as("b"), sum("packets").as("p"), count(lit(1)).as("c"))
-      .groupBy("event_date", "timeslot", "srcAS", "dstAS")
-      .agg(
-        sort_array(collect_list(struct(col("etype"),
-          col("b").as("bytes"), col("p").as("packets"), col("c").as("flow_count"))))
-          .as("etype_map"),
-        sum("b").as("sum_bytes"), sum("p").as("sum_packets"), sum("c").as("flow_count"))
+    * plus the summed totals. Schema, nullability and null handling are
+    * those of the grouped `sum`/`count` aggregate that [[mergeRollup]]
+    * computes. Each partition's rows come out sorted by key: the extra
+    * per-task files cost fewer stored bytes when their keys are clustered. */
+  def rollupPartials(df: DataFrame): DataFrame = {
+    val keyed = projectRaw(df).select(
+      col("event_date"),
+      ((col("timeReceived") / 300).cast("long") * 300).as("timeslot"),
+      col("srcAS"), col("dstAS"), col("etype"),
+      col("bytes").cast("long"), col("packets").cast("long"))
+    val in = keyed.schema
+    val entry = StructType(Seq(in("etype"), StructField("bytes", LongType),
+      StructField("packets", LongType), StructField("flow_count", LongType, nullable = false)))
+    val out = StructType(in.fields.take(4) ++ Seq(
+      StructField("etype_map", ArrayType(entry, containsNull = false), nullable = false),
+      StructField("sum_bytes", LongType), StructField("sum_packets", LongType),
+      StructField("flow_count", LongType)))
+    keyed.mapPartitions(foldBlock _)(Encoders.row(out))
+  }
+
+  /** Running `sum(bytes)`, `sum(packets)` and `count(*)`: a sum stays
+    * null until a non-null value arrives, as `sum` does. */
+  private final class Sums {
+    var bytes: java.lang.Long = null
+    var packets: java.lang.Long = null
+    var count = 0L
+    def add(b: java.lang.Long, p: java.lang.Long, n: Long): Unit = {
+      if (b != null) bytes = if (bytes == null) b else bytes + b
+      if (p != null) packets = if (packets == null) p else packets + p
+      count += n
+    }
+  }
+
+  /** Ascending, nulls first: Spark's default group and `sort_array` order. */
+  private val nullsFirst: Ordering[Any] = (a: Any, b: Any) =>
+    if (a == null) { if (b == null) 0 else -1 }
+    else if (b == null) 1
+    else a.asInstanceOf[Comparable[Any]].compareTo(b)
+
+  /** Fold one insert block (rows of [[rollupPartials]]' `keyed` columns)
+    * to one row per (event_date, timeslot, srcAS, dstAS), sorted by key. */
+  private def foldBlock(rows: Iterator[Row]): Iterator[Row] = {
+    val groups = new java.util.HashMap[(Any, Any, Any, Any), java.util.HashMap[Any, Sums]]()
+    rows.foreach { r =>
+      val key = (r.get(0), r.get(1), r.get(2), r.get(3))
+      var cells = groups.get(key)
+      if (cells == null) {
+        cells = new java.util.HashMap[Any, Sums](4)
+        groups.put(key, cells)
+      }
+      var cell = cells.get(r.get(4))
+      if (cell == null) {
+        cell = new Sums
+        cells.put(r.get(4), cell)
+      }
+      cell.add(r.getAs[java.lang.Long](5), r.getAs[java.lang.Long](6), 1L)
+    }
+    import scala.jdk.CollectionConverters._
+    val keyOrder = Ordering.Tuple4(nullsFirst, nullsFirst, nullsFirst, nullsFirst)
+    groups.asScala.toArray.sortBy(_._1)(keyOrder).iterator.map { case (k, cells) =>
+      val total = new Sums
+      val etypeMap = cells.asScala.toSeq.sortBy(_._1)(nullsFirst).map { case (etype, c) =>
+        total.add(c.bytes, c.packets, c.count)
+        Row(etype, c.bytes, c.packets, c.count)
+      }
+      Row(k._1, k._2, k._3, k._4, etypeMap, total.bytes, total.packets, total.count)
+    }
+  }
 
   /** Start the raw MV: stream → project → partitioned parquet, append.
     * Partitioning by event_date is the reference's `PARTITION BY Date`
@@ -1100,10 +1159,11 @@ object FlowStreams {
     * one's snapshot went stale and it aborted cleanly).
     *
     * Partition-selective like [[compactRawOnline]]: a one-file partition
-    * is a single batch's partials — already one row per key (each batch's
-    * [[rollupPartials]] is a grouped aggregate) — so only multi-file
-    * partitions need folding, and rollup keys never span event_date
-    * partitions, so the per-partition fold is exact. */
+    * holds one task's partials — already one row per key, since
+    * [[rollupPartials]] folds each input partition to one row per key and
+    * a write task puts one file in each partition directory — so only
+    * multi-file partitions need folding, and rollup keys never span
+    * event_date partitions, so the per-partition fold is exact. */
   def optimizeRollupOnline(spark: SparkSession, table: String): Boolean = {
     val (_, files) = ManifestTable.snapshot(table)
     if (files.isEmpty) return true

@@ -748,24 +748,30 @@ object ManifestTable {
     moved.toSeq
   }
 
+  /** One read-only Hadoop conf for all footer reads — constructing one per
+    * staged file re-parses the XML defaults O(files) times per stage
+    * (r8 review). */
+  private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
+
+  /** Reader options over [[footerConf]]: the one-argument
+    * `ParquetFileReader.open` builds default options, and with them a
+    * fresh Hadoop conf, for every file. */
+  private lazy val footerOptions =
+    org.apache.parquet.HadoopReadOptions.builder(footerConf).build()
+
   /** (min,max) of a LONG/INT column from a parquet footer, folded across
     * row groups. None when the column is absent, non-integral, has null
     * rows unaccounted stats, or anything fails — stats are an
     * optimization; a file without them is read conservatively, never
     * skipped. Data-plane access (the scratch file the writer just
     * produced), like the Spark read/write path itself. */
-  /** One read-only Hadoop conf for all footer reads — constructing one per
-    * staged file re-parses the XML defaults O(files) times per stage
-    * (r8 review). */
-  private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
-
   private def footerStats(file: Path, statsCol: String): Option[(Long, Long)] =
     try {
       import scala.jdk.CollectionConverters._
       import org.apache.parquet.column.statistics.{IntStatistics, LongStatistics}
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(file.toUri), footerConf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in, footerOptions)
       try {
         val cols = r.getFooter.getBlocks.asScala
           .flatMap(_.getColumns.asScala)

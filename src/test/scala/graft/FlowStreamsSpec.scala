@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.flow.{FlowGen, FlowMessage}
-import graft.streaming.FlowStreams
+import graft.streaming.{FlowStreams, ManifestTable}
 
 /** End-to-end MV cascade over a MemoryStream source: raw projection table,
   * partial-append rollup with read-time re-merge (SummingMergeTree
@@ -166,7 +166,7 @@ class FlowStreamsSpec extends SparkTestBase {
 
     // read-time re-merge equals a direct batch aggregation over all input
     val all = (b1 ++ b2).toDS().toDF()
-    val direct = FlowStreams.rollupPartials(all)
+    val direct = FlowStreams.rollupPartials(all.coalesce(1))
       .select("timeslot", "srcAS", "dstAS", "sum_bytes", "flow_count")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4))).toSet
     val viaStream = merged
@@ -176,7 +176,7 @@ class FlowStreamsSpec extends SparkTestBase {
 
     // ETypeMap (create.sh:78-86): cross-batch element-wise merge by etype
     // equals the single-batch aggregation, including the nested arrays
-    val directFull = FlowStreams.rollupPartials(all)
+    val directFull = FlowStreams.rollupPartials(all.coalesce(1))
     assert(merged.except(directFull).isEmpty && directFull.except(merged).isEmpty)
 
     // OPTIMIZE: folds to one row per key; reads unchanged
@@ -190,6 +190,97 @@ class FlowStreamsSpec extends SparkTestBase {
     // and the merged maps survive compaction byte-for-byte
     val rereadFull = FlowStreams.readRollup(spark, out)
     assert(rereadFull.except(directFull).isEmpty && directFull.except(rereadFull).isEmpty)
+  }
+
+  /** The grouped two-level aggregate `rollupPartials` folds per partition:
+    * a global group-by over (key, etype), then re-collected per key. */
+  private def groupedRollup(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    FlowStreams.projectRaw(df)
+      .groupBy(col("event_date"),
+        ((col("timeReceived") / 300).cast("long") * 300).as("timeslot"),
+        col("srcAS"), col("dstAS"), col("etype"))
+      .agg(sum("bytes").as("b"), sum("packets").as("p"), count(lit(1)).as("c"))
+      .groupBy("event_date", "timeslot", "srcAS", "dstAS")
+      .agg(
+        sort_array(collect_list(struct(col("etype"),
+          col("b").as("bytes"), col("p").as("packets"), col("c").as("flow_count"))))
+          .as("etype_map"),
+        sum("b").as("sum_bytes"), sum("p").as("sum_packets"), sum("c").as("flow_count"))
+
+  /** 4 partitions, no exchange below; two etypes, and with `nulls` some
+    * null keys, etypes, bytes and packets. */
+  private def rollupInput(nulls: Boolean): org.apache.spark.sql.DataFrame = {
+    val msgs = genBatch(3000, seed = 17, baseTime = 1704067200L).zipWithIndex.map {
+      case (m, i) => if (i % 3 == 0) m.copy(etype = 0x0800) else m }
+    val df = spark.sparkContext.parallelize(msgs, 4).toDF()
+    if (!nulls) df
+    else df
+      .withColumn("srcAS", when(col("sequenceNum") % 11 === 0, lit(null)).otherwise(col("srcAS")))
+      .withColumn("etype", when(col("sequenceNum") % 13 === 0, lit(null)).otherwise(col("etype")))
+      .withColumn("bytes", when(col("sequenceNum") % 5 === 0, lit(null)).otherwise(col("bytes")))
+      .withColumn("packets", when(col("srcPort") % 2 === 0, lit(null)).otherwise(col("packets")))
+  }
+
+  test("rollupPartials folds each partition in place: no exchange, one stage of 4 tasks, grouped schema") {
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def exchanges(df: org.apache.spark.sql.DataFrame) = {
+      df.collect()
+      Aqe.collect(df.queryExecution.executedPlan) {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
+    }
+    for (nulls <- Seq(false, true)) {
+      val in = rollupInput(nulls)
+      val parts = FlowStreams.rollupPartials(in)
+      assert(exchanges(parts).isEmpty, "the per-block fold must not shuffle")
+      assert(exchanges(groupedRollup(in)).nonEmpty, "the check must see a grouped aggregate's shuffle")
+      assert(parts.queryExecution.toRdd.getNumPartitions === 4)
+      // names, types and nullability, nested etype_map included
+      assert(parts.schema === groupedRollup(in).schema)
+    }
+  }
+
+  test("rollupPartials: merged partials equal the grouped aggregate, nested etype_map and nulls included") {
+    for (nulls <- Seq(false, true)) {
+      val in = rollupInput(nulls)
+      val want = groupedRollup(in)
+      val parts = FlowStreams.rollupPartials(in)
+      // equal keys from different blocks are separate partials
+      assert(parts.count() > want.count())
+      val merged = FlowStreams.mergeRollup(parts)
+      assert(merged.count() === want.count())
+      assert(merged.except(want).isEmpty && want.except(merged).isEmpty)
+      // one block is the whole aggregate, row for row, in key order
+      val oneBlock = FlowStreams.rollupPartials(in.coalesce(1)).collect().toSeq
+      val keys = Seq("event_date", "timeslot", "srcAS", "dstAS").map(col)
+      assert(oneBlock === want.orderBy(keys: _*).collect().toSeq)
+      if (nulls) {
+        assert(oneBlock.exists(_.isNullAt(2)), "a null srcAS key survives")
+        assert(oneBlock.exists(r => r.getSeq[org.apache.spark.sql.Row](4).exists(_.isNullAt(0))),
+          "a null etype entry survives")
+      }
+    }
+  }
+
+  test("rollupPartials: each written file holds one row per key (the one-file-partition invariant)") {
+    val table = tmp()
+    val in = rollupInput(nulls = false)
+    ManifestTable.append(FlowStreams.rollupPartials(in), table,
+      Some("event_date"), 0L, statsCol = Some("timeslot"))
+    val files = ManifestTable.snapshot(table)._2
+    val byDir = files.groupBy(f => f.substring(0, f.lastIndexOf('/')))
+    assert(byDir.values.exists(_.size > 1), "expected several blocks' files in one partition")
+    val keys = Seq("timeslot", "srcAS", "dstAS")
+    files.foreach { f =>
+      val rows = spark.read.parquet(s"$table/$f")
+      assert(rows.count() === rows.select(keys.map(col): _*).distinct().count(),
+        s"$f holds a key twice")
+    }
+    // folding the multi-file partitions then leaves one row per key overall
+    assert(FlowStreams.optimizeRollupOnline(spark, table))
+    val want = groupedRollup(in)
+    val folded = ManifestTable.read(spark, table)
+    assert(folded.count() === want.count())
+    assert(FlowStreams.readRollupManaged(spark, table).except(want).isEmpty)
   }
 
   test("traffic matrix from the rollup MV: equals the batch matrix over the union; shares sum to 1 (r13)") {
@@ -281,7 +372,7 @@ class FlowStreamsSpec extends SparkTestBase {
       .mode("append").partitionBy("event_date").parquet(out)
     FlowStreams.rollupPartials(b2.toDS().toDF()).write
       .mode("overwrite").partitionBy("event_date").parquet(s"$out/batch=0")
-    val direct = FlowStreams.rollupPartials((b1 ++ b2).toDS().toDF())
+    val direct = FlowStreams.rollupPartials((b1 ++ b2).toDS().toDF().coalesce(1))
     val merged = FlowStreams.readRollup(spark, out)
     assert(merged.except(direct).isEmpty && direct.except(merged).isEmpty)
     // optimize repairs the mix into the uniform batch=-1 layout
@@ -511,7 +602,7 @@ class FlowStreamsSpec extends SparkTestBase {
 
     import spark.implicits._
     val emitted = spark.table("wm_typed")
-    val direct = FlowStreams.rollupPartials((b1 ++ b2).toDS().toDF())
+    val direct = FlowStreams.rollupPartials((b1 ++ b2).toDS().toDF().coalesce(1))
     // every real window finalized exactly once, bit-identical to the batch
     // two-level aggregation (the sentinel's own window never finalizes)
     assert(emitted.count() === direct.count())

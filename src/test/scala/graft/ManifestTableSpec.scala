@@ -118,7 +118,7 @@ class ManifestTableSpec extends SparkTestBase {
     q.stop()
 
     val all = (b1 ++ b2 ++ b3).toDS().toDF()
-    val direct = FlowStreams.rollupPartials(all)
+    val direct = FlowStreams.rollupPartials(all.coalesce(1))
     val merged = FlowStreams.readRollupManaged(spark, table)
     assert(merged.except(direct).isEmpty && direct.except(merged).isEmpty)
 
