@@ -167,10 +167,10 @@ object GraftFunctions {
       graft.functions.ThetaSketchAgg(es.head, intLit(es(1), "theta_sketch", "lgK"))
         .toAggregateExpression()
     }, "built-in")
-    // theta_union(sketch, lgK) -> binary (read-time MV fold)
-    reg.createOrReplaceTempFunction("theta_union", es => {
-      require(es.length == 2, "usage: theta_union(sketch, lgK)")
-      graft.functions.ThetaSketchUnion(es.head, intLit(es(1), "theta_union", "lgK"))
+    // theta_fold(sketch, lgK) -> binary (read-time MV fold)
+    reg.createOrReplaceTempFunction("theta_fold", es => {
+      require(es.length == 2, "usage: theta_fold(sketch, lgK)")
+      graft.functions.ThetaSketchUnion(es.head, intLit(es(1), "theta_fold", "lgK"))
         .toAggregateExpression()
     }, "built-in")
     // theta_estimate(sketch, strict) -> bigint

@@ -414,7 +414,7 @@ object FlowQueries {
 
   /** The z-scoring core over ANY exact (proto, minute, sampled_bytes)
     * relation — shared by the batch query above and the streaming MV's
-    * read path ([[graft.streaming.FlowStreams.readAnomalySeries]]), so
+    * read path ([[graft.streaming.FlowStreams.readAnomalySeriesManaged]]), so
     * MV-fold-then-score is definitionally the batch semantics. */
   private[graft] def zscoreOverMinutes(perMin0: DataFrame): DataFrame = {
     val perMin = perMin0.select(col("proto"), col("minute"),
@@ -462,7 +462,7 @@ object FlowQueries {
 
   /** The MAD-scoring core over ANY exact (proto, minute, sampled_bytes)
     * relation — shared by the batch query above and the streaming MV's
-    * robust read path ([[graft.streaming.FlowStreams.readAnomalyMadSeries]]),
+    * robust read path ([[graft.streaming.FlowStreams.readAnomalyMadSeriesManaged]]),
     * the same twin structure as [[zscoreOverMinutes]]. */
   private[graft] def madOverMinutes(perMin0: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -90,7 +90,7 @@ case class ThetaSketchAgg(child: Expression, lgK: Int,
     copy(inputAggBufferOffset = newOffset)
 }
 
-/** `theta_union(sketch, lgK)` — fold SERIALIZED [[ThetaSketchAgg]] blobs
+/** `theta_fold(sketch, lgK)` — fold SERIALIZED [[ThetaSketchAgg]] blobs
   * into one sketch (the read-time merge of an AggregatingMergeTree-style
   * MV). NULL inputs are skipped; the result is a compact sketch blob for
   * [[ThetaSketchEstimate]] / [[ThetaIntersectCount]] to finalize. */
@@ -103,10 +103,10 @@ case class ThetaSketchUnion(child: Expression, lgK: Int,
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"theta_union needs a BINARY sketch column, got ${child.dataType}")
+      s"theta_fold needs a BINARY sketch column, got ${child.dataType}")
   override def nullable: Boolean = false
   override def dataType: DataType = BinaryType
-  override def prettyName: String = "theta_union"
+  override def prettyName: String = "theta_fold"
 
   override def createAggregationBuffer(): Union =
     SetOperation.builder().setLogNominalEntries(lgK).buildUnion()
@@ -211,7 +211,7 @@ object ThetaSketch {
       ThetaSketchAgg(ColumnBridge.expression(value), lgK).toAggregateExpression())
 
   /** Fold serialized sketch blobs into one (read-time MV merge). */
-  def thetaUnion(sketch: Column, lgK: Int = 12): Column =
+  def thetaFold(sketch: Column, lgK: Int = 12): Column =
     ColumnBridge.column(
       ThetaSketchUnion(ColumnBridge.expression(sketch), lgK).toAggregateExpression())
 

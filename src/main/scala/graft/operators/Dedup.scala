@@ -1318,9 +1318,7 @@ object Dedup {
       case Some(("src_batch", mn, _)) if eraSpan > 0L => mn / eraSpan
       case _ => -1L
     }
-    val byBucket = entries.groupBy(e =>
-      (e.path.lastIndexOf('/') match { case -1 => ""; case i => e.path.substring(0, i) },
-        eraOf(e)))
+    val byBucket = entries.groupBy(e => (ManifestTable.partitionDir(e.path), eraOf(e)))
     // legacy unpartitioned files (empty dir group) are left alone: mixing
     // them into a bucket-partitioned rewrite would misfile them
     val fragmentedGroups = byBucket.filter { case ((d, _), fs) =>

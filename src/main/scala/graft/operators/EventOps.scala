@@ -168,7 +168,7 @@ object EventOps {
       .select(col("sk"),
         explode(sequence(col("day"), col("day") + 6 * daySec, lit(daySec))).as("day"))
       .groupBy("day")
-      .agg(ThetaSketch.thetaUnion(col("sk"), lgK).as("wsk"))
+      .agg(ThetaSketch.thetaFold(col("sk"), lgK).as("wsk"))
       .select(col("day"), ThetaSketch.thetaEstimate(col("wsk"), strict).as("wau"))
     dau.join(wau, "day")
       .withColumn("stickiness", round(col("dau").cast("double") / col("wau"), 6))

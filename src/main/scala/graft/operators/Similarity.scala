@@ -471,11 +471,8 @@ object Similarity {
       filesPerBucket: Int = 1): Boolean = {
     import graft.streaming.ManifestTable
     val table = s"$indexDir/buckets"
-    val (_, files) = ManifestTable.snapshot(table)
-    if (files.isEmpty) return true
-    val byBucket = files.groupBy(f =>
-      f.lastIndexOf('/') match { case -1 => ""; case i => f.substring(0, i) })
-    val fragmented = byBucket.filter(_._2.size > filesPerBucket).values.flatten.toSeq
+    val fragmented = ManifestTable.filesByPartition(ManifestTable.snapshot(table)._2)
+      .filter(_._2.size > filesPerBucket).values.flatten.toSeq
     if (fragmented.isEmpty) return true
     val compacted = ManifestTable.readSelected(spark, table, fragmented)
       .repartition(col("sig_part"))
@@ -918,11 +915,8 @@ object Similarity {
       filesPerCell: Int = 1): Boolean = {
     import graft.streaming.ManifestTable
     val table = s"$indexDir/cells"
-    val (_, files) = ManifestTable.snapshot(table)
-    if (files.isEmpty) return true
-    val byCell = files.groupBy(f =>
-      f.lastIndexOf('/') match { case -1 => ""; case i => f.substring(0, i) })
-    val fragmented = byCell.filter(_._2.size > filesPerCell).values.flatten.toSeq
+    val fragmented = ManifestTable.filesByPartition(ManifestTable.snapshot(table)._2)
+      .filter(_._2.size > filesPerCell).values.flatten.toSeq
     if (fragmented.isEmpty) return true
     val compacted = ManifestTable.readSelected(spark, table, fragmented)
       .repartition(col("cid_part"))

@@ -97,10 +97,8 @@ object FlowPipeline {
       vecEvery: Long = 1000L, dims: Int = 16, bits: Int = 8): Unit = {
     val b = batch.persist()
     try {
-      ManifestTable.append(FlowStreams.projectRaw(b), rawTable,
-        Some("event_date"), id)
-      ManifestTable.append(FlowStreams.rollupPartials(b), rollupTable,
-        Some("event_date"), id)
+      FlowStreams.appendRaw(b, rawTable, id)
+      FlowStreams.Rollup.append(b, rollupTable, id)
       Similarity.appendToIvfIndexBatch(deriveVecs(b, vecEvery, dims),
         ivfIndexDir, id + 1L)
       Similarity.appendToLshIndexBatch(deriveVecs(b, vecEvery, dims),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import graft.GraftFunctions.reinterpret_uint32
+import graft.functions.{HeavyHitters, QuantileSketch, ThetaSketch}
 
 /** The reference's streaming core re-expressed as Structured Streaming: two
   * always-on materialized-view queries over one source, feeding a raw table
@@ -19,14 +21,20 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * SummingMergeTree parity (§7.4 decision): each micro-batch appends its
   * *partial* aggregate rows; equal-key rows accumulate across batches exactly
   * like unmerged SummingMergeTree parts (`README.md:164-172`). Reads go
-  * through [[readRollup]] (query-time re-merge = "SELECT ... GROUP BY" before
-  * OPTIMIZE); [[optimizeRollup]] is the explicit `OPTIMIZE TABLE` — a batch
-  * rewrite that folds each partition to one row per key. This keeps streaming
+  * through [[readRollupManaged]] (query-time re-merge = "SELECT ... GROUP BY"
+  * before OPTIMIZE); [[optimizeRollupOnline]] is `OPTIMIZE TABLE` — it folds
+  * the fragmented partitions to one row per key and swaps them in one
+  * manifest commit while the stream keeps running. This keeps streaming
   * state at zero (no unbounded state store) and makes late data trivially
   * correct: a late row lands as one more partial, folded at the next read or
   * compaction — the reference's exact semantics (T4).
   *
-  * Delivery: Spark checkpointing + idempotent-per-batch file sinks give
+  * One MV mechanism: the rollup and every sketch MV is a [[MergeableMV]] —
+  * per-batch partials, one append, one streaming start and one online fold
+  * over a [[ManifestTable]] — stated once per MV with its partition and
+  * stats columns.
+  *
+  * Delivery: Spark checkpointing + the manifest's batch-id replay guard give
   * exactly-once — strictly stronger than the reference inserter's
   * at-least-once offset handling (`inserter.go:181-188`, T1).
   *
@@ -42,6 +50,16 @@ object FlowStreams {
     * timer (`inserter.go:35-36`, T2); the count-based flush is subsumed by
     * Spark's batch sizing. */
   val DefaultTrigger: Trigger = Trigger.ProcessingTime("5 seconds")
+
+  /** The one foreachBatch shell every always-on query here runs in: `f`
+    * receives each micro-batch with its id, under `checkpoint`. */
+  private def startBatches(stream: DataFrame, checkpoint: String, trigger: Trigger)
+      (f: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .foreachBatch(f)
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .start()
 
   /** S9: the insert-time projection of the raw MV — `toDate(TimeReceived) AS
     * Date, *` (`create.sh:64-67`), epoch-day arithmetic like the batch path. */
@@ -130,125 +148,10 @@ object FlowStreams {
     }
   }
 
-  /** Start the raw MV: stream → project → partitioned parquet, append.
-    * Partitioning by event_date is the reference's `PARTITION BY Date`
-    * (`create.sh:60-62`) and gives partition pruning to every dashboard
-    * time-range query. */
-  def startRawMV(stream: DataFrame, outPath: String, checkpoint: String,
-      trigger: Trigger = DefaultTrigger): StreamingQuery =
-    projectRaw(stream).writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .partitionBy("event_date")
-      .outputMode("append")
-      .trigger(trigger)
-      .start()
-
-  /** Start the 5-minute rollup MV: per-batch partial aggregates landing in
-    * the rollup table — zero streaming state, SummingMergeTree semantics.
-    * Each batch writes its own `batch=<id>` directory in OVERWRITE mode:
-    * a checkpoint replay rewrites the same directory instead of appending
-    * a second copy of partials that the read-time re-merge would silently
-    * SUM into inflated totals (blind append was the r7 review's top
-    * finding here).
-    *
-    * SCOPE (r9): this plain-directory layout is for TESTS and short-lived
-    * / offline-compacted single-writer tables — it accumulates one
-    * `batch=N` dir per micro-batch (~17k/day at the 5-second trigger)
-    * between OFFLINE [[optimizeRollup]] calls, and folding requires the
-    * stream stopped. The DEPLOYMENT posture for an always-on table is
-    * [[startRollupMVManaged]]: manifest-committed appends with snapshot
-    * isolation, ONLINE [[optimizeRollupOnline]] folding concurrent with
-    * the stream, and vacuum-bounded file counts. The plain reader
-    * ([[readRollup]]) stays for migration of existing tables. */
-  def startRollupMV(stream: DataFrame, outPath: String, checkpoint: String,
-      trigger: Trigger = DefaultTrigger): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // replay guard vs OPTIMIZE (r8 review): per-batch overwrite makes
-        // a replay idempotent only while the old batch=<id> dir still
-        // exists — a fold run between an unclean stop and the restart
-        // absorbs the dir into batch=-1, and the replayed write would
-        // re-add rows the fold already counted. optimizeRollup records
-        // the highest folded id; replays at or below it are no-ops.
-        if (id > maxFoldedBatch(outPath))
-          rollupPartials(batch).write
-            .mode("overwrite")
-            .partitionBy("event_date")
-            .parquet(s"$outPath/batch=$id")
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-
-  private val maxFoldedName = "_graft_max_folded_batch"
-
-  /** Highest batch id any [[optimizeRollup]] fold has absorbed; -1 if
-    * none. Written atomically by [[recoverOptimize]]'s completion step. */
-  private def maxFoldedBatch(path: String): Long = {
-    val f = java.nio.file.Paths.get(path, maxFoldedName)
-    if (!java.nio.file.Files.isRegularFile(f)) -1L
-    else
-      try new String(java.nio.file.Files.readAllBytes(f), "UTF-8").trim.toLong
-      catch {
-        case _: NumberFormatException =>
-          // fail loudly: silently treating a corrupt marker as -1 would
-          // disarm the replay guard and double-count (same stance as the
-          // manifest #maxBatch header)
-          throw new IllegalStateException(
-            s"corrupt $maxFoldedName in $path — restore or remove it " +
-              "(removing re-arms replays only if no fold ran since the " +
-              "last checkpoint commit)")
-      }
-  }
-
-  /** Query-time re-merge of the rollup — reading `flows_5m` before OPTIMIZE
-    * (`README.md:164-183`): equal keys summed at read, and the Nested
-    * ETypeMap merged ELEMENT-WISE by etype (the SummingMergeTree Nested
-    * merge, `README.md:180-183`): explode → per-etype sum → re-collect. */
-  def readRollup(spark: SparkSession, path: String): DataFrame =
-    mergeRollup(readRollupParts(spark, path))
-
-  /** Read the rollup table's partial rows handling BOTH layouts: per-batch
-    * `batch=N/event_date=…` dirs (the idempotent writer) and legacy
-    * top-level `event_date=…` dirs (pre-batch tables). A MIXED table —
-    * legacy dirs plus batch dirs, which arises when a pre-existing table's
-    * stream restarts on this code with its old checkpoint — has leaf files
-    * at different depths; one partition-discovery pass fails with
-    * "conflicting directory structures" (r7 advisory), so the two groups
-    * are read separately and unioned by name. The per-batch idempotency
-    * key `batch` is dropped either way. */
-  private def readRollupParts(spark: SparkSession, path: String): DataFrame = {
-    val root = java.nio.file.Paths.get(path)
-    val children: List[String] =
-      if (!java.nio.file.Files.isDirectory(root)) Nil
-      else {
-        val s = java.nio.file.Files.list(root)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.map(_.getFileName.toString).toList
-        } finally s.close()
-      }
-    val batchDirs = children.filter(_.startsWith("batch="))
-    val dateDirs = children.filter(_.startsWith("event_date="))
-    if (batchDirs.isEmpty && dateDirs.isEmpty)
-      // a clear error beats the opaque 'unable to infer schema' Spark
-      // throws for the legitimate read-before-first-commit case (r8
-      // review); the managed variant composes as empty via emptySchema
-      throw new IllegalArgumentException(
-        s"empty rollup table: $path (no batch=/event_date= dirs yet — the " +
-          "stream has not committed a batch, or the path is wrong)")
-    if (batchDirs.nonEmpty && dateDirs.nonEmpty) {
-      val batched = spark.read.option("basePath", path)
-        .parquet(batchDirs.map(d => s"$path/$d"): _*).drop("batch")
-      val legacy = spark.read.option("basePath", path)
-        .parquet(dateDirs.map(d => s"$path/$d"): _*)
-      batched.unionByName(legacy, allowMissingColumns = true)
-    } else spark.read.parquet(path).drop("batch")
-  }
-
-  /** The SummingMergeTree fold itself, over any partial-rows relation. */
+  /** The SummingMergeTree fold itself, over any partial-rows relation:
+    * equal keys summed, and the Nested ETypeMap merged ELEMENT-WISE by
+    * etype (the SummingMergeTree Nested merge, `README.md:180-183`):
+    * explode → per-etype sum → re-collect. */
   def mergeRollup(parts: DataFrame): DataFrame =
     parts
       .select(col("event_date"), col("timeslot"), col("srcAS"), col("dstAS"),
@@ -265,6 +168,101 @@ object FlowStreams {
           .as("etype_map"),
         sum("b").as("sum_bytes"), sum("p").as("sum_packets"), sum("c").as("flow_count"))
 
+  // ------------------------------------------------- one MV mechanism
+
+  /** One manifest-committed mergeable MV — the reference's cascade is one
+    * mechanism (an MV writes partial parts and MergeTree merges them in the
+    * background, `create.sh:64-110`, `README.md:164-172`), and so is this:
+    *  - `partials`: one micro-batch → its partial rows, so the stream
+    *    holds ZERO Spark state;
+    *  - `fold`: partial rows → partial rows, one per key — the background
+    *    merge. Readers finalize over folded and unfolded rows alike;
+    *  - `partitionCol`: the table's partition directory column. Keys never
+    *    span partitions, so a per-partition fold is exact;
+    *  - `statsCol`: the LONG column whose per-file (min,max) the manifest
+    *    records, so range reads skip files at the manifest
+    *    ([[ManifestTable.readRangePruned]]).
+    * Every MV appends, streams and folds through the three bodies below;
+    * its finalizing reads are the `read*Managed` functions. The six MVs
+    * are the values below; no caller builds another. */
+  final class MergeableMV private[FlowStreams] (val partials: DataFrame => DataFrame,
+      val fold: DataFrame => DataFrame, val partitionCol: Option[String],
+      val statsCol: Option[String]) {
+
+    /** Commit one micro-batch's partials as one manifest version.
+      * Exactly-once: Spark's checkpoint replays a batch at most once
+      * uncommitted, and the manifest's batch-id guard makes the replayed
+      * commit a no-op. */
+    def append(batch: DataFrame, table: String, id: Long): Unit =
+      ManifestTable.append(partials(batch), table, partitionCol, id, statsCol)
+
+    /** Run the MV always-on: one [[append]] per micro-batch. */
+    def start(stream: DataFrame, table: String, checkpoint: String,
+        trigger: Trigger = DefaultTrigger): StreamingQuery =
+      startBatches(stream, checkpoint, trigger)(append(_, table, _))
+
+    /** ONLINE `OPTIMIZE TABLE`: fold the multi-file partition groups of the
+      * current snapshot and swap them out in one manifest commit. Safe with
+      * the running stream: batches appended after the snapshot are not in
+      * the replaced set and survive; readers at every instant see exactly
+      * one committed snapshot; the folded output is durable parquet before
+      * the swap. Returns false if a concurrent compaction won the swap race
+      * (this one's snapshot went stale and it aborted cleanly).
+      *
+      * A one-file partition holds one task's partials, already one row per
+      * key (each partials plan aggregates within its task, and a write task
+      * puts one file in each partition directory), so only multi-file
+      * partitions are read and folded; an unpartitioned table is one group. */
+    def optimizeOnline(spark: SparkSession, table: String): Boolean = {
+      val groups = ManifestTable.filesByPartition(ManifestTable.snapshot(table)._2)
+        .filter(_._2.size > 1)
+      val unfolded = groups.values.flatten.toSeq
+      if (unfolded.isEmpty) return true
+      // one output file per folded group: the fold's final groupBy would
+      // otherwise leave ~shuffle.partitions tasks each writing a file into
+      // every date dir it holds rows for, the folded partitions would come
+      // back multi-file, and every later call would refold them forever
+      val folded = fold(ManifestTable.readSelected(spark, table, unfolded))
+      val bounded = partitionCol match {
+        case Some(c) => folded.repartition(math.max(1, groups.size), col(c))
+        case None => folded.coalesce(1)
+      }
+      ManifestTable.swap(bounded, table, partitionCol, unfolded, statsCol)
+    }
+  }
+
+  /** The 5-minute rollup MV (`flows_5m`, `create.sh:70-110`): per-batch
+    * [[rollupPartials]], folded by [[mergeRollup]]. Per-file timeslot
+    * bounds let dashboard range reads skip partial files the way the raw
+    * table skips on timeReceived. */
+  val Rollup: MergeableMV =
+    new MergeableMV(rollupPartials, mergeRollup, Some("event_date"), Some("timeslot"))
+
+  /** [[Rollup]]'s always-on stream. */
+  def startRollupMVManaged(stream: DataFrame, table: String, checkpoint: String,
+      trigger: Trigger = DefaultTrigger): StreamingQuery =
+    Rollup.start(stream, table, checkpoint, trigger)
+
+  /** [[Rollup]]'s online `OPTIMIZE TABLE flows_5m` (`README.md:168-172`). */
+  def optimizeRollupOnline(spark: SparkSession, table: String): Boolean =
+    Rollup.optimizeOnline(spark, table)
+
+  /** Read-time re-merge of the managed rollup (pre-OPTIMIZE semantics). */
+  def readRollupManaged(spark: SparkSession, table: String): DataFrame =
+    mergeRollup(ManifestTable.read(spark, table))
+
+  /** Timeslot-range read of the managed rollup: manifest-level file
+    * skipping on recorded per-file (min,max) timeslot, residual predicate,
+    * then the SummingMergeTree re-merge over only the surviving partials —
+    * the dashboard's "last N hours" panel against an always-on rollup
+    * without touching cold files. `[fromSlot, untilSlot)` in epoch
+    * seconds, aligned like `rollupPartials`' 300 s slots. */
+  def readRollupManagedRange(spark: SparkSession, table: String,
+      fromSlot: Long, untilSlot: Long): DataFrame =
+    mergeRollup(
+      ManifestTable.readRangePruned(spark, table, "timeslot", fromSlot, untilSlot)
+        .filter(col("timeslot") >= fromSlot && col("timeslot") < untilSlot))
+
   /** AS→AS TRAFFIC MATRIX answered FROM the rollup MV — the batch
     * [[graft.flow.FlowQueries.trafficMatrix]] panel served by the
     * always-on rollup with ZERO new streams: the rollup's (srcAS, dstAS)
@@ -276,15 +274,8 @@ object FlowStreams {
     * 1-row total shape as the batch query. Cost per refresh: an
     * aggregate over the rollup relation (timeslot-grain, already
     * reduced), not the raw stream. */
-  def readTrafficMatrix(spark: SparkSession, path: String): DataFrame =
-    trafficMatrixOf(readRollupParts(spark, path))
-
-  /** [[readTrafficMatrix]] over a managed rollup table. */
-  def readTrafficMatrixManaged(spark: SparkSession, table: String): DataFrame =
-    trafficMatrixOf(ManifestTable.read(spark, table))
-
-  private def trafficMatrixOf(parts: DataFrame): DataFrame = {
-    val cells = parts
+  def readTrafficMatrixManaged(spark: SparkSession, table: String): DataFrame = {
+    val cells = ManifestTable.read(spark, table)
       .groupBy(col("srcAS").as("src_as"), col("dstAS").as("dst_as"))
       .agg(sum("sum_bytes").as("sum_bytes"), sum("flow_count").as("n_flows"))
       .transform(graft.Storage.materializeOnce)
@@ -298,65 +289,44 @@ object FlowStreams {
 
   // ------------------------------------------------ top-talkers sketch MV
 
+  /** SpaceSaving capacity of every top-talkers partial, fold and read. */
+  val TopTalkersCapacity = 256
+
+  /** How many ranked items a top-talkers read returns per group. */
+  val TopTalkersK = 10
+
   /** Continuous TOP-TALKERS MV — the streaming twin of the batch
     * [[graft.flow.FlowQueries.heavyHitters]] screen (the viz-ch top-N
     * panels' unbounded-domain form): per micro-batch, ONE mergeable
     * SpaceSaving sketch per (event_date, proto) over the source address
     * ([[graft.functions.HeavyHittersSketch]]), stored as a binary column
     * exactly like the SummingMergeTree stores partial sums. State never
-    * grows with address cardinality: each partial is ≤ `capacity` entries,
-    * the batch's shuffle carries one blob per partition per group, and the
-    * stream itself holds ZERO Spark state (same per-batch-partials posture
-    * as [[rollupPartials]]). Read-time [[readTopTalkers]] folds the blobs
-    * and finalizes — the mergeable-summaries bounds survive the
-    * cross-batch merge tree, so the MV agrees with a batch sketch over
-    * the union (exactly so below eviction). */
-  def topTalkersPartials(df: DataFrame, capacity: Int = 256): DataFrame =
-    projectRaw(df)
+    * grows with address cardinality: each partial is ≤ capacity entries
+    * and the batch's shuffle carries one blob per partition per group.
+    * [[readTopTalkersManaged]] folds the blobs and finalizes — the
+    * mergeable-summaries bounds survive the cross-batch merge tree, so the
+    * MV agrees with a batch sketch over the union (exactly so below
+    * eviction). */
+  val TopTalkers: MergeableMV = new MergeableMV(
+    partials = df => projectRaw(df)
       .groupBy(col("event_date"), col("proto"))
-      .agg(graft.functions.HeavyHitters.heavyHittersSketch(
-          graft.GraftFunctions.reinterpret_uint32(col("srcAddr")), capacity).as("hh_sketch"),
-        count(lit(1)).as("flow_count"))
-
-  /** Start the top-talkers MV: same idempotent `batch=<id>` overwrite
-    * layout as [[startRollupMV]] (a checkpoint replay rewrites its own
-    * directory; read-time merge is insensitive to partial multiplicity
-    * only if each batch appears ONCE). */
-  def startTopTalkersMV(stream: DataFrame, outPath: String, checkpoint: String,
-      capacity: Int = 256, trigger: Trigger = DefaultTrigger): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // replay guard (same as startRollupMV): a checkpoint replay of a
-        // batch an OPTIMIZE fold already absorbed must be a no-op
-        if (id > maxFoldedBatch(outPath))
-          topTalkersPartials(batch, capacity).write
-            .mode("overwrite")
-            .partitionBy("event_date")
-            .parquet(s"$outPath/batch=$id")
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+      .agg(HeavyHitters.heavyHittersSketch(
+          reinterpret_uint32(col("srcAddr")), TopTalkersCapacity).as("hh_sketch"),
+        count(lit(1)).as("flow_count")),
+    fold = _.groupBy("event_date", "proto")
+      .agg(HeavyHitters.heavyHittersFold(col("hh_sketch"), TopTalkersCapacity).as("hh_sketch"),
+        sum("flow_count").as("flow_count")),
+    partitionCol = Some("event_date"), statsCol = None)
 
   /** Read-time finalize of the top-talkers MV: fold every batch's sketch
     * per (event_date, proto) ([[graft.functions.HeavyHittersMerge]]) and
     * explode the top-k with the per-item bounds. One exchange over blobs
     * (≤ capacity entries each), never the address stream. */
-  def readTopTalkers(spark: SparkSession, path: String, capacity: Int = 256,
-      k: Int = 10): DataFrame =
-    finalizeTopTalkers(plainPartials(spark, path), capacity, k)
-
-  /** Managed-table twin of [[readTopTalkers]]. */
-  def readTopTalkersManaged(spark: SparkSession, table: String,
-      capacity: Int = 256, k: Int = 10): DataFrame =
-    finalizeTopTalkers(ManifestTable.read(spark, table), capacity, k)
-
-  private def finalizeTopTalkers(partials: DataFrame, capacity: Int,
-      k: Int): DataFrame =
-    partials
+  def readTopTalkersManaged(spark: SparkSession, table: String): DataFrame =
+    ManifestTable.read(spark, table)
       .groupBy("event_date", "proto")
-      .agg(graft.functions.HeavyHitters
-        .heavyHittersMerge(col("hh_sketch"), capacity, k).as("hh"),
+      .agg(HeavyHitters.heavyHittersMerge(col("hh_sketch"), TopTalkersCapacity, TopTalkersK)
+          .as("hh"),
         sum("flow_count").as("flow_count"))
       .select(col("event_date"), col("proto"), col("flow_count"), posexplode(col("hh")))
       .select(col("event_date"), col("proto"),
@@ -369,60 +339,40 @@ object FlowStreams {
 
   // --------------------------------------------- bytes-quantiles KLL MV
 
+  /** KLL accuracy parameter of every bytes-quantiles partial, fold and read. */
+  val QuantileK = 200
+
+  /** The quantiles a bytes-quantiles read unpacks, as columns p50/p90/p99. */
+  val QuantileProbs: Seq[Double] = Seq(0.5, 0.9, 0.99)
+
   /** Continuous BYTE-SIZE DISTRIBUTION MV — the streaming twin of
     * [[graft.flow.FlowQueries.bytesQuantiles]]'s per-protocol panel, the
     * AggregatingMergeTree `quantileState` pattern: per micro-batch, one
     * mergeable KLL sketch per (event_date, proto) over the flow's byte
     * count ([[graft.functions.QuantileSketchAgg]]), stored as a binary
     * column. Each partial is O(k log n/k) bytes (~KBs at k=200) no matter
-    * how many flows the batch carried; stream state is ZERO. KLL's rank
-    * error survives arbitrary merge trees, so read-time
-    * [[readBytesQuantiles]] is as accurate as one sketch over the union. */
-  def bytesQuantilesPartials(df: DataFrame, k: Int = 200): DataFrame =
-    projectRaw(df)
+    * how many flows the batch carried. KLL's rank error survives
+    * arbitrary merge trees, so [[readBytesQuantilesManaged]] is as
+    * accurate as one sketch over the union. */
+  val BytesQuantiles: MergeableMV = new MergeableMV(
+    partials = df => projectRaw(df)
       .groupBy(col("event_date"), col("proto"))
-      .agg(graft.functions.QuantileSketch
-          .quantileSketch(col("bytes").cast("double"), k).as("q_sketch"),
-        count(lit(1)).as("flow_count"))
-
-  /** Start the bytes-quantiles MV: same idempotent `batch=<id>` overwrite
-    * layout as [[startTopTalkersMV]]. */
-  def startBytesQuantilesMV(stream: DataFrame, outPath: String, checkpoint: String,
-      k: Int = 200, trigger: Trigger = DefaultTrigger): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // replay guard (same as startRollupMV): a checkpoint replay of a
-        // batch an OPTIMIZE fold already absorbed must be a no-op
-        if (id > maxFoldedBatch(outPath))
-          bytesQuantilesPartials(batch, k).write
-            .mode("overwrite")
-            .partitionBy("event_date")
-            .parquet(s"$outPath/batch=$id")
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+      .agg(QuantileSketch.quantileSketch(col("bytes").cast("double"), QuantileK).as("q_sketch"),
+        count(lit(1)).as("flow_count")),
+    fold = _.groupBy("event_date", "proto")
+      .agg(QuantileSketch.quantileFold(col("q_sketch"), QuantileK).as("q_sketch"),
+        sum("flow_count").as("flow_count")),
+    partitionCol = Some("event_date"), statsCol = None)
 
   /** Read-time finalize — `quantileMerge` the per-batch sketches and
-    * unpack the requested probs as columns (p50/p90/p99 by default). One
-    * exchange over fixed-size blobs, never the byte-count stream. */
-  def readBytesQuantiles(spark: SparkSession, path: String, k: Int = 200,
-      probs: Seq[Double] = Seq(0.5, 0.9, 0.99)): DataFrame =
-    finalizeBytesQuantiles(plainPartials(spark, path), k, probs)
-
-  /** Managed-table twin of [[readBytesQuantiles]]. */
-  def readBytesQuantilesManaged(spark: SparkSession, table: String, k: Int = 200,
-      probs: Seq[Double] = Seq(0.5, 0.9, 0.99)): DataFrame =
-    finalizeBytesQuantiles(ManifestTable.read(spark, table), k, probs)
-
-  private def finalizeBytesQuantiles(partials: DataFrame, k: Int,
-      probs: Seq[Double]): DataFrame = {
-    val folded = partials
+    * unpack [[QuantileProbs]] as columns. One exchange over fixed-size
+    * blobs, never the byte-count stream. */
+  def readBytesQuantilesManaged(spark: SparkSession, table: String): DataFrame = {
+    val folded = ManifestTable.read(spark, table)
       .groupBy("event_date", "proto")
-      .agg(graft.functions.QuantileSketch
-          .quantileMerge(col("q_sketch"), k, probs).as("qs"),
+      .agg(QuantileSketch.quantileMerge(col("q_sketch"), QuantileK, QuantileProbs).as("qs"),
         sum("flow_count").as("flow_count"))
-    val qCols = probs.zipWithIndex.map { case (p, i) =>
+    val qCols = QuantileProbs.zipWithIndex.map { case (p, i) =>
       element_at(col("qs"), i + 1).as(s"p${(p * 100).round}")
     }
     folded.select(col("event_date") +: col("proto") +: qCols :+ col("flow_count"): _*)
@@ -435,55 +385,49 @@ object FlowStreams {
     * [[graft.flow.FlowQueries.anomalyZscore]]'s DDoS/volumetric-spike
     * panel. Per micro-batch: exact integer partial sums per
     * (event_date, proto, minute) — a map-combined batch aggregate at full
-    * parallelism, stream state ZERO (the [[rollupPartials]] posture).
-    * Detection happens at READ time: [[readAnomalySeries]] folds the
-    * partials to the exact minute series (integer sums fold exactly under
-    * any batch split — the SummingMergeTree invariant) and applies the
-    * SHARED z-scoring core, so the MV path is definitionally the batch
-    * semantics, late data included (a late flow's partial folds into its
-    * minute on the next read, ClickHouse late-merge style).
+    * parallelism, stream state ZERO. Detection happens at READ time:
+    * [[readAnomalySeriesManaged]] folds the partials to the exact minute
+    * series (integer sums fold exactly under any batch split — the
+    * SummingMergeTree invariant) and applies the SHARED z-scoring core, so
+    * the MV path is definitionally the batch semantics, late data included
+    * (a late flow's partial folds into its minute on the next read,
+    * ClickHouse late-merge style). Per-file minute bounds let range reads
+    * skip files.
     *
     * Why not a stateful per-record detector: the volumetric alarm is keyed
     * by protocol — a `flatMapGroupsWithState` keyed that coarsely funnels
     * the whole decoded stream through |protos| tasks, while this shape
     * keeps the heavy reduction embarrassingly parallel and the scored
     * relation is minutes × protos (tiny at any corpus size). The alert
-    * scheduler polls [[readAnomalyAlarms]] — the one-row-per-spike cut —
-    * on its own cadence, the reference's dashboard-pull model
+    * scheduler polls [[readAnomalyAlarmsManaged]] — the one-row-per-spike
+    * cut — on its own cadence, the reference's dashboard-pull model
     * (`viz-ch.json` panels poll; the pipeline itself never pushes). For
     * push-style per-window alerting with bounded keyed state, the pattern
     * is [[FlowScanAlarm]]. */
-  def anomalyPartials(df: DataFrame): DataFrame =
-    projectRaw(df)
+  val Anomaly: MergeableMV = new MergeableMV(
+    partials = df => projectRaw(df)
       .groupBy(col("event_date"), col("proto"),
         ((col("timeReceived") / 60).cast("long") * 60).as("minute"))
       .agg(sum(col("bytes") * col("samplingRate")).as("sampled_bytes"),
-        count(lit(1)).as("flow_count"))
+        count(lit(1)).as("flow_count")),
+    fold = _.groupBy("event_date", "proto", "minute")
+      .agg(sum("sampled_bytes").as("sampled_bytes"), sum("flow_count").as("flow_count")),
+    partitionCol = Some("event_date"), statsCol = Some("minute"))
 
-  /** Start the anomaly MV: same idempotent `batch=<id>` overwrite layout
-    * as [[startTopTalkersMV]]. */
-  def startAnomalyMV(stream: DataFrame, outPath: String, checkpoint: String,
-      trigger: Trigger = DefaultTrigger): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (id > maxFoldedBatch(outPath))
-          anomalyPartials(batch).write
-            .mode("overwrite")
-            .partitionBy("event_date")
-            .parquet(s"$outPath/batch=$id")
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+  /** The exact (proto, minute, sampled_bytes) series the anomaly MV's
+    * partials fold to — the input both scoring cores take. */
+  private def anomalyMinutes(spark: SparkSession, table: String): DataFrame =
+    ManifestTable.read(spark, table).groupBy("proto", "minute")
+      .agg(sum("sampled_bytes").as("sampled_bytes"))
 
   /** Read-time scoring: fold the partial minute sums exactly, then apply
     * the batch z-score core. Full series (every minute, scored). */
-  def readAnomalySeries(spark: SparkSession, path: String): DataFrame =
-    scoreAnomalies(plainPartials(spark, path))
+  def readAnomalySeriesManaged(spark: SparkSession, table: String): DataFrame =
+    graft.flow.FlowQueries.zscoreOverMinutes(anomalyMinutes(spark, table))
 
   /** The alarm cut — only the |z| ≥ 3 minutes, newest first. */
-  def readAnomalyAlarms(spark: SparkSession, path: String): DataFrame =
-    readAnomalySeries(spark, path)
+  def readAnomalyAlarmsManaged(spark: SparkSession, table: String): DataFrame =
+    readAnomalySeriesManaged(spark, table)
       .filter(col("is_anomaly"))
       .orderBy(desc("minute"), asc("proto"))
 
@@ -492,21 +436,13 @@ object FlowStreams {
     * one MV serves both estimators, because detection lives entirely at
     * read time (the zero-state partials posture pays off exactly here:
     * adding an estimator costs a read path, never a second stream). */
-  def readAnomalyMadSeries(spark: SparkSession, path: String): DataFrame =
-    graft.flow.FlowQueries.madOverMinutes(
-      plainPartials(spark, path).groupBy("proto", "minute")
-        .agg(sum("sampled_bytes").as("sampled_bytes")))
-
-  /** Managed-table twins ([[ManifestTable]] snapshot reads). */
-  def readAnomalySeriesManaged(spark: SparkSession, table: String): DataFrame =
-    scoreAnomalies(ManifestTable.read(spark, table))
-
-  private def scoreAnomalies(partials: DataFrame): DataFrame =
-    graft.flow.FlowQueries.zscoreOverMinutes(
-      partials.groupBy("proto", "minute")
-        .agg(sum("sampled_bytes").as("sampled_bytes")))
+  def readAnomalyMadSeriesManaged(spark: SparkSession, table: String): DataFrame =
+    graft.flow.FlowQueries.madOverMinutes(anomalyMinutes(spark, table))
 
   // ------------------------------------------------ unique-sources HLL MV
+
+  /** HLL register-count exponent of every unique-sources partial. */
+  val HllLgConfigK = 12
 
   /** Continuous UNIQUE-SOURCES MV — the streaming twin of
     * [[graft.flow.FlowQueries.uniqueSrc]]'s hourly panel, built the way
@@ -517,52 +453,77 @@ object FlowStreams {
     * fixed-size sketch per partition per bucket, never the address
     * stream), stored as a binary column. HLL union is register-wise max —
     * associative, commutative, idempotent — so ANY micro-batch split of
-    * the stream folds to byte-identical sketches at read time. Stream
-    * state is ZERO (per-batch partials, same posture as
-    * [[rollupPartials]] / [[topTalkersPartials]]). */
-  def uniqueSrcPartials(df: DataFrame, lgConfigK: Int = 12): DataFrame =
-    df.groupBy(((col("timeReceived") / 3600).cast("long") * 3600).as("bucket"))
-      .agg(hll_sketch_agg(
-          graft.GraftFunctions.reinterpret_uint32(col("srcAddr")), lgConfigK)
-          .as("hll_sketch"),
-        count(lit(1)).as("flow_count"))
-
-  /** Start the unique-sources MV: same idempotent `batch=<id>` overwrite
-    * layout as [[startTopTalkersMV]]. */
-  def startUniqueSrcMV(stream: DataFrame, outPath: String, checkpoint: String,
-      lgConfigK: Int = 12, trigger: Trigger = DefaultTrigger): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // replay guard (same as startRollupMV): a checkpoint replay of a
-        // batch an OPTIMIZE fold already absorbed must be a no-op
-        if (id > maxFoldedBatch(outPath))
-          uniqueSrcPartials(batch, lgConfigK).write
-            .mode("overwrite")
-            .parquet(s"$outPath/batch=$id")
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    * the stream folds to byte-identical sketches at read time. One
+    * unpartitioned group, with per-file bucket bounds. */
+  val UniqueSrc: MergeableMV = new MergeableMV(
+    partials = _.groupBy(((col("timeReceived") / 3600).cast("long") * 3600).as("bucket"))
+      .agg(hll_sketch_agg(reinterpret_uint32(col("srcAddr")), HllLgConfigK).as("hll_sketch"),
+        count(lit(1)).as("flow_count")),
+    fold = _.groupBy("bucket")
+      .agg(hll_union_agg(col("hll_sketch"), false).as("hll_sketch"),
+        sum("flow_count").as("flow_count")),
+    partitionCol = None, statsCol = Some("bucket"))
 
   /** Read-time finalize: union every batch's sketch per bucket
     * (`hll_union_agg`) and estimate — the `uniqMerge` read. One exchange
     * over fixed-size sketch blobs. `unique_src_approx` carries HLL's
     * standard error (~1.6% at lgConfigK=12); the panel's flow_count sum
     * stays exact. */
-  def readUniqueSrc(spark: SparkSession, path: String): DataFrame =
-    finalizeUniqueSrc(plainPartials(spark, path))
-
-  /** Managed-table twin of [[readUniqueSrc]]. */
   def readUniqueSrcManaged(spark: SparkSession, table: String): DataFrame =
-    finalizeUniqueSrc(ManifestTable.read(spark, table))
-
-  private def finalizeUniqueSrc(partials: DataFrame): DataFrame =
-    partials
+    ManifestTable.read(spark, table)
       .groupBy("bucket")
       .agg(hll_sketch_estimate(hll_union_agg(col("hll_sketch"), false))
           .as("unique_src_approx"),
         sum("flow_count").as("flow_count"))
       .orderBy("bucket")
+
+  // -------------------------------------------- unique-sources THETA MV
+
+  /** Theta nominal-entries exponent of every theta partial, fold and read. */
+  val ThetaLgK = 12
+
+  /** Continuous unique-sources MV in THETA form — same per-batch-partials
+    * posture as [[UniqueSrc]], but the stored sketch supports SET
+    * OPERATIONS at read time: [[readUniqueSrcOverlapManaged]] intersects
+    * consecutive days' folded sketches to answer "how many of yesterday's
+    * talkers came back today?" — the question HLL registers cannot
+    * answer. Daily granularity (the overlap panel's unit); only
+    * fixed-size blobs cross any exchange. One unpartitioned group, with
+    * per-file day bounds. */
+  val UniqueSrcTheta: MergeableMV = new MergeableMV(
+    partials = _.groupBy(((col("timeReceived") / 86400).cast("long") * 86400).as("day"))
+      .agg(ThetaSketch.thetaSketch(reinterpret_uint32(col("srcAddr")), ThetaLgK)
+          .as("theta_sketch"),
+        count(lit(1)).as("flow_count")),
+    fold = _.groupBy("day")
+      .agg(ThetaSketch.thetaFold(col("theta_sketch"), ThetaLgK).as("theta_sketch"),
+        sum("flow_count").as("flow_count")),
+    partitionCol = None, statsCol = Some("day"))
+
+  /** Read-time finalize with a SET OP: fold each day's per-batch sketches
+    * (`theta_fold`), then pair consecutive days and intersect — same shape
+    * as [[graft.flow.FlowQueries.uniqueSrcOverlap]] but served from the MV
+    * without touching the raw stream. `strict = false` by default: an MV
+    * at scale lives in the estimation regime. */
+  def readUniqueSrcOverlapManaged(spark: SparkSession, table: String,
+      strict: Boolean = false): DataFrame = {
+    val daily = UniqueSrcTheta.fold(ManifestTable.read(spark, table))
+      .withColumnRenamed("theta_sketch", "sk")
+      // no-op filter pair — see FlowQueries.uniqueSrcOverlap: aligns the
+      // two self-join subtrees so the day-grain exchange plans once
+      .filter(col("day").isNotNull && (col("day") - 86400L).isNotNull)
+    // broadcast self-join pairing instead of an unpartitioned lead
+    // window — same rewrite (and the same row-set identity argument) as
+    // FlowQueries.uniqueSrcOverlap
+    val nxt = daily.select((col("day") - 86400).as("day"), col("sk").as("sk_next"))
+    daily.join(broadcast(nxt), Seq("day"))
+      .select(col("day"), (col("day") + 86400).as("next_day"),
+        ThetaSketch.thetaEstimate(col("sk"), strict).as("unique_day"),
+        ThetaSketch.thetaEstimate(col("sk_next"), strict).as("unique_next"),
+        ThetaSketch.thetaIntersectCount(col("sk"), col("sk_next"), strict)
+          .as("overlap"))
+      .orderBy("day")
+  }
 
   // ------------------------------------------- bidirectional stitching
 
@@ -611,469 +572,81 @@ object FlowStreams {
         col("fwd_ts"), col("rev_ts"), col("fwd_bytes"), col("rev_bytes"))
   }
 
-  // -------------------------------------------- unique-sources THETA MV
+  // ------------------------------------------------------------ raw MV
 
-  /** Continuous unique-sources MV in THETA form — same per-batch-partials
-    * posture as [[uniqueSrcPartials]], but the stored sketch supports SET
-    * OPERATIONS at read time: [[readUniqueSrcOverlap]] intersects
-    * consecutive days' folded sketches to answer "how many of yesterday's
-    * talkers came back today?" — the question HLL registers cannot
-    * answer. Daily granularity (the overlap panel's unit); only
-    * fixed-size blobs cross any exchange; stream state is ZERO. */
-  def uniqueSrcThetaPartials(df: DataFrame, lgK: Int = 12): DataFrame =
-    df.groupBy(((col("timeReceived") / 86400).cast("long") * 86400).as("day"))
-      .agg(graft.functions.ThetaSketch.thetaSketch(
-          graft.GraftFunctions.reinterpret_uint32(col("srcAddr")), lgK)
-          .as("theta_sketch"),
-        count(lit(1)).as("flow_count"))
+  /** The raw MV's one append: [[projectRaw]] committed as one manifest
+    * version, partitioned by event_date — the reference's `PARTITION BY
+    * Date` (`create.sh:60-62`) — with each file's (min,max) timeReceived
+    * recorded, so time-range reads skip files at the manifest
+    * ([[readRawManagedRange]]), no footer reads. Exactly-once by batch id,
+    * as [[MergeableMV.append]]. */
+  def appendRaw(batch: DataFrame, table: String, id: Long): Unit =
+    ManifestTable.append(projectRaw(batch), table, Some("event_date"), id,
+      statsCol = Some("timeReceived"))
 
-  /** Start the theta MV: same idempotent `batch=<id>` overwrite layout as
-    * [[startTopTalkersMV]]. */
-  def startUniqueSrcThetaMV(stream: DataFrame, outPath: String, checkpoint: String,
-      lgK: Int = 12, trigger: Trigger = DefaultTrigger): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // replay guard (same as startRollupMV): a checkpoint replay of a
-        // batch an OPTIMIZE fold already absorbed must be a no-op
-        if (id > maxFoldedBatch(outPath))
-          uniqueSrcThetaPartials(batch, lgK).write
-            .mode("overwrite")
-            .parquet(s"$outPath/batch=$id")
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-
-  /** Read-time finalize with a SET OP: fold each day's per-batch sketches
-    * (`theta_union`), then pair consecutive days with a lead window over
-    * the one-row-per-day relation and intersect — same shape as
-    * [[graft.flow.FlowQueries.uniqueSrcOverlap]] but served from the MV
-    * without touching the raw stream. `strict = false` by default: an MV
-    * at scale lives in the estimation regime. */
-  def readUniqueSrcOverlap(spark: SparkSession, path: String, lgK: Int = 12,
-      strict: Boolean = false): DataFrame =
-    finalizeUniqueSrcOverlap(plainPartials(spark, path), lgK, strict)
-
-  /** Managed-table twin of [[readUniqueSrcOverlap]]. */
-  def readUniqueSrcOverlapManaged(spark: SparkSession, table: String,
-      lgK: Int = 12, strict: Boolean = false): DataFrame =
-    finalizeUniqueSrcOverlap(ManifestTable.read(spark, table), lgK, strict)
-
-  private def finalizeUniqueSrcOverlap(partials: DataFrame, lgK: Int,
-      strict: Boolean): DataFrame = {
-    import graft.functions.ThetaSketch
-    val daily = partials
-      .groupBy("day")
-      .agg(ThetaSketch.thetaUnion(col("theta_sketch"), lgK).as("sk"),
-        sum("flow_count").as("flow_count"))
-      // no-op filter pair — see FlowQueries.uniqueSrcOverlap: aligns the
-      // two self-join subtrees so the day-grain exchange plans once
-      .filter(col("day").isNotNull && (col("day") - 86400L).isNotNull)
-    // r19 (r18 verdict #6): broadcast self-join pairing instead of an
-    // unpartitioned lead window — same rewrite (and the same row-set
-    // identity argument) as FlowQueries.uniqueSrcOverlap
-    val nxt = daily.select((col("day") - 86400).as("day"), col("sk").as("sk_next"))
-    daily.join(broadcast(nxt), Seq("day"))
-      .select(col("day"), (col("day") + 86400).as("next_day"),
-        ThetaSketch.thetaEstimate(col("sk"), strict).as("unique_day"),
-        ThetaSketch.thetaEstimate(col("sk_next"), strict).as("unique_next"),
-        ThetaSketch.thetaIntersectCount(col("sk"), col("sk_next"), strict)
-          .as("overlap"))
-      .orderBy("day")
-  }
-
-  /** `OPTIMIZE TABLE flows_5m` equivalent (`README.md:168-172`): fold the
-    * table to one row per key. Dynamic partition overwrite rewrites only the
-    * partitions present in the folded result — at scale this is run per
-    * recent Date partition, old partitions stay untouched.
-    *
-    * Durability: the fold is first written to a STAGING directory as real
-    * parquet, and the overwrite of `path` reads from that staged copy —
-    * never from in-memory blocks whose lineage points at the files being
-    * deleted (the r2 localCheckpoint protocol lost the table if an executor
-    * died mid-OPTIMIZE). For compaction concurrent with a RUNNING stream,
-    * use the manifest-committed table instead ([[optimizeRollupOnline]]). */
-  def optimizeRollup(spark: SparkSession, path: String): Unit =
-    optimizeFold(spark, path, readRollup(spark, path), Some("event_date"))
-
-  /** MV compaction for the SKETCH MVs — the AggregatingMergeTree "merge
-    * parts" step: fold every `batch=N` directory's per-group partials
-    * into ONE partial per group (blob-merge aggregates, counts summed)
-    * under the same crash-safe staging/marker/replay-guard protocol as
-    * [[optimizeRollup]]. The folded table reads identically at the
-    * guarantee level in every regime, and EXACTLY below
-    * eviction/compaction (HLL is exact-identical in all regimes —
-    * register-wise max is idempotent). One wrapper per MV because each
-    * fold must reproduce its PARTIALS schema. */
-  // partials → partials fold frames, shared by the offline compactor,
-  // the ONLINE (manifest-swap) compactor, and nothing else — readers
-  // finalize, they don't need the fold
-  private def foldTopTalkers(partials: DataFrame, capacity: Int): DataFrame =
-    partials.groupBy("event_date", "proto")
-      .agg(graft.functions.HeavyHitters
-          .heavyHittersFold(col("hh_sketch"), capacity).as("hh_sketch"),
-        sum("flow_count").as("flow_count"))
-
-  private def foldUniqueSrc(partials: DataFrame): DataFrame =
-    partials.groupBy("bucket")
-      .agg(hll_union_agg(col("hll_sketch"), false).as("hll_sketch"),
-        sum("flow_count").as("flow_count"))
-
-  private def foldUniqueSrcTheta(partials: DataFrame, lgK: Int): DataFrame =
-    partials.groupBy("day")
-      .agg(graft.functions.ThetaSketch
-          .thetaUnion(col("theta_sketch"), lgK).as("theta_sketch"),
-        sum("flow_count").as("flow_count"))
-
-  private def foldBytesQuantiles(partials: DataFrame, k: Int): DataFrame =
-    partials.groupBy("event_date", "proto")
-      .agg(graft.functions.QuantileSketch
-          .quantileFold(col("q_sketch"), k).as("q_sketch"),
-        sum("flow_count").as("flow_count"))
-
-  private def plainPartials(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop("batch")
-
-  def optimizeTopTalkersMV(spark: SparkSession, path: String,
-      capacity: Int = 256): Unit =
-    optimizeFold(spark, path,
-      foldTopTalkers(plainPartials(spark, path), capacity), Some("event_date"))
-
-  def optimizeUniqueSrcMV(spark: SparkSession, path: String): Unit =
-    optimizeFold(spark, path, foldUniqueSrc(plainPartials(spark, path)), None)
-
-  def optimizeUniqueSrcThetaMV(spark: SparkSession, path: String,
-      lgK: Int = 12): Unit =
-    optimizeFold(spark, path,
-      foldUniqueSrcTheta(plainPartials(spark, path), lgK), None)
-
-  def optimizeBytesQuantilesMV(spark: SparkSession, path: String,
-      k: Int = 200): Unit =
-    optimizeFold(spark, path,
-      foldBytesQuantiles(plainPartials(spark, path), k), Some("event_date"))
-
-  // ---------------------------- managed (always-on) sketch MV posture
-
-  /** MANAGED deployment posture for the sketch MVs — the same
-    * manifest-committed, snapshot-isolated, online-compactable shape
-    * [[startRollupMVManaged]] gives the rollup: each micro-batch's
-    * partials land as a manifest commit (exactly-once by batch id), the
-    * table is readable at every instant, and
-    * [[optimizeTopTalkersMVOnline]]-family folds run CONCURRENT with the
-    * stream via partition-selective manifest swaps. The HLL/theta tables
-    * record per-file (min,max) of their time key, so range reads prune at
-    * the manifest like every other managed table. */
-  def startTopTalkersMVManaged(stream: DataFrame, table: String, checkpoint: String,
-      capacity: Int = 256, trigger: Trigger = DefaultTrigger): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ManifestTable.append(topTalkersPartials(batch, capacity), table,
-          Some("event_date"), id)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-
-  def startUniqueSrcMVManaged(stream: DataFrame, table: String, checkpoint: String,
-      lgConfigK: Int = 12, trigger: Trigger = DefaultTrigger): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ManifestTable.append(uniqueSrcPartials(batch, lgConfigK), table,
-          None, id, statsCol = Some("bucket"))
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-
-  def startUniqueSrcThetaMVManaged(stream: DataFrame, table: String, checkpoint: String,
-      lgK: Int = 12, trigger: Trigger = DefaultTrigger): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ManifestTable.append(uniqueSrcThetaPartials(batch, lgK), table,
-          None, id, statsCol = Some("day"))
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-
-  def startBytesQuantilesMVManaged(stream: DataFrame, table: String, checkpoint: String,
-      k: Int = 200, trigger: Trigger = DefaultTrigger): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ManifestTable.append(bytesQuantilesPartials(batch, k), table,
-          Some("event_date"), id)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-
-  /** ONLINE compaction of a managed sketch MV: fold the fragmented
-    * partition groups of the current snapshot and swap them in one
-    * manifest commit — concurrent appends survive, readers see one
-    * committed snapshot at every instant, and a lost swap race aborts
-    * cleanly (returns false), exactly like [[optimizeRollupOnline]]. For
-    * the event_date-partitioned MVs the group keys never span partitions,
-    * so the per-partition fold is exact; the unpartitioned HLL/theta
-    * tables fold as one group (their relation is bucket/day-sized). */
-  def optimizeTopTalkersMVOnline(spark: SparkSession, table: String,
-      capacity: Int = 256): Boolean =
-    optimizeSketchOnline(spark, table,
-      foldTopTalkers(_, capacity), Some("event_date"), None)
-
-  def optimizeUniqueSrcMVOnline(spark: SparkSession, table: String): Boolean =
-    optimizeSketchOnline(spark, table, foldUniqueSrc, None, Some("bucket"))
-
-  def optimizeUniqueSrcThetaMVOnline(spark: SparkSession, table: String,
-      lgK: Int = 12): Boolean =
-    optimizeSketchOnline(spark, table,
-      foldUniqueSrcTheta(_, lgK), None, Some("day"))
-
-  def optimizeBytesQuantilesMVOnline(spark: SparkSession, table: String,
-      k: Int = 200): Boolean =
-    optimizeSketchOnline(spark, table,
-      foldBytesQuantiles(_, k), Some("event_date"), None)
-
-  private def optimizeSketchOnline(spark: SparkSession, table: String,
-      fold: DataFrame => DataFrame, partitionCol: Option[String],
-      statsCol: Option[String]): Boolean = {
-    val (_, files) = ManifestTable.snapshot(table)
-    if (files.isEmpty) return true
-    val byPartition = filesByPartition(files)
-    val unfoldedGroups = byPartition.filter(_._2.size > 1)
-    val unfolded = unfoldedGroups.values.flatten.toSeq
-    if (unfolded.isEmpty) return true
-    // bound output files to one per folded partition group (same r8
-    // lesson as optimizeRollupOnline: an unbounded-file fold refolds
-    // the whole table forever)
-    val folded0 = fold(ManifestTable.readSelected(spark, table, unfolded))
-    val folded = partitionCol match {
-      case Some(c) => folded0.repartition(math.max(1, unfoldedGroups.size), col(c))
-      case None => folded0.coalesce(1)
-    }
-    ManifestTable.swap(folded, table, partitionCol, unfolded, statsCol = statsCol)
-  }
-
-  private def optimizeFold(spark: SparkSession, path: String,
-      folded: => DataFrame, partitionCol: Option[String]): Unit = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(path)
-    // complete (or discard) any crashed prior run before looking at the
-    // table — a crash at ANY point below is repaired by the next call
-    // instead of stranding the folded data in a sibling dir (r7 advisory)
-    recoverOptimize(root)
-    def dataDirs: List[String] = {
-      val s = Files.list(root)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n.startsWith("batch=") || n.startsWith("event_date="))
-        .toList
-      finally s.close()
-    }
-    val inputs = dataDirs
-    if (inputs.isEmpty || inputs == List("batch=-1")) {
-      // nothing to fold (empty table, or exactly the previous fold output)
-      spark.catalog.refreshByPath(path)
-      return
-    }
-    // durable fold FIRST, into a HIDDEN dir inside the table root
-    // (invisible to partition discovery); only then swap the contents. The
-    // fold lands as the reserved `batch=-1` directory so the partition
-    // layout stays uniform with the per-batch write scheme; pre-batch
-    // layouts' top-level event_date dirs are folded in and removed too.
-    val staging = root.resolve(".optimize-staging")
-    val writer = folded.write.mode("overwrite")
-    partitionCol.fold(writer)(c => writer.partitionBy(c))
-      .parquet(staging.toString)
-    // recording WHICH dirs the fold absorbed makes the swap crash-safe:
-    // recovery deletes exactly those dirs (never a dir appended after the
-    // fold) and publishes the staged copy — the marker is written LAST and
-    // ATOMICALLY (tmp + ATOMIC_MOVE: a crash mid-write must leave no
-    // marker at all, or recovery would treat a TRUNCATED input list as a
-    // completed fold and double-count the unlisted dirs), so an incomplete
-    // fold is never mistaken for a completed one
-    val markerTmp = staging.resolve(".folded-inputs.tmp")
-    Files.write(markerTmp, inputs.mkString("\n").getBytes("UTF-8"))
-    Files.move(markerTmp, staging.resolve(".folded-inputs"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    recoverOptimize(root) // the completion step is the recovery step
-    spark.catalog.refreshByPath(path)
-  }
-
-  /** Completion/recovery for [[optimizeRollup]]: a staging dir carrying its
-    * `.folded-inputs` marker is a COMPLETE durable fold — delete exactly
-    * the input dirs it absorbed and publish it as `batch=-1`; a staging
-    * dir without the marker is a crashed partial write — discard it. The
-    * marker stays inside the dir until after the publish move (a crash
-    * between the input deletes and the move must still look "complete" on
-    * the next call, or its data dirs would be gone AND its staged copy
-    * discarded). */
-  private def recoverOptimize(root: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    val staging = root.resolve(".optimize-staging")
-    if (!Files.isDirectory(staging)) return
-    val marker = staging.resolve(".folded-inputs")
-    if (!Files.exists(marker)) { graft.Storage.deleteTree(staging); return }
-    val inputs = Files.readAllLines(marker).asScala.filter(_.nonEmpty)
-    // arm the replay guard FIRST, while the staging dir and its marker
-    // still exist: a crash after the input deletes / publish move but
-    // before the guard write would leave the fold published with the
-    // guard unarmed, so a restarted stream's checkpoint replay of an
-    // absorbed batch would re-add rows the fold already counted (r9
-    // advisory — the exact double-count the guard exists to prevent).
-    // Arming early is safe in the other direction: if we crash right
-    // after this write, replays of absorbed batches are skipped but
-    // their batch=N dirs are still on disk and still covered by the
-    // marker, so the next recoverOptimize completes the publish
-    // idempotently — no row is lost or double-counted in any interleave.
-    // Monotonic max with any earlier fold's record, written atomically.
-    val foldedMax = inputs
-      .filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong).filter(_ >= 0)
-      .foldLeft(maxFoldedBatch(root.toString))(math.max)
-    if (foldedMax >= 0) {
-      val tmp = root.resolve(s".$maxFoldedName.tmp")
-      Files.write(tmp, foldedMax.toString.getBytes("UTF-8"))
-      Files.move(tmp, root.resolve(maxFoldedName),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    inputs.foreach(d => graft.Storage.deleteTree(root.resolve(d)))
-    val target = root.resolve("batch=-1")
-    if (Files.exists(target))
-      throw new IllegalStateException(
-        s"$target exists but was not a fold input — concurrent OPTIMIZE? " +
-          "optimizeRollup is offline-only (one caller, stream stopped)")
-    Files.move(staging, target)
-    // the marker is now inside the published dir; hidden files are ignored
-    // by readers, but tidy it away (best-effort — harmless if this crashes)
-    Files.deleteIfExists(target.resolve(".folded-inputs"))
-  }
-
-  /** Dynamic-partition-overwrite `path` from the (already durable) staged
-    * copy; refresh cached listings; delete the staging dir ON SUCCESS
-    * ONLY — if the overwrite fails partway, the staged copy is the sole
-    * surviving full copy of the rewritten partitions and must be kept for
-    * recovery (r8 review: a finally-delete destroyed exactly the copy the
-    * staging protocol exists to preserve). */
-  private def overwriteFromStaging(spark: SparkSession, path: String, staging: String): Unit = {
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      try {
-        spark.read.parquet(staging).write
-          .mode("overwrite")
-          .partitionBy("event_date")
-          .parquet(path)
-      } catch {
-        case e: Throwable =>
-          throw new IllegalStateException(
-            s"partition overwrite of $path failed midway; the durable " +
-              s"staged copy is preserved at $staging — restore the " +
-              "affected partitions from it before resuming", e)
-      }
-      // drop stale file listings for the rewritten path from the shared cache
-      spark.catalog.refreshByPath(path)
-      graft.Storage.deleteTree(java.nio.file.Paths.get(staging))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-  }
-
-  /** Small-file compaction for a ROTATED raw table: streaming appends leave
-    * one file per micro-batch per date partition; this rewrites each
-    * partition into `filesPerPartition` time-sorted files — the raw-table
-    * analog of ClickHouse's background part merging (`README.md:164-172`),
-    * restoring the reference's `ORDER BY TimeReceived` clustering so range
-    * scans skip row groups.
-    *
-    * MUST run on a STOPPED table only: the streaming parquet sink tracks
-    * its committed files in a `_spark_metadata` transaction log, and a
-    * batch overwrite invalidates it (without a transactional table format
-    * there is no safe concurrent compaction). The log is deleted as part of
-    * compaction — the directory becomes a plain parquet table for batch
-    * readers; a resumed stream should write to a fresh directory/log
-    * (standard daily-rotation layout). For compaction WITHOUT stopping the
-    * stream, use the manifest-committed layout: [[startRawMVManaged]] +
-    * [[compactRawOnline]]. */
-  def compactRaw(spark: SparkSession, path: String, filesPerPartition: Int = 1): Unit = {
-    val raw = spark.read.parquet(path)
-    // range partitioning on (date, time) like compactRawOnline: hashing by
-    // date alone collapsed every date into ONE task regardless of
-    // filesPerPartition (r7 review) — a single-core whole-table rewrite
-    val nDates = raw.select("event_date").distinct().count().toInt.max(1)
-    val compacted = raw
-      .repartitionByRange(nDates * filesPerPartition,
-        col("event_date"), col("timeReceived"))
-      .sortWithinPartitions("timeReceived")
-    // the staged copy is durable parquet BEFORE anything is deleted; the
-    // streaming transaction log is dropped only after the staging write
-    // completes, since log-based readers would otherwise resolve to the
-    // dead file list mid-rewrite
-    val staging = s"$path.compact-staging"
-    compacted.write.mode("overwrite").partitionBy("event_date").parquet(staging)
-    // Files.delete THROWS on failure — a silently-surviving transaction
-    // log would make every later read resolve the stale pre-compaction
-    // file list (r8 review: File.delete() booleans were ignored); failing
-    // here aborts BEFORE the overwrite touches the table
-    val metaDir = java.nio.file.Paths.get(path, "_spark_metadata")
-    if (java.nio.file.Files.isDirectory(metaDir)) {
-      val s = java.nio.file.Files.list(metaDir)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.toList.foreach(java.nio.file.Files.delete(_))
-      } finally s.close()
-      java.nio.file.Files.delete(metaDir)
-    }
-    overwriteFromStaging(spark, path, staging)
-  }
-
-  // ------------------------------------------------- manifest-committed MVs
-
-  /** Raw MV over a [[ManifestTable]]: same projection and event_date
-    * partitioning as [[startRawMV]], but every micro-batch is committed as
-    * an atomic manifest version — so [[compactRawOnline]] can merge parts
-    * WHILE THE STREAM RUNS, the reference's always-on semantics
-    * (`README.md:164-172`). Appends are exactly-once: Spark's checkpoint
-    * replays a batch at most once uncommitted, and the manifest's batch-id
-    * guard makes the replayed commit a no-op. */
+  /** Raw MV over a [[ManifestTable]]: every micro-batch is an
+    * [[appendRaw]] commit, so [[compactRawOnline]] can merge parts WHILE
+    * THE STREAM RUNS, the reference's always-on semantics
+    * (`README.md:164-172`). */
   def startRawMVManaged(stream: DataFrame, table: String, checkpoint: String,
       trigger: Trigger = DefaultTrigger): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // statsCol: each committed file carries its (min,max) timeReceived
-        // in the manifest — time-range queries skip non-overlapping files
-        // at the manifest (readRawManagedRange), no footer reads
-        ManifestTable.append(projectRaw(batch), table, Some("event_date"), id,
-          statsCol = Some("timeReceived"))
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    startBatches(stream, checkpoint, trigger)(appendRaw(_, table, _))
 
-  /** Rollup MV over a [[ManifestTable]]: per-batch partial aggregates,
-    * SummingMergeTree semantics, manifest-committed. */
-  def startRollupMVManaged(stream: DataFrame, table: String, checkpoint: String,
-      trigger: Trigger = DefaultTrigger): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // timeslot bounds in the manifest: dashboard range queries over the
-        // rollup skip non-overlapping partial files the same way the raw
-        // table skips on timeReceived
-        ManifestTable.append(rollupPartials(batch), table, Some("event_date"), id,
-          statsCol = Some("timeslot"))
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+  /** Read the managed raw table at its latest committed snapshot. */
+  def readRawManaged(spark: SparkSession, table: String): DataFrame =
+    ManifestTable.read(spark, table)
+
+  /** Time-range read of the managed raw table: manifest-level file
+    * skipping on the recorded per-file (min,max) `timeReceived` — the
+    * ClickHouse `ORDER BY TimeReceived` range-scan parity (`create.sh:62`)
+    * — then the exact residual predicate over the surviving files. A
+    * 1-hour dashboard window on a multi-day table reads only the files
+    * whose bounds overlap `[fromSec, untilSec)`; files predating the stats
+    * feature are kept conservatively. */
+  def readRawManagedRange(spark: SparkSession, table: String,
+      fromSec: Long, untilSec: Long): DataFrame =
+    ManifestTable.readRangePruned(spark, table, "timeReceived", fromSec, untilSec)
+      .filter(col("timeReceived") >= fromSec && col("timeReceived") < untilSec)
+
+  /** ONLINE raw-table compaction: rewrite fragmented date partitions into
+    * `filesPerPartition` time-sorted files (ClickHouse's background part
+    * merge restoring `ORDER BY TimeReceived` clustering) and swap them in
+    * one manifest commit, stream still running.
+    *
+    * PARTITION-SELECTIVE: only partitions holding more than
+    * `filesPerPartition` files are rewritten — cold partitions' files are
+    * not read, not rewritten, and keep their manifest entries. That makes
+    * each merge cycle cost ∝ freshly-appended fragmentation, not table
+    * size (the 50M proof run showed whole-table rewrites growing linearly
+    * as the table filled — exactly what ClickHouse's per-part merging
+    * avoids). Returns false on a lost swap race (aborted cleanly). */
+  def compactRawOnline(spark: SparkSession, table: String,
+      filesPerPartition: Int = 1): Boolean = {
+    val fragmentedGroups = ManifestTable.filesByPartition(ManifestTable.snapshot(table)._2)
+      .filter(_._2.size > filesPerPartition)
+    val fragmented = fragmentedGroups.values.flatten.toSeq
+    if (fragmented.isEmpty) return true
+    // range partitioning on (date, time): hash-partitioning by date alone
+    // would collapse each date into ONE task/file regardless of the
+    // target, serializing the hottest partition on a single core; ranges
+    // give ~filesPerPartition contiguous-time files per date, which also
+    // preserves the ORDER BY TimeReceived clustering ACROSS files
+    val compacted = ManifestTable.readSelected(spark, table, fragmented)
+      .repartitionByRange(fragmentedGroups.size * filesPerPartition,
+        col("event_date"), col("timeReceived"))
+      .sortWithinPartitions("timeReceived")
+    // compaction re-records timeReceived bounds for the merged files, so
+    // range skipping survives part merges (and the time-sorted rewrite
+    // makes the per-file bounds TIGHT — contiguous ranges, not the
+    // arrival-order spread of raw appends)
+    ManifestTable.swap(compacted, table, Some("event_date"), fragmented,
+      statsCol = Some("timeReceived"))
+  }
 
   /** STREAMING AS-OF ENRICHMENT: annotate flows in-flight against a
     * TIME-VERSIONED dimension that itself updates mid-stream — the
     * production posture of the reference's enrichment-processor roadmap
-    * (`/root/reference/README.md:44-51`): AS/geo databases are released in
+    * (the reference's `README.md:44-51`): AS/geo databases are released in
     * dated versions WHILE the stream runs, and the historically-correct
     * join is as-of on event time, not equality against "whatever is
     * loaded now".
@@ -1097,133 +670,21 @@ object FlowStreams {
       dimKey: String = "asn", dimTime: String = "valid_from",
       emptyDimSchema: Option[org.apache.spark.sql.types.StructType] = None,
       trigger: Trigger = DefaultTrigger): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // emptyDimSchema lets the stream start BEFORE the first dimension
-        // release is published (the documented posture): early batches
-        // enrich to nulls instead of killing the query on the empty
-        // manifest (r7 review); without a schema the pre-first-release
-        // start stays an error, since null payload columns can't be typed
-        val dims = ManifestTable.read(batch.sparkSession, dimTable, emptyDimSchema)
-        // timeBuckets = 1: a micro-batch is seconds of data — per-key
-        // time-bucket fan-out is a batch-job remedy for hot keys over
-        // long ranges, and here it would add a bounds broadcast, two
-        // cross-joins and a distinct to EVERY trigger for nothing
-        val enriched = graft.operators.AsofJoin.asofJoin(
-          batch, dims, factKey, dimKey, factTime, dimTime, timeBuckets = 1)
-        ManifestTable.append(enriched, outTable, None, id)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-
-  /** Read the managed raw table at its latest committed snapshot. */
-  def readRawManaged(spark: SparkSession, table: String): DataFrame =
-    ManifestTable.read(spark, table)
-
-  /** Time-range read of the managed raw table: manifest-level file
-    * skipping on the recorded per-file (min,max) `timeReceived` — the
-    * ClickHouse `ORDER BY TimeReceived` range-scan parity (`create.sh:62`)
-    * — then the exact residual predicate over the surviving files. A
-    * 1-hour dashboard window on a multi-day table reads only the files
-    * whose bounds overlap `[fromSec, untilSec)`; files predating the stats
-    * feature are kept conservatively. */
-  def readRawManagedRange(spark: SparkSession, table: String,
-      fromSec: Long, untilSec: Long): DataFrame =
-    ManifestTable.readRangePruned(spark, table, "timeReceived", fromSec, untilSec)
-      .filter(col("timeReceived") >= fromSec && col("timeReceived") < untilSec)
-
-  /** Read-time re-merge of the managed rollup (pre-OPTIMIZE semantics). */
-  def readRollupManaged(spark: SparkSession, table: String): DataFrame =
-    mergeRollup(ManifestTable.read(spark, table))
-
-  /** Timeslot-range read of the managed rollup: manifest-level file
-    * skipping on recorded per-file (min,max) timeslot, residual predicate,
-    * then the SummingMergeTree re-merge over only the surviving partials —
-    * the dashboard's "last N hours" panel against an always-on rollup
-    * without touching cold files. `[fromSlot, untilSlot)` in epoch
-    * seconds, aligned like `rollupPartials`' 300 s slots. */
-  def readRollupManagedRange(spark: SparkSession, table: String,
-      fromSlot: Long, untilSlot: Long): DataFrame =
-    mergeRollup(
-      ManifestTable.readRangePruned(spark, table, "timeslot", fromSlot, untilSlot)
-        .filter(col("timeslot") >= fromSlot && col("timeslot") < untilSlot))
-
-  /** ONLINE `OPTIMIZE TABLE`: fold the files of the current snapshot to one
-    * row per key and swap them out in a single manifest commit. Safe with a
-    * running [[startRollupMVManaged]] stream: batches appended after the
-    * snapshot are not in the replaced set and survive; readers at every
-    * instant see exactly one committed snapshot. The folded output is
-    * durable parquet before the swap — no checkpoint-block lineage.
-    * Returns false if a concurrent compaction won the swap race (this
-    * one's snapshot went stale and it aborted cleanly).
-    *
-    * Partition-selective like [[compactRawOnline]]: a one-file partition
-    * holds one task's partials — already one row per key, since
-    * [[rollupPartials]] folds each input partition to one row per key and
-    * a write task puts one file in each partition directory — so only
-    * multi-file partitions need folding, and rollup keys never span
-    * event_date partitions, so the per-partition fold is exact. */
-  def optimizeRollupOnline(spark: SparkSession, table: String): Boolean = {
-    val (_, files) = ManifestTable.snapshot(table)
-    if (files.isEmpty) return true
-    val byPartition = filesByPartition(files)
-    val unfoldedGroups = byPartition.filter(_._2.size > 1)
-    val unfolded = unfoldedGroups.values.flatten.toSeq
-    if (unfolded.isEmpty) return true
-    // repartition by event_date BEFORE the swap: the fold's final groupBy
-    // otherwise leaves ~shuffle.partitions tasks each writing a file into
-    // every date dir it holds rows for — the folded partitions would come
-    // back multi-file and every later call would refold the whole table
-    // forever (r8 review; compactRawOnline already bounded its file count
-    // the same way)
-    val folded = mergeRollup(ManifestTable.readSelected(spark, table, unfolded))
-      .repartition(math.max(1, unfoldedGroups.size), col("event_date"))
-    ManifestTable.swap(folded, table, Some("event_date"), unfolded,
-      statsCol = Some("timeslot"))
-  }
-
-  /** Group a manifest file list by its partition-directory prefix (one
-    * copy — the fold and the part-merge both select fragmented groups). */
-  private def filesByPartition(files: Seq[String]): Map[String, Seq[String]] =
-    files.groupBy(f =>
-      f.lastIndexOf('/') match { case -1 => ""; case i => f.substring(0, i) })
-
-  /** ONLINE raw-table compaction: rewrite fragmented date partitions into
-    * `filesPerPartition` time-sorted files (ClickHouse's background part
-    * merge restoring `ORDER BY TimeReceived` clustering) and swap them in
-    * one manifest commit, stream still running.
-    *
-    * PARTITION-SELECTIVE: only partitions holding more than
-    * `filesPerPartition` files are rewritten — cold partitions' files are
-    * not read, not rewritten, and keep their manifest entries. That makes
-    * each merge cycle cost ∝ freshly-appended fragmentation, not table
-    * size (the 50M proof run showed whole-table rewrites growing linearly
-    * as the table filled — exactly what ClickHouse's per-part merging
-    * avoids). Returns false on a lost swap race (aborted cleanly). */
-  def compactRawOnline(spark: SparkSession, table: String,
-      filesPerPartition: Int = 1): Boolean = {
-    val (_, files) = ManifestTable.snapshot(table)
-    if (files.isEmpty) return true
-    val fragmentedGroups = filesByPartition(files).filter(_._2.size > filesPerPartition)
-    val fragmented = fragmentedGroups.values.flatten.toSeq
-    if (fragmented.isEmpty) return true
-    // range partitioning on (date, time): hash-partitioning by date alone
-    // would collapse each date into ONE task/file regardless of the
-    // target, serializing the hottest partition on a single core; ranges
-    // give ~filesPerPartition contiguous-time files per date, which also
-    // preserves the ORDER BY TimeReceived clustering ACROSS files
-    val compacted = ManifestTable.readSelected(spark, table, fragmented)
-      .repartitionByRange(fragmentedGroups.size * filesPerPartition,
-        col("event_date"), col("timeReceived"))
-      .sortWithinPartitions("timeReceived")
-    // compaction re-records timeReceived bounds for the merged files, so
-    // range skipping survives part merges (and the time-sorted rewrite
-    // makes the per-file bounds TIGHT — contiguous ranges, not the
-    // arrival-order spread of raw appends)
-    ManifestTable.swap(compacted, table, Some("event_date"), fragmented,
-      statsCol = Some("timeReceived"))
-  }
+    startBatches(stream, checkpoint, trigger) { (batch, id) =>
+      // emptyDimSchema lets the stream start BEFORE the first dimension
+      // release is published (the documented posture): early batches
+      // enrich to nulls instead of killing the query on the empty
+      // manifest; without a schema the pre-first-release
+      // start stays an error, since null payload columns can't be typed
+      val dims = ManifestTable.read(batch.sparkSession, dimTable, emptyDimSchema)
+      // timeBuckets = 1: a micro-batch is seconds of data — per-key
+      // time-bucket fan-out is a batch-job remedy for hot keys over
+      // long ranges, and here it would add a bounds broadcast, two
+      // cross-joins and a distinct to EVERY trigger for nothing
+      val enriched = graft.operators.AsofJoin.asofJoin(
+        batch, dims, factKey, dimKey, factTime, dimTime, timeBuckets = 1)
+      ManifestTable.append(enriched, outTable, None, id)
+    }
 
   /** Watermarked event-time aggregation — the Spark-native alternative to
     * partial-append when bounded state + on-time finalized rows are wanted
@@ -1314,11 +775,7 @@ object FlowStreams {
   def startMicroFlushSink(stream: DataFrame, checkpoint: String,
       writer: DataFrame => Unit,
       trigger: Trigger = DefaultTrigger): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) => writer(batch) }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    startBatches(stream, checkpoint, trigger)((batch, _) => writer(batch))
 
   /** The inserter's exact 14-column insert tuple (`inserter.go:142-158`,
     * PG DDL `compose/postgres/create.sh:5-24`): NOW() insert timestamp
@@ -1425,11 +882,6 @@ object FlowStreams {
   def startJdbcSinkExactlyOnce(stream: DataFrame, checkpoint: String, url: String,
       table: String, props: java.util.Properties,
       trigger: Trigger = DefaultTrigger): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        idempotentJdbcFlush(batch, id, url, table, props)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    startBatches(stream, checkpoint, trigger)(
+      idempotentJdbcFlush(_, _, url, table, props))
 }

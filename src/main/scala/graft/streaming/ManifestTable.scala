@@ -7,9 +7,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** A minimal snapshot-manifest table layout: the transactional commit
   * protocol that lets compaction run ONLINE, concurrent with streaming
   * appends — ClickHouse merges parts while inserting
-  * (`/root/reference/README.md:164-172`); the r2 `compactRaw` had to stop
-  * the stream because a plain parquet directory has no atomic multi-file
-  * swap. This layout adds one:
+  * (the reference's `README.md:164-172`); a plain parquet directory has no
+  * atomic multi-file swap, so compacting one means stopping the stream.
+  * This layout adds one:
   *
   * {{{
   * table/
@@ -423,6 +423,16 @@ object ManifestTable {
   private[graft] def readSelected(spark: SparkSession, table: String,
       files: Seq[String]): DataFrame =
     readFiles(spark, table, files, None, s"no files to read in manifest table: $table")
+
+  /** The partition directory a committed file lives in (`event_date=…`,
+    * nested dirs included); "" for an unpartitioned file. */
+  def partitionDir(path: String): String =
+    path.lastIndexOf('/') match { case -1 => ""; case i => path.substring(0, i) }
+
+  /** Group a committed file list by partition directory — how every
+    * partition-selective compactor finds its fragmented groups. */
+  def filesByPartition(files: Seq[String]): Map[String, Seq[String]] =
+    files.groupBy(partitionDir)
 
   /** Last [[readPruned]] selectivity per table — (files selected, files in
     * snapshot). Test seam: specs assert a probe read a bounded subset. */

@@ -120,6 +120,26 @@ class FlowPipelineSpec extends SparkTestBase {
     }
   }
 
+  test("pipeline tables record MV stats: a one-hour range on two days reads fewer files than the snapshot") {
+    val raw = tmp(); val roll = tmp(); val ivf = tmp(); val lsh = tmp()
+    seedIvf(ivf)
+    val t0 = 1704067200L
+    Seq(0L, 1L).foreach { day =>
+      val b = genBatch(200, seed = 40 + day, baseTime = t0 + day * 86400L).toDS().toDF()
+      FlowPipeline.pipelineBatch(b, day, raw, roll, ivf, lsh, vecEvery = 10L)
+    }
+    // the first hour holds the whole first-day batch and nothing else
+    val rawHour = FlowStreams.readRawManagedRange(spark, raw, t0, t0 + 3600L).count()
+    val (rawSel, rawTot) = ManifestTable.lastPruneStats(raw).get
+    assert(rawSel < rawTot, s"raw range read kept $rawSel of $rawTot files")
+    assert(rawHour === 200L)
+    val rollHour = FlowStreams.readRollupManagedRange(spark, roll, t0, t0 + 3600L)
+      .agg(sum("flow_count")).head().getLong(0)
+    val (rollSel, rollTot) = ManifestTable.lastPruneStats(roll).get
+    assert(rollSel < rollTot, s"rollup range read kept $rollSel of $rollTot files")
+    assert(rollHour === 200L)
+  }
+
   test("replayed IVF append re-emits a crash-lost drift line without re-committing (r15 advice)") {
     val ivf = tmp()
     seedIvf(ivf)

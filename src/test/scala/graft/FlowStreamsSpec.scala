@@ -6,10 +6,11 @@ import org.apache.spark.sql.functions._
 import graft.flow.{FlowGen, FlowMessage}
 import graft.streaming.{FlowStreams, ManifestTable}
 
-/** End-to-end MV cascade over a MemoryStream source: raw projection table,
+/** End-to-end MV cascade over a MemoryStream source: managed raw table,
   * partial-append rollup with read-time re-merge (SummingMergeTree
-  * semantics), OPTIMIZE-style compaction, late-data folding, watermarked
-  * variant, micro-flush sink.
+  * semantics), online OPTIMIZE, late-data folding, watermarked variant,
+  * micro-flush sink. Every MV's shared append/fold/replay contract is
+  * table-driven in MergeableMVSpec.
   */
 class FlowStreamsSpec extends SparkTestBase {
   import spark.implicits._
@@ -23,13 +24,13 @@ class FlowStreamsSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val src = MemoryStream[FlowMessage]
     val out = tmp(); val cp = tmp()
-    val q = FlowStreams.startRawMV(src.toDF(), out, cp)
+    val q = FlowStreams.startRawMVManaged(src.toDF(), out, cp)
     src.addData(genBatch(500, seed = 1, baseTime = 1704067200L))
     q.processAllAvailable()
     src.addData(genBatch(300, seed = 2, baseTime = 1704153600L)) // next day
     q.processAllAvailable()
     q.stop()
-    val written = spark.read.parquet(out)
+    val written = FlowStreams.readRawManaged(spark, out)
     assert(written.count() === 800)
     assert(written.select("event_date").distinct().count() === 2)
     // partition pruning works: date filter reads one partition
@@ -43,17 +44,17 @@ class FlowStreamsSpec extends SparkTestBase {
     val out = tmp(); val cp = tmp()
     val batches = (0 until 3).map(b =>
       genBatch(600, seed = 80 + b, baseTime = 1704067200L + b * 1200))
-    val q = FlowStreams.startUniqueSrcMV(src.toDF(), out, cp)
+    val q = FlowStreams.UniqueSrc.start(src.toDF(), out, cp)
     batches.foreach { b => src.addData(b); q.processAllAvailable() }
     q.stop()
-    val got = FlowStreams.readUniqueSrc(spark, out).collect()
+    val got = FlowStreams.readUniqueSrcManaged(spark, out).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got.nonEmpty)
     assert(got.map(_._3).sum === 1800L, "flow_count side stays exact")
     // HLL union is register-wise max: ANY micro-batch split folds to the
     // SAME estimate as one sketch over the union
     val all = spark.createDataFrame(batches.flatten)
-    val batchEst = FlowStreams.uniqueSrcPartials(all)
+    val batchEst = FlowStreams.UniqueSrc.partials(all)
       .select(col("bucket"), hll_sketch_estimate(col("hll_sketch")).as("est"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got.map(_._1).toSet === batchEst.keySet)
@@ -78,10 +79,10 @@ class FlowStreamsSpec extends SparkTestBase {
     val out = tmp(); val cp = tmp()
     val batches = (0 until 3).map(b =>
       genBatch(500, seed = 300 + b, baseTime = 1704067200L + b * 600))
-    val q = FlowStreams.startAnomalyMV(src.toDF(), out, cp)
+    val q = FlowStreams.Anomaly.start(src.toDF(), out, cp)
     batches.foreach { b => src.addData(b); q.processAllAvailable() }
     q.stop()
-    val got = FlowStreams.readAnomalySeries(spark, out).collect()
+    val got = FlowStreams.readAnomalySeriesManaged(spark, out).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getBoolean(4)))
     assert(got.nonEmpty)
     // batch reference: the SAME scoring core over the union of all records
@@ -95,17 +96,18 @@ class FlowStreamsSpec extends SparkTestBase {
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getBoolean(4)))
     assert(got.toSeq === want.toSeq, "MV fold + shared core must equal batch semantics")
     // the alarm cut is exactly the flagged subset
-    val alarms = FlowStreams.readAnomalyAlarms(spark, out).collect()
+    val alarms = FlowStreams.readAnomalyAlarmsManaged(spark, out).collect()
       .map(r => (r.getInt(0), r.getLong(1))).toSet
     assert(alarms === got.filter(_._5).map(t => (t._1, t._2)).toSet)
-    // replay guard: rewriting a batch dir (checkpoint replay) cannot
-    // double-count — the fold re-reads ONE copy per batch id
+    // replay guard: a checkpoint replay of the last batch id cannot
+    // double-count — the manifest holds ONE copy per batch id
     val preCount = got.length
-    val again = FlowStreams.readAnomalySeries(spark, out).collect().length
+    FlowStreams.Anomaly.append(spark.createDataFrame(batches.last), out, 2L)
+    val again = FlowStreams.readAnomalySeriesManaged(spark, out).collect().length
     assert(again === preCount)
     // the SAME partials serve the robust estimator: MAD read path equals
     // the batch median/MAD core over the unioned records, bit-for-bit
-    val gotMad = FlowStreams.readAnomalyMadSeries(spark, out).collect()
+    val gotMad = FlowStreams.readAnomalyMadSeriesManaged(spark, out).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
         r.getDouble(5), r.getBoolean(6)))
     val wantMad = graft.flow.FlowQueries.madOverMinutes(
@@ -119,38 +121,11 @@ class FlowStreamsSpec extends SparkTestBase {
       "one MV, two estimators: the MAD fold must equal batch semantics too")
   }
 
-  test("raw compaction: fewer files, identical data, time-sorted within files") {
-    implicit val sqlCtx = spark.sqlContext
-    val src = MemoryStream[FlowMessage]
-    val out = tmp(); val cp = tmp()
-    val q = FlowStreams.startRawMV(src.toDF(), out, cp)
-    (1 to 4).foreach { i =>
-      src.addData(genBatch(100, seed = 70 + i, baseTime = 1704067200L))
-      q.processAllAvailable()
-    }
-    q.stop()
-    def dataFiles() = Files.walk(java.nio.file.Paths.get(out)).iterator()
-    def parquetFiles(): Long = {
-      val it = dataFiles(); var n = 0L
-      while (it.hasNext) { if (it.next().toString.endsWith(".parquet")) n += 1 }
-      n
-    }
-    val before = spark.read.parquet(out)
-    val beforeSum = before.agg(sum("bytes")).head().getLong(0)
-    val filesBefore = parquetFiles()
-    assert(filesBefore >= 4, s"expected one file per batch, got $filesBefore")
-    FlowStreams.compactRaw(spark, out)
-    assert(parquetFiles() < filesBefore)
-    val after = spark.read.parquet(out)
-    assert(after.count() === 400)
-    assert(after.agg(sum("bytes")).head().getLong(0) === beforeSum)
-  }
-
   test("rollup MV: partials append across batches, re-merge equals direct agg, optimize folds") {
     implicit val sqlCtx = spark.sqlContext
     val src = MemoryStream[FlowMessage]
     val out = tmp(); val cp = tmp()
-    val q = FlowStreams.startRollupMV(src.toDF(), out, cp)
+    val q = FlowStreams.startRollupMVManaged(src.toDF(), out, cp)
     val b1 = genBatch(400, seed = 3, baseTime = 1704067200L)
     // batch 2 overlaps the same 5-min slots (late/duplicate-key data, T4)
     val b2 = genBatch(400, seed = 4, baseTime = 1704067200L)
@@ -159,8 +134,8 @@ class FlowStreamsSpec extends SparkTestBase {
     q.stop()
 
     // unmerged parts: equal keys appear once per batch (partial rows)
-    val partsCount = spark.read.parquet(out).count()
-    val merged = FlowStreams.readRollup(spark, out)
+    val partsCount = ManifestTable.read(spark, out).count()
+    val merged = FlowStreams.readRollupManaged(spark, out)
     val mergedCount = merged.count()
     assert(partsCount > mergedCount, "expected unmerged partial rows")
 
@@ -180,15 +155,15 @@ class FlowStreamsSpec extends SparkTestBase {
     assert(merged.except(directFull).isEmpty && directFull.except(merged).isEmpty)
 
     // OPTIMIZE: folds to one row per key; reads unchanged
-    FlowStreams.optimizeRollup(spark, out)
-    val afterOpt = spark.read.parquet(out)
+    assert(FlowStreams.optimizeRollupOnline(spark, out))
+    val afterOpt = ManifestTable.read(spark, out)
     assert(afterOpt.count() === mergedCount)
-    val reread = FlowStreams.readRollup(spark, out)
+    val reread = FlowStreams.readRollupManaged(spark, out)
       .select("timeslot", "srcAS", "dstAS", "sum_bytes", "flow_count")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4))).toSet
     assert(reread === direct)
     // and the merged maps survive compaction byte-for-byte
-    val rereadFull = FlowStreams.readRollup(spark, out)
+    val rereadFull = FlowStreams.readRollupManaged(spark, out)
     assert(rereadFull.except(directFull).isEmpty && directFull.except(rereadFull).isEmpty)
   }
 
@@ -287,13 +262,13 @@ class FlowStreamsSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val src = MemoryStream[FlowMessage]
     val out = tmp(); val cp = tmp()
-    val q = FlowStreams.startRollupMV(src.toDF(), out, cp)
+    val q = FlowStreams.startRollupMVManaged(src.toDF(), out, cp)
     val b1 = genBatch(300, seed = 11, baseTime = 1704067200L)
     val b2 = genBatch(300, seed = 12, baseTime = 1704067200L) // overlapping slots
     src.addData(b1); q.processAllAvailable()
     src.addData(b2); q.processAllAvailable()
     q.stop()
-    val got = FlowStreams.readTrafficMatrix(spark, out).collect()
+    val got = FlowStreams.readTrafficMatrixManaged(spark, out).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
     assert(got.nonEmpty)
     // the MV answer equals a direct batch aggregation over all input
@@ -305,157 +280,10 @@ class FlowStreamsSpec extends SparkTestBase {
     assert(got.map(_._3).sum === all.size.toLong, "flow counts conserve")
     assert(math.abs(got.map(_._5).sum - 1.0) < 1e-4, "shares sum to ~1")
     // fold-insensitive: OPTIMIZE then re-read — identical matrix
-    FlowStreams.optimizeRollup(spark, out)
-    val after = FlowStreams.readTrafficMatrix(spark, out).collect()
+    assert(FlowStreams.optimizeRollupOnline(spark, out))
+    val after = FlowStreams.readTrafficMatrixManaged(spark, out).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
     assert(after.toSeq === got.toSeq)
-  }
-
-  test("rollup MV: a replayed micro-batch does not double-count (per-batch overwrite)") {
-    implicit val sqlCtx = spark.sqlContext
-    val src = MemoryStream[FlowMessage]
-    val out = tmp(); val cp = tmp()
-    val q = FlowStreams.startRollupMV(src.toDF(), out, cp)
-    val b1 = genBatch(300, seed = 31, baseTime = 1704067200L)
-    src.addData(b1); q.processAllAvailable(); q.stop()
-    val once = FlowStreams.readRollup(spark, out)
-      .agg(sum("sum_bytes"), sum("flow_count")).head()
-    // simulate the crash-after-write replay: re-run the same batch id's
-    // write by hand (what a restarted checkpoint does). Blind append
-    // doubled every total here before the per-batch overwrite layout.
-    FlowStreams.rollupPartials(b1.toDS().toDF()).write
-      .mode("overwrite").partitionBy("event_date").parquet(s"$out/batch=0")
-    val replayed = FlowStreams.readRollup(spark, out)
-      .agg(sum("sum_bytes"), sum("flow_count")).head()
-    assert(replayed === once, "replay must be idempotent, not additive")
-    assert(once.getLong(1) === 300L)
-  }
-
-  test("rollup MV: checkpoint replay of a FOLDED batch is a no-op (r8 review)") {
-    implicit val sqlCtx = spark.sqlContext
-    val out = tmp()
-    val b1 = genBatch(200, seed = 71, baseTime = 1704067200L)
-    // the stream wrote batch 0 but crashed before the checkpoint commit
-    FlowStreams.rollupPartials(b1.toDS().toDF()).write
-      .mode("overwrite").partitionBy("event_date").parquet(s"$out/batch=0")
-    val want = FlowStreams.readRollup(spark, out)
-      .agg(sum("sum_bytes"), sum("flow_count")).head()
-    // operator folds while the stream is down (contract-compliant)
-    FlowStreams.optimizeRollup(spark, out)
-    // the restarted stream REPLAYS batch 0 with the same rows — its dir
-    // was absorbed into batch=-1, so the old overwrite-idempotency can't
-    // help; the max-folded marker must make the replay a no-op
-    val src = MemoryStream[FlowMessage]
-    val q = FlowStreams.startRollupMV(src.toDF(), out, tmp())
-    src.addData(b1); q.processAllAvailable()
-    val replayed = FlowStreams.readRollup(spark, out)
-      .agg(sum("sum_bytes"), sum("flow_count")).head()
-    assert(replayed === want, "replay of a folded batch must not double-count")
-    // a genuinely NEW batch (id 1) still lands
-    val b2 = genBatch(100, seed = 72, baseTime = 1704067200L + 86400L)
-    src.addData(b2); q.processAllAvailable(); q.stop()
-    val after = FlowStreams.readRollup(spark, out)
-      .agg(sum("sum_bytes"), sum("flow_count")).head()
-    assert(after.getLong(0) === want.getLong(0) + b2.map(_.bytes).sum)
-    assert(after.getLong(1) === want.getLong(1) + 100L)
-  }
-
-  test("rollup MV: MIXED legacy + batch layout reads and optimizes (r7 advisory)") {
-    implicit val sqlCtx = spark.sqlContext
-    val out = tmp()
-    val b1 = genBatch(200, seed = 61, baseTime = 1704067200L)
-    val b2 = genBatch(200, seed = 62, baseTime = 1704067200L)
-    // legacy table: partials written straight under event_date= (pre-batch
-    // layout), then the stream restarts on the per-batch writer and appends
-    // a batch=0 dir — the mixed state the advisory flagged
-    FlowStreams.rollupPartials(b1.toDS().toDF()).write
-      .mode("append").partitionBy("event_date").parquet(out)
-    FlowStreams.rollupPartials(b2.toDS().toDF()).write
-      .mode("overwrite").partitionBy("event_date").parquet(s"$out/batch=0")
-    val direct = FlowStreams.rollupPartials((b1 ++ b2).toDS().toDF().coalesce(1))
-    val merged = FlowStreams.readRollup(spark, out)
-    assert(merged.except(direct).isEmpty && direct.except(merged).isEmpty)
-    // optimize repairs the mix into the uniform batch=-1 layout
-    FlowStreams.optimizeRollup(spark, out)
-    val children = Files.list(java.nio.file.Paths.get(out)).iterator()
-    val names = { import scala.jdk.CollectionConverters._
-      children.asScala.map(_.getFileName.toString)
-        .filter(n => n.startsWith("batch=") || n.startsWith("event_date=")).toList }
-    assert(names === List("batch=-1"), s"expected only batch=-1, got $names")
-    val reread = FlowStreams.readRollup(spark, out)
-    assert(reread.except(direct).isEmpty && direct.except(reread).isEmpty)
-  }
-
-  test("optimizeRollup: crash between fold and swap auto-recovers, no loss (r7 advisory)") {
-    implicit val sqlCtx = spark.sqlContext
-    val out = tmp()
-    val b1 = genBatch(150, seed = 63, baseTime = 1704067200L)
-    FlowStreams.rollupPartials(b1.toDS().toDF()).write
-      .mode("overwrite").partitionBy("event_date").parquet(s"$out/batch=0")
-    val want = FlowStreams.readRollup(spark, out)
-      .agg(sum("sum_bytes"), sum("flow_count")).head()
-    val root = java.nio.file.Paths.get(out)
-    // simulate a run that crashed AFTER the durable fold + marker but
-    // BEFORE deleting inputs/publishing: stage the fold by hand
-    val staging = root.resolve(".optimize-staging")
-    FlowStreams.readRollup(spark, out).write
-      .mode("overwrite").partitionBy("event_date").parquet(staging.toString)
-    Files.write(staging.resolve(".folded-inputs"), "batch=0".getBytes("UTF-8"))
-    // next call completes the crashed run, then has nothing further to fold
-    FlowStreams.optimizeRollup(spark, out)
-    assert(!Files.exists(staging), "staging must be consumed")
-    assert(Files.isDirectory(root.resolve("batch=-1")))
-    val got = FlowStreams.readRollup(spark, out)
-      .agg(sum("sum_bytes"), sum("flow_count")).head()
-    assert(got === want, "recovered table must carry the same totals")
-    // a crashed PARTIAL fold (no marker) is discarded, table untouched
-    Files.createDirectories(staging)
-    Files.write(staging.resolve("junk.parquet"), Array[Byte](1, 2, 3))
-    FlowStreams.optimizeRollup(spark, out)
-    assert(!Files.exists(staging))
-    val got2 = FlowStreams.readRollup(spark, out)
-      .agg(sum("sum_bytes"), sum("flow_count")).head()
-    assert(got2 === want)
-  }
-
-  test("recoverOptimize: guard armed BEFORE publish — the crash window cannot double-count (r9 advisory)") {
-    implicit val sqlCtx = spark.sqlContext
-    val out = tmp()
-    val b1 = genBatch(150, seed = 91, baseTime = 1704067200L)
-    FlowStreams.rollupPartials(b1.toDS().toDF()).write
-      .mode("overwrite").partitionBy("event_date").parquet(s"$out/batch=0")
-    val want = FlowStreams.readRollup(spark, out)
-      .agg(sum("sum_bytes"), sum("flow_count")).head()
-    val root = java.nio.file.Paths.get(out)
-    // crash image of recoverOptimize's only remaining intermediate state
-    // under the r9 ordering: guard ARMED, input dirs not yet deleted,
-    // staged fold + marker still on disk. (The pre-r9 ordering's image —
-    // fold published, guard unarmed — let a restarted stream double-count
-    // the absorbed batch permanently.)
-    val staging = root.resolve(".optimize-staging")
-    FlowStreams.readRollup(spark, out).write
-      .mode("overwrite").partitionBy("event_date").parquet(staging.toString)
-    Files.write(staging.resolve(".folded-inputs"), "batch=0".getBytes("UTF-8"))
-    Files.write(root.resolve("_graft_max_folded_batch"), "0".getBytes("UTF-8"))
-    // a restarted stream replays batch 0 BEFORE any recovery runs: the
-    // armed guard makes the replay a no-op; batch=0 itself is untouched
-    val src = MemoryStream[FlowMessage]
-    val q = FlowStreams.startRollupMV(src.toDF(), out, tmp())
-    src.addData(b1); q.processAllAvailable(); q.stop()
-    val midTotals = FlowStreams.readRollup(spark, out)
-      .agg(sum("sum_bytes"), sum("flow_count")).head()
-    assert(midTotals === want, "replay during the crash window must be a no-op")
-    // recovery then completes the publish idempotently
-    FlowStreams.optimizeRollup(spark, out)
-    assert(!Files.exists(staging), "staging must be consumed")
-    assert(Files.isDirectory(root.resolve("batch=-1")))
-    val got = FlowStreams.readRollup(spark, out)
-      .agg(sum("sum_bytes"), sum("flow_count")).head()
-    assert(got === want, "completed fold must carry the same totals exactly once")
-    // the guard survives recovery with the absorbed batch still covered
-    val guard = new String(Files.readAllBytes(
-      root.resolve("_graft_max_folded_batch")), "UTF-8").trim
-    assert(guard.toLong >= 0L)
   }
 
   test("wire bytes -> decode -> raw + rollup MVs reconcile; absent addr renders 0.0.0.0") {
@@ -464,8 +292,8 @@ class FlowStreamsSpec extends SparkTestBase {
     val flows = graft.sources.ProtoCodec
       .fromWire(src.toDF().withColumnRenamed("value", "payload"), "payload").toDF()
     val outRaw = tmp(); val cpRaw = tmp(); val outRoll = tmp(); val cpRoll = tmp()
-    val q1 = FlowStreams.startRawMV(flows, outRaw, cpRaw)
-    val q2 = FlowStreams.startRollupMV(flows, outRoll, cpRoll)
+    val q1 = FlowStreams.startRawMVManaged(flows, outRaw, cpRaw)
+    val q2 = FlowStreams.startRollupMVManaged(flows, outRoll, cpRoll)
     val msgs0 = genBatch(200, seed = 21, baseTime = 1704067200L)
     // 20 records with an absent source address — the Go consumer sees a nil
     // slice there (inserter.go:135-140)
@@ -476,11 +304,11 @@ class FlowStreamsSpec extends SparkTestBase {
     q1.processAllAvailable(); q2.processAllAvailable()
     q1.stop(); q2.stop()
 
-    val raw = spark.read.parquet(outRaw)
+    val raw = FlowStreams.readRawManaged(spark, outRaw)
     assert(raw.count() === 200)
     assert(raw.agg(sum("bytes")).head().getLong(0) === msgs.map(_.bytes).sum)
     // rollup MV totals reconcile with the same wire input
-    val merged = FlowStreams.readRollup(spark, outRoll)
+    val merged = FlowStreams.readRollupManaged(spark, outRoll)
     assert(merged.agg(sum("sum_bytes")).head().getLong(0) === msgs.map(_.bytes).sum)
     assert(merged.agg(sum("flow_count")).head().getLong(0) === 200L)
     // inserter.go:135-140 parity: absent address -> '0.0.0.0'

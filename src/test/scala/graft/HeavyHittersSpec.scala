@@ -186,10 +186,10 @@ class HeavyHittersSpec extends SparkTestBase {
       FlowGen.flows(spark, 400, seed = 70 + b, baseTime = 1704067200L + b * 600,
         ratePerSec = 10).collect().toSeq)
     val src = MemoryStream[FlowMessage]
-    val q = FlowStreams.startTopTalkersMV(src.toDF(), out, cp, capacity = 256)
+    val q = FlowStreams.TopTalkers.start(src.toDF(), out, cp)
     batches.foreach { b => src.addData(b); q.processAllAvailable() }
     q.stop()
-    val got = FlowStreams.readTopTalkers(spark, out, capacity = 256, k = 10)
+    val got = FlowStreams.readTopTalkersManaged(spark, out)
       .collect()
       .map(r => (r.getDate(0).toString, r.getInt(1), r.getInt(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))
@@ -197,7 +197,7 @@ class HeavyHittersSpec extends SparkTestBase {
     assert(got.forall(_._6 === 0L), "sub-capacity cardinality must merge exactly (err 0)")
     // the batch-at-once reference over the UNION of every micro-batch
     val all = spark.createDataFrame(batches.flatten)
-    val want = FlowStreams.topTalkersPartials(all, capacity = 256)
+    val want = FlowStreams.TopTalkers.partials(all)
       .groupBy("event_date", "proto")
       .agg(HeavyHitters.heavyHittersMerge(col("hh_sketch"), 256, 10).as("hh"))
       .select(col("event_date"), col("proto"), posexplode(col("hh")))

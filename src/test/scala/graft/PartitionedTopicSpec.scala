@@ -95,10 +95,10 @@ class PartitionedTopicSpec extends SparkTestBase {
     PartitionedTopic.producePayload(dir, 1, 0L, msgs.drop(40))
     // the decoded records drop straight into the existing MV cascade —
     // the coordinates are extra columns, not a different pipeline
-    val q = graft.streaming.FlowStreams.startRawMV(
+    val q = graft.streaming.FlowStreams.startRawMVManaged(
       PartitionedTopic.readStream(spark, dir).select("msg.*"), out, cp)
     q.processAllAvailable(); q.stop()
-    val written = spark.read.parquet(out)
+    val written = graft.streaming.FlowStreams.readRawManaged(spark, out)
     assert(written.count() === 80)
     assert(written.agg(sum("bytes")).head().getLong(0) === msgs.map(_.bytes).sum)
   }

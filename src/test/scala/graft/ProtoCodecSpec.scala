@@ -164,11 +164,11 @@ class ProtoCodecSpec extends SparkTestBase {
       java.nio.file.Files.write(srcDir.resolve(f"payload_$i%03d.bin"),
         g.flatMap(ProtoCodec.encodeDelimited).toArray)
     }
-    val q = FlowStreams.startRawMV(
+    val q = FlowStreams.startRawMVManaged(
       ProtoCodec.binaryFileStream(spark, srcDir.toString).toDF(), out, cp)
     q.processAllAvailable()
     q.stop()
-    val written = spark.read.parquet(out)
+    val written = FlowStreams.readRawManaged(spark, out)
     assert(written.count() === 90)
     assert(written.agg(org.apache.spark.sql.functions.sum("bytes")).head().getLong(0)
       === msgs.map(_.bytes).sum)
@@ -185,17 +185,17 @@ class ProtoCodecSpec extends SparkTestBase {
     val b2 = FlowGen.flows(spark, 60, seed = 17).collect().toSeq
 
     writePayload("a.bin", b1)
-    val q1 = FlowStreams.startRawMV(
+    val q1 = FlowStreams.startRawMVManaged(
       ProtoCodec.binaryFileStream(spark, srcDir.toString).toDF(), out, cp)
     q1.processAllAvailable(); q1.stop()
     // new files arrive while the query is down; a fresh query on the SAME
     // checkpoint must pick up exactly the unprocessed remainder
     writePayload("b.bin", b2)
-    val q2 = FlowStreams.startRawMV(
+    val q2 = FlowStreams.startRawMVManaged(
       ProtoCodec.binaryFileStream(spark, srcDir.toString).toDF(), out, cp)
     q2.processAllAvailable(); q2.stop()
 
-    val written = spark.read.parquet(out)
+    val written = FlowStreams.readRawManaged(spark, out)
     assert(written.count() === 100)
     assert(written.agg(org.apache.spark.sql.functions.sum("bytes")).head().getLong(0)
       === (b1 ++ b2).map(_.bytes).sum)
@@ -207,14 +207,14 @@ class ProtoCodecSpec extends SparkTestBase {
     val decoded = ProtoCodec.fromWire(src.toDF().withColumnRenamed("value", "payload"), "payload")
     val out = java.nio.file.Files.createTempDirectory("proto_e2e").toString
     val cp = java.nio.file.Files.createTempDirectory("proto_cp").toString
-    val q = FlowStreams.startRawMV(decoded.toDF(), out, cp)
+    val q = FlowStreams.startRawMVManaged(decoded.toDF(), out, cp)
     // two framed records per Kafka-style payload
     val msgs = FlowGen.flows(spark, 100, seed = 14).collect().toSeq
     val payloads = msgs.grouped(2).map(_.flatMap(ProtoCodec.encodeDelimited).toArray).toSeq
     src.addData(payloads)
     q.processAllAvailable()
     q.stop()
-    val written = spark.read.parquet(out)
+    val written = FlowStreams.readRawManaged(spark, out)
     assert(written.count() === 100)
     assert(written.columns.contains("event_date"))
   }

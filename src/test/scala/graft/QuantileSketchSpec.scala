@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.flow.{FlowGen, FlowMessage}
 import graft.functions.QuantileSketch
-import graft.streaming.FlowStreams
+import graft.streaming.{FlowStreams, ManifestTable}
 
 /** Mergeable KLL quantile sketch (`quantileState`/`quantileMerge` MV
   * pattern): exact below compaction, rank-error-bounded beyond it, and a
@@ -135,17 +135,18 @@ class QuantileSketchSpec extends SparkTestBase {
     val batches = (0 until 3).map(b =>
       FlowGen.flows(spark, 50, seed = 60 + b, baseTime = 1704067200L + b * 600,
         ratePerSec = 10).collect().toSeq)
-    val q = FlowStreams.startBytesQuantilesMV(src.toDF(), out, cp)
+    val q = FlowStreams.BytesQuantiles.start(src.toDF(), out, cp)
     batches.foreach { b => src.addData(b); q.processAllAvailable() }
     q.stop()
-    def readAll() = FlowStreams.readBytesQuantiles(spark, out).collect()
+    def readAll() = FlowStreams.readBytesQuantilesManaged(spark, out).collect()
       .map(r => (r.getDate(0).toString, r.getInt(1), r.getDouble(2), r.getDouble(3),
         r.getDouble(4), r.getLong(5))).toSeq
     val before = readAll()
-    FlowStreams.optimizeBytesQuantilesMV(spark, out)
-    val dirs = new java.io.File(out).listFiles().map(_.getName)
-      .filter(_.startsWith("batch=")).sorted.toSeq
-    assert(dirs === Seq("batch=-1"))
+    assert(FlowStreams.BytesQuantiles.optimizeOnline(spark, out))
+    // exactly the fold output: one folded file per date partition
+    val byDate = ManifestTable.filesByPartition(ManifestTable.snapshot(out)._2)
+    assert(byDate.values.forall(fs => fs.size == 1 && fs.head.contains("/c")),
+      s"expected one fold file per partition, got $byDate")
     // sub-k regime: the folded sketch retains every value, so the read is
     // value-identical, not merely within rank error
     assert(readAll() === before)
@@ -158,10 +159,10 @@ class QuantileSketchSpec extends SparkTestBase {
     val batches = (0 until 3).map(b =>
       FlowGen.flows(spark, 50, seed = 30 + b, baseTime = 1704067200L + b * 600,
         ratePerSec = 10).collect().toSeq)
-    val q = FlowStreams.startBytesQuantilesMVManaged(src.toDF(), table, cp)
+    val q = FlowStreams.BytesQuantiles.start(src.toDF(), table, cp)
     src.addData(batches(0)); q.processAllAvailable()
     src.addData(batches(1)); q.processAllAvailable()
-    assert(FlowStreams.optimizeBytesQuantilesMVOnline(spark, table))
+    assert(FlowStreams.BytesQuantiles.optimizeOnline(spark, table))
     src.addData(batches(2)); q.processAllAvailable()
     q.stop()
     val got = FlowStreams.readBytesQuantilesManaged(spark, table).collect()
@@ -169,7 +170,7 @@ class QuantileSketchSpec extends SparkTestBase {
         r.getDouble(4), r.getLong(5))).sortBy(x => (x._1, x._2)).toSeq
     // batch-at-once reference over all three raw batches (sub-k: exact)
     val all = spark.createDataFrame(batches.flatten)
-    val want = FlowStreams.bytesQuantilesPartials(all)
+    val want = FlowStreams.BytesQuantiles.partials(all)
       .groupBy("event_date", "proto")
       .agg(QuantileSketch.quantileMerge(col("q_sketch"), 200, Seq(0.5, 0.9, 0.99)).as("qs"),
         sum("flow_count").as("fc"))
@@ -192,16 +193,16 @@ class QuantileSketchSpec extends SparkTestBase {
     val batches = (0 until 3).map(b =>
       FlowGen.flows(spark, 50, seed = 90 + b, baseTime = 1704067200L + b * 600,
         ratePerSec = 10).collect().toSeq)
-    val q = FlowStreams.startBytesQuantilesMV(src.toDF(), out, cp)
+    val q = FlowStreams.BytesQuantiles.start(src.toDF(), out, cp)
     batches.foreach { b => src.addData(b); q.processAllAvailable() }
     q.stop()
-    val got = FlowStreams.readBytesQuantiles(spark, out).collect()
+    val got = FlowStreams.readBytesQuantilesManaged(spark, out).collect()
       .map(r => (r.getDate(0).toString, r.getInt(1), r.getDouble(2), r.getDouble(3),
         r.getDouble(4), r.getLong(5)))
     assert(got.nonEmpty)
     assert(got.map(_._6).sum === 150L)
     val all = spark.createDataFrame(batches.flatten)
-    val want = FlowStreams.bytesQuantilesPartials(all)
+    val want = FlowStreams.BytesQuantiles.partials(all)
       .groupBy("event_date", "proto")
       .agg(QuantileSketch.quantileMerge(col("q_sketch"), 200, Seq(0.5, 0.9, 0.99)).as("qs"),
         sum("flow_count").as("fc"))

@@ -69,10 +69,10 @@ class ThetaSketchSpec extends SparkTestBase {
     val evens = (0 until 500 by 2).map(_ / 3).toSet
     val odds = (1 until 500 by 2).map(_ / 3).toSet
     assert(ixSql === (evens & odds).size.toLong)
-    // theta_union folds blobs: union of the two group sketches counts the
+    // theta_fold folds blobs: union of the two group sketches counts the
     // distinct union of both value sets
     val unSql = spark.sql(
-      """SELECT theta_estimate(theta_union(s, 12), true) FROM (
+      """SELECT theta_estimate(theta_fold(s, 12), true) FROM (
         |  SELECT theta_sketch(v, 12) AS s FROM th_sql_input GROUP BY g)""".stripMargin)
       .head().getLong(0)
     assert(unSql === (0 until 500).map(_ / 3).distinct.size.toLong)
@@ -81,6 +81,29 @@ class ThetaSketchSpec extends SparkTestBase {
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
     assert(msgs(err).exists(_.contains("BOOLEAN literal")), msgs(err).mkString(" | "))
+  }
+
+  test("no graft SQL function shadows a Spark built-in; the built-in theta_union still resolves") {
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    val s = spark.newSession()
+    GraftFunctions.register(s)
+    val reg = s.sessionState.functionRegistry
+    val builtin = FunctionRegistry.builtin
+    // graft's names: every function the session resolves to something
+    // other than Spark's own built-in entry
+    val graftNames = reg.listFunction().filterNot(id =>
+      builtin.lookupFunction(id).exists(_ eq reg.lookupFunction(id).get))
+      .map(_.funcName).toSet
+    assert(graftNames.size === 24 && graftNames.contains("theta_fold"), graftNames)
+    val shadowed = graftNames & builtin.listFunction().map(_.funcName).toSet
+    assert(shadowed.isEmpty, s"graft functions shadow Spark built-ins: $shadowed")
+    // Spark's scalar theta_union over two sketches, in a registered session
+    val n = s.sql(
+      """SELECT theta_sketch_estimate(theta_union(a, b)) FROM (
+        |  SELECT theta_sketch_agg(x) AS a, theta_sketch_agg(y) AS b
+        |  FROM VALUES (1, 2), (2, 3) AS t(x, y))""".stripMargin)
+      .head().getLong(0)
+    assert(n === 3L)
   }
 
   test("streaming theta MV: cross-batch fold answers day-over-day overlap exactly (exact regime)") {
@@ -95,10 +118,10 @@ class ThetaSketchSpec extends SparkTestBase {
     val batches = (0 until 3).map(b =>
       FlowGen.flows(spark, 60, seed = 40 + b, baseTime = 1704067200L + b * 43200L,
         ratePerSec = 1).collect().toSeq)
-    val q = FlowStreams.startUniqueSrcThetaMV(src.toDF(), out, cp)
+    val q = FlowStreams.UniqueSrcTheta.start(src.toDF(), out, cp)
     batches.foreach { b => src.addData(b); q.processAllAvailable() }
     q.stop()
-    val got = FlowStreams.readUniqueSrcOverlap(spark, out, strict = true).collect()
+    val got = FlowStreams.readUniqueSrcOverlapManaged(spark, out, strict = true).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(got.nonEmpty, "expected at least one consecutive-day pair")
     // exact reference from the raw batches
@@ -118,7 +141,7 @@ class ThetaSketchSpec extends SparkTestBase {
   test("theta MV compaction: fold is read-invisible, replay-guarded, restartable (r12)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.flow.{FlowGen, FlowMessage}
-    import graft.streaming.FlowStreams
+    import graft.streaming.{FlowStreams, ManifestTable}
     implicit val sqlCtx = spark.sqlContext
     val src = MemoryStream[FlowMessage]
     val out = java.nio.file.Files.createTempDirectory("graft_theta_opt").toString
@@ -126,22 +149,22 @@ class ThetaSketchSpec extends SparkTestBase {
     val batches = (0 until 3).map(b =>
       FlowGen.flows(spark, 60, seed = 70 + b, baseTime = 1704067200L + b * 43200L,
         ratePerSec = 1).collect().toSeq)
-    val q1 = FlowStreams.startUniqueSrcThetaMV(src.toDF(), out, cp)
+    val q1 = FlowStreams.UniqueSrcTheta.start(src.toDF(), out, cp)
     src.addData(batches(0)); q1.processAllAvailable()
     src.addData(batches(1)); q1.processAllAvailable()
     q1.stop()
-    def readAll() = FlowStreams.readUniqueSrcOverlap(spark, out, strict = true).collect()
+    def readAll() = FlowStreams.readUniqueSrcOverlapManaged(spark, out, strict = true).collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
     val before = readAll()
-    FlowStreams.optimizeUniqueSrcThetaMV(spark, out)
-    // exactly the fold output on disk
-    val dirs = new java.io.File(out).listFiles().map(_.getName)
-      .filter(_.startsWith("batch=")).sorted.toSeq
-    assert(dirs === Seq("batch=-1"), s"expected only the fold dir, got $dirs")
+    assert(FlowStreams.UniqueSrcTheta.optimizeOnline(spark, out))
+    // exactly the fold output in the snapshot
+    val files = ManifestTable.snapshot(out)._2
+    assert(files.size === 1 && files.head.startsWith("c"),
+      s"expected only the fold file, got $files")
     assert(readAll() === before, "compaction must be read-invisible")
     // restart from the same checkpoint: replays of absorbed batches are
     // no-ops (guard), the NEW batch lands normally
-    val q2 = FlowStreams.startUniqueSrcThetaMV(src.toDF(), out, cp)
+    val q2 = FlowStreams.UniqueSrcTheta.start(src.toDF(), out, cp)
     src.addData(batches(2)); q2.processAllAvailable()
     q2.stop()
     val after = readAll()
@@ -169,11 +192,11 @@ class ThetaSketchSpec extends SparkTestBase {
     val batches = (0 until 3).map(b =>
       FlowGen.flows(spark, 60, seed = 80 + b, baseTime = 1704067200L + b * 43200L,
         ratePerSec = 1).collect().toSeq)
-    val q = FlowStreams.startUniqueSrcThetaMVManaged(src.toDF(), table, cp)
+    val q = FlowStreams.UniqueSrcTheta.start(src.toDF(), table, cp)
     src.addData(batches(0)); q.processAllAvailable()
     src.addData(batches(1)); q.processAllAvailable()
     // ONLINE fold while the stream is live
-    assert(FlowStreams.optimizeUniqueSrcThetaMVOnline(spark, table))
+    assert(FlowStreams.UniqueSrcTheta.optimizeOnline(spark, table))
     val (_, afterFold) = ManifestTable.snapshot(table)
     assert(afterFold.size === 1, s"fold must leave one file, got ${afterFold.size}")
     src.addData(batches(2)); q.processAllAvailable()
