@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.flow.FlowGen
 import graft.sources.ProtoCodec
@@ -85,20 +85,16 @@ object BenchScale {
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_ROWS", "50000000").toLong
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val genFiles = 256
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    // the shipped session (extensions, local file system), with this
+    // run's own overrides
+    val spark = GraftSession.builder(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
       // NOTE (r18 forensics): the ingest window's 90%+ kernel-time storms
       // stack-sample to mmap-based transferTo in
       // BypassMergeSortShuffleWriter's segment concat; an A/B with
       // spark.file.transferTo=false measured NO win (154.8k vs 195.3k
       // rows/s on adjacent windows), so the default stays — the storm
       // correlates with, but does not gate, throughput here.
-      // r18: workload-diverse codegen cache (see Bench/GraftSession)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
       // r19 A/B knob: ObjectHashAggregate falls back to SORT-based
       // aggregation after this many distinct groups per partition
       // (default 128) — the wide-group sketch rows (15M (day, src)
@@ -106,7 +102,6 @@ object BenchScale {
       // sort of the fact table plus per-group buffer serialization
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "128"))
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
@@ -214,8 +209,9 @@ object BenchScale {
               ManifestTable.append(
                 Storage.repartitionForWrite(FlowStreams.projectRaw(b),
                   "event_date", cpus.toInt, Some(col("sequenceNum"))),
-                rawTable, Some("event_date"), id)
-              ManifestTable.append(FlowStreams.rollupPartials(b), rollupTable, Some("event_date"), id)
+                rawTable, Some("event_date"), id, Some("timeReceived"))
+              ManifestTable.append(FlowStreams.rollupPartials(b), rollupTable, Some("event_date"), id,
+                Some("timeslot"))
             } finally { b.unpersist(); () }
           }
           .option("checkpointLocation", checkpoint)
@@ -351,9 +347,9 @@ object BenchScale {
             try {
               ManifestTable.append(
                 FlowStreams.projectRaw(b).repartition(col("event_date")),
-                rawTableB, Some("event_date"), id)
+                rawTableB, Some("event_date"), id, Some("timeReceived"))
               ManifestTable.append(FlowStreams.rollupPartials(b),
-                rollupTableB, Some("event_date"), id)
+                rollupTableB, Some("event_date"), id, Some("timeslot"))
             } finally { b.unpersist(); () }
           }
           .option("checkpointLocation", checkpointB)

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileContext, FileSystem, FsConstants}
 import org.apache.spark.sql.SparkSession
 
 /** Central SparkSession factory for the graft engine.
@@ -49,6 +51,11 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      // `file:` without shell subprocesses (see GraftRawLocalFileSystem):
+      // one FileSystem for parquet writes and manifests, one FileContext
+      // file system for the streaming checkpoint
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
 
   def getOrCreate(master: String = "local[*]"): SparkSession = {
     val spark = builder(master).getOrCreate()
@@ -62,8 +69,24 @@ object GraftSession {
         "graft.plans.GraftExtensions is NOT active (custom operators fall " +
         "back to built-in plans). Build the session via GraftSession first, " +
         "or add the extension to your own builder.")
+    // Hadoop caches one `file:` FileSystem per JVM: one created before
+    // this session (or a reused session's conf) keeps the stock file
+    // system, which forks chmod/readlink on every write and checkpoint
+    if (!localFsInstalled(spark.sparkContext.hadoopConfiguration))
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        "GraftSession.getOrCreate: the session's file: file system is not " +
+        "graft.GraftLocalFileSystem/GraftLocalFs (a stock one was created " +
+        "or cached first), so local writes and checkpoints fork chmod and " +
+        "readlink processes. Build the session via GraftSession before any " +
+        "other Hadoop file system use.")
     spark.sparkContext.setLogLevel("WARN")
     GraftFunctions.register(spark)
     spark
   }
+
+  /** Whether both Hadoop APIs resolve `file:` to the graft local file
+    * system under `conf`. */
+  def localFsInstalled(conf: Configuration): Boolean =
+    FileSystem.get(FsConstants.LOCAL_FS_URI, conf).isInstanceOf[GraftLocalFileSystem] &&
+      FileContext.getLocalFSFileContext(conf).getDefaultFileSystem.isInstanceOf[GraftLocalFs]
 }

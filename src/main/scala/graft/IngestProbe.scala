@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.ProtoCodec
 import graft.streaming.FlowStreams
@@ -19,13 +19,9 @@ object IngestProbe {
       sys.error("set SPARK_GRAFT_WIRE_DIR"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nFiles = sys.env.get("SPARK_GRAFT_WIRE_FILES").map(_.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.builder(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -113,9 +109,9 @@ object IngestProbe {
             ManifestTable.append(
               Storage.repartitionForWrite(FlowStreams.projectRaw(b),
                 "event_date", cpus.toInt, Some(col("sequenceNum"))),
-              raw, Some("event_date"), id)
+              raw, Some("event_date"), id, Some("timeReceived"))
             ManifestTable.append(FlowStreams.rollupPartials(b), roll,
-              Some("event_date"), id)
+              Some("event_date"), id, Some("timeslot"))
           } finally { b.unpersist(); () }
         }
         .option("checkpointLocation", dir.resolve("cp").toString)
