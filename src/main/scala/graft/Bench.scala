@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main — runs the full query registry on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line for the driver.
@@ -17,31 +20,62 @@ import org.apache.spark.sql.SparkSession
   * query — and the reported per-query number is the MEDIAN across passes,
   * with min/max spread alongside in `"spread"`. `"value"` is the sum of
   * medians.
+  *
+  * Each sample also records the query's Spark jobs (`"jobs"`: job, stage
+  * and task counts, and the driver gaps over 50 ms between jobs) in
+  * `BENCH_full_c{cpus}.json`, so a slow query's time can be placed in its
+  * jobs or between them without the Spark UI. Both JSON lines carry the
+  * git sha and whether the work tree was dirty.
   */
 object Bench {
+  /** One timed run of one query: duration, offset from bench start, and
+    * its jobs' counts and driver gaps. */
+  private final case class Sample(sec: Double, offset: Double, jobs: Int, stages: Int,
+      tasks: Int, driverGaps: Seq[Double])
+
+  /** A job seen by the listener: start/end epoch ms, stage and task counts
+    * as planned at job start. */
+  private final case class JobRec(start: Long, stages: Int, tasks: Int,
+      @volatile var end: Long = -1L)
+
+  /** Idle stretches over 50 ms between jobs, in seconds: a job starting
+    * after every earlier-started job has ended leaves the driver alone in
+    * between (planning, footer reads, collecting to the driver). */
+  private def driverGaps(jobs: Seq[JobRec]): Seq[Double] = {
+    val byStart = jobs.sortBy(_.start)
+    // latest end among the jobs started so far
+    val endedBy = byStart.scanLeft(Long.MinValue)((end, j) => math.max(end, j.end)).tail
+    byStart.drop(1).zip(endedBy).map { case (j, end) => j.start - end }
+      .filter(_ > 50).map(_ / 1e3)
+  }
+
+  /** `"git_sha":…,"git_dirty":…` for the JSON lines; both "unknown" when
+    * git or the repository is not available. */
+  private def gitStamp(): String = {
+    import scala.sys.process._
+    val quiet = ProcessLogger(_ => ())
+    try {
+      val sha = Seq("git", "rev-parse", "HEAD").!!(quiet).trim
+      val dirty = Seq("git", "status", "--porcelain").!!(quiet).trim.nonEmpty
+      s""""git_sha":"$sha","git_dirty":$dirty"""
+    } catch { case _: Exception => """"git_sha":"unknown","git_dirty":"unknown"""" }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val git = gitStamp()
+    val spark = GraftSession.builder(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r18: the default whole-stage-codegen class cache holds 100
-      // entries — a 211-query × 3-pass run generates thousands of
-      // distinct stages, so every pass recompiled every stage (Janino,
-      // ~10-50 ms each). Size the cache for the workload's stage
-      // diversity; this is a driver/executor memory knob (cached
-      // GeneratedClass objects), not a scale-dependent tunable —
-      // parameterized anyway, same default everywhere
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      // session requirement for the TIMESTAMP(NANOS) events table
-      // (FlowAdapter.flows asserts it instead of mutating shared conf)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.put(e.jobId, JobRec(e.time, e.stageInfos.size, e.stageInfos.map(_.numTasks).sum))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(jobs.get(e.jobId)).foreach(_.end = e.time)
+    })
     // warm the JVM + parquet footers once so per-query numbers measure the
     // query, not first-touch JIT/IO
     try SparkEntry.entry(spark).foreachPartition { (_: Iterator[org.apache.spark.sql.Row]) => () }
@@ -71,11 +105,17 @@ object Bench {
     // "which wall-clock window was contended" becomes readable from
     // BENCH_full.json instead of inferred from which rows look inflated.
     val benchT0 = System.nanoTime()
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[(Double, Double)] = {
+    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Sample] = {
+      ColumnBridge.drainListenerBus(spark)
+      jobs.clear()
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).foreachPartition { (_: Iterator[org.apache.spark.sql.Row]) => () }
-        Some(((System.nanoTime() - t0) / 1e9, (t0 - benchT0) / 1e9))
+        val sec = (System.nanoTime() - t0) / 1e9
+        ColumnBridge.drainListenerBus(spark)
+        val js = jobs.values.asScala.toSeq
+        Some(Sample(sec, (t0 - benchT0) / 1e9, js.size, js.map(_.stages).sum,
+          js.map(_.tasks).sum, driverGaps(js)))
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
@@ -85,14 +125,14 @@ object Bench {
     // pass-level round-robin (rep 1 of ALL queries, then rep 2, …): a
     // transient stall poisons at most one sample per query, and the
     // median across passes rejects it
-    val passes: Seq[Seq[(String, Option[(Double, Double)])]] =
+    val passes: Seq[Seq[(String, Option[Sample])]] =
       (1 to reps).map(_ => picked.map { case (name, fn) => name -> timeOne(name, fn) })
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
     val results = picked.flatMap { case (name, _) =>
-      val samples = passes.flatMap(_.find(_._1 == name).get._2).map(_._1)
+      val samples = passes.flatMap(_.find(_._1 == name).get._2).map(_.sec)
       if (samples.size < reps) None // any failed pass disqualifies the number
       else Some((name, median(samples), samples.min, samples.max))
     }
@@ -100,20 +140,24 @@ object Bench {
       .mkString("{", ",", "}")
     val spread = results.map { case (k, _, lo, hi) => "\"" + k + f"""":[$lo%.3f,$hi%.3f]""" }
       .mkString("{", ",", "}")
+    def perSample(render: Sample => String): String = picked.flatMap { case (name, _) =>
+      val ss = passes.flatMap(_.find(_._1 == name).get._2)
+      if (ss.isEmpty) None
+      else Some("\"" + name + "\":" + ss.map(render).mkString("[", ",", "]"))
+    }.mkString("{", ",", "}")
     // per-rep [wall_offset_sec, dur_sec] pairs in pass order (file-only
     // detail — the stdout summary stays short): an inflated sample is
     // attributable to its wall-clock window, and a contended window shows
     // up as a contiguous offset range with inflated durations
-    val samplesJson = picked.flatMap { case (name, _) =>
-      val ss = passes.flatMap(_.find(_._1 == name).get._2)
-      if (ss.isEmpty) None
-      else Some("\"" + name + "\":" + ss.map { case (dur, off) =>
-        f"[$off%.1f,$dur%.3f]" }.mkString("[", ",", "]"))
-    }.mkString("{", ",", "}")
+    val samplesJson = perSample(s => f"[${s.offset}%.1f,${s.sec}%.3f]")
+    // per-rep job records, in the same order as "samples"
+    val jobsJson = perSample(s =>
+      s"""{"jobs":${s.jobs},"stages":${s.stages},"tasks":${s.tasks},"driver_gaps_s":""" +
+        s.driverGaps.map(g => f"$g%.3f").mkString("[", ",", "]}"))
     val passWall = passes.map { p =>
-      val offs = p.flatMap(_._2)
-      if (offs.isEmpty) "[0,0]"
-      else f"[${offs.map(_._2).min}%.1f,${offs.map(x => x._2 + x._1).max}%.1f]"
+      val ss = p.flatMap(_._2)
+      if (ss.isEmpty) "[0,0]"
+      else f"[${ss.map(_.offset).min}%.1f,${ss.map(s => s.offset + s.sec).max}%.1f]"
     }.mkString("[", ",", "]")
     val errJson =
       if (errors.isEmpty) ""
@@ -151,8 +195,9 @@ object Bench {
     }
     // r19 (verdict #2): stamp the core count into BOTH json lines — the
     // driver's scaling pass re-runs this main at a lower SPARK_GRAFT_CPUS
-    // and its per-query comparator needs to know which artifact is which
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","reps":$reps,"cpus":$cpus,"queries":$qs,"spread":$spread,"samples":$samplesJson,"pass_wall":$passWall$errJson$ingest,"sf":"$sfDir"}"""
+    // and its per-query comparator needs to know which artifact is which;
+    // the git stamp says which tree produced them
+    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","reps":$reps,"cpus":$cpus,$git,"queries":$qs,"spread":$spread,"samples":$samplesJson,"jobs":$jobsJson,"pass_wall":$passWall$errJson$ingest,"sf":"$sfDir"}"""
     println(line)
     // The driver's BENCH_r{N}.json keeps only a ~2 kB stdout TAIL; the full
     // line above is >10 kB, so its head (including the opening brace) is cut
@@ -160,7 +205,7 @@ object Bench {
     // summary as the FINAL stdout line — short enough that any tail ≥200
     // bytes contains it whole. Per-query detail stays in the full line and
     // in BENCH_full.json.
-    val summary = f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"cpus":$cpus,"ingest_rows_per_sec":$ingestRate,"sf":"$sfDir","detail":"BENCH_full_c$cpus.json"}"""
+    val summary = f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"cpus":$cpus,$git,"ingest_rows_per_sec":$ingestRate,"sf":"$sfDir","detail":"BENCH_full_c$cpus.json"}"""
     println(summary)
     // ALSO persist the full line in-repo: the driver's BENCH_r{N}.json
     // keeps only the tail of stdout, which truncates per-query medians

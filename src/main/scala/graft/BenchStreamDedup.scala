@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 import graft.streaming.ManifestTable
@@ -63,12 +62,8 @@ object BenchStreamDedup {
     val horizon = sys.env.getOrElse("SPARK_GRAFT_DEDUP_HORIZON", "0").toLong
     val outJson = sys.env.getOrElse("SPARK_GRAFT_DEDUP_OUT", "BENCH_stream_dedup.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.builder(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

@@ -60,15 +60,18 @@ object GraftSession {
   def getOrCreate(master: String = "local[*]"): SparkSession = {
     val spark = builder(master).getOrCreate()
     // getOrCreate returns any PRE-EXISTING session, whose static configs
-    // (extensions, warehouse) our builder could not apply — queries would
-    // then plan without GroupTopKStrategy/RenderAfterAggregate. Surface
-    // it loudly instead of running with silently different semantics.
+    // (extensions, warehouse) our builder could not apply. GraftExtensions
+    // is the only way graft enters a session, so such a session has no
+    // graft SQL functions and no GroupTopKStrategy. Surface it loudly
+    // instead of failing later at analysis or planning.
     if (!spark.conf.get("spark.sql.extensions", "").contains("GraftExtensions"))
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         "GraftSession.getOrCreate reused a session built elsewhere: " +
-        "graft.plans.GraftExtensions is NOT active (custom operators fall " +
-        "back to built-in plans). Build the session via GraftSession first, " +
-        "or add the extension to your own builder.")
+        "graft.plans.GraftExtensions is NOT active, so the session has no " +
+        "graft SQL functions (ip4_ntoa, heavy_hitters, theta_sketch, ...) " +
+        "and queries using GroupTopK fail to plan GroupTopKNode. Build the " +
+        "session via GraftSession first, or add the extension to your own " +
+        "builder.")
     // Hadoop caches one `file:` FileSystem per JVM: one created before
     // this session (or a reused session's conf) keeps the stock file
     // system, which forks chmod/readlink on every write and checkpoint
@@ -80,7 +83,6 @@ object GraftSession {
         "readlink processes. Build the session via GraftSession before any " +
         "other Hadoop file system use.")
     spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
     spark
   }
 

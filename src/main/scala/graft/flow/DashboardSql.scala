@@ -7,9 +7,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The reference's user interface IS SQL strings: Grafana posts raw
   * ClickHouse SQL against `flows_raw`/`flows_5m`
   * (`/root/reference/compose/grafana/dashboards/viz-ch.json:74,233,358,
-  * 479,604`, `viz.json:62,206`). The engine registered the codec function
-  * family for SQL from day one ([[graft.GraftFunctions.register]]); this
-  * object adds the missing half — named views plus the panel queries as
+  * 479,604`, `viz.json:62,206`). Every session built by
+  * [[graft.GraftSession]] resolves the codec function family in SQL
+  * ([[graft.GraftFunctions.sqlFunctions]]); this object adds the missing
+  * half — named views plus the panel queries as
   * SQL strings a porting user can issue near-verbatim through
   * `spark.sql`, with only dialect renames (`IPv4NumToString` →
   * `ip4_ntoa`, `toStartOfMinute` → epoch arithmetic).
@@ -27,12 +28,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object DashboardSql {
 
-  /** Register `flows_raw` and `flows_5m` temp views over `dir` plus the
-    * codec functions; afterwards every string in [[panels]] runs through
-    * `spark.sql`. `flows_5m` is the merged rollup view (read-time
-    * re-merge semantics, like querying the SummingMergeTree table). */
+  /** Register `flows_raw` and `flows_5m` temp views over `dir`; afterwards
+    * every string in [[panels]] runs through `spark.sql`. `flows_5m` is the
+    * merged rollup view (read-time re-merge semantics, like querying the
+    * SummingMergeTree table). */
   def register(spark: SparkSession, dir: String): Unit = {
-    graft.GraftFunctions.register(spark)
     FlowAdapter.flows(spark, dir).createOrReplaceTempView("flows_raw")
     FlowQueries.rollup5m(spark, dir).createOrReplaceTempView("flows_5m")
   }
@@ -205,7 +205,6 @@ object DashboardSql {
       range: Option[TimeRange] = None): Unit = {
     import org.apache.spark.sql.functions.col
     import graft.streaming.FlowStreams
-    graft.GraftFunctions.register(spark)
     val raw = range.fold(FlowStreams.readRawManaged(spark, rawTable))(r =>
       FlowStreams.readRawManagedRange(spark, rawTable, r.from, r.until))
     raw.select(

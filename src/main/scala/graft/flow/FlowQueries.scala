@@ -1205,9 +1205,7 @@ object FlowQueries {
     * projected to (proto, bytes) so boundary ties are value-deterministic
     * for the oracle. */
   def topBytesPerProto(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    import graft.plans.{GroupTopK, GroupTopKStrategy}
-    if (!spark.experimental.extraStrategies.contains(GroupTopKStrategy))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ GroupTopKStrategy
+    import graft.plans.GroupTopK
     GroupTopK.topK(fl(spark, dir), Seq(col("proto")), col("bytes"), k)
       .select("proto", "bytes")
       .orderBy(col("proto"), desc("bytes"))

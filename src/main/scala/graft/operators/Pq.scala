@@ -240,11 +240,7 @@ object Pq {
       // measured against at 50M scale
       scored
     } else {
-      import graft.plans.{GroupTopK, GroupTopKStrategy}
-      val spark = scored.sparkSession
-      if (!spark.experimental.extraStrategies.contains(GroupTopKStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ GroupTopKStrategy
+      import graft.plans.GroupTopK
       // composite heap key: higher adc_cos wins, ties to the LOWER vec_id
       // (larger -vec_id) — the oracle's ORDER BY adc_cos DESC, vec_id ASC
       GroupTopK.topK(scored, Seq(col("query_id")),

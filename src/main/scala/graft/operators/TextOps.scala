@@ -316,9 +316,7 @@ object TextOps {
     * NEGATED composite (bucket, doc_id) key, unique per document, so the
     * kept set is exact and deterministic. */
   def sourceCap(spark: SparkSession, dir: String, cap: Int = 10): DataFrame = {
-    import graft.plans.{GroupTopK, GroupTopKStrategy}
-    if (!spark.experimental.extraStrategies.contains(GroupTopKStrategy))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ GroupTopKStrategy
+    import graft.plans.GroupTopK
     val docs = Tables.documents(spark, dir).select("doc_id", "source", "lang", "n_chars")
     // bucket < 10000 < 2^14; doc_id far below 2^49 — the composite is
     // collision-free and orders by (bucket asc, doc_id asc) when negated

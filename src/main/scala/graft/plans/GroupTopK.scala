@@ -30,8 +30,8 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * boundary keep an arbitrary row but a deterministic VALUE multiset
   * (`min-heap` replacement only on strict improvement).
   *
-  * Wiring: [[GroupTopKStrategy]] plans the logical node (inject via
-  * `spark.experimental.extraStrategies` or [[GraftExtensions]]);
+  * Wiring: [[GroupTopKStrategy]] plans the logical node; [[GraftExtensions]]
+  * injects it into every session built by [[graft.GraftSession]].
   * [[GroupTopK.topK]] is the DataFrame-level API.
   */
 final case class GroupTopKNode(grouping: Seq[Expression], order: Expression,
@@ -271,8 +271,8 @@ object GroupTopKStrategy extends SparkStrategy {
 
 object GroupTopK {
   /** Top-k rows of `df` per `groupCols` group, largest `orderCol` first.
-    * Requires [[GroupTopKStrategy]] in the session (GraftExtensions or
-    * `spark.experimental.extraStrategies`). */
+    * Plans only in a session built with [[GraftExtensions]], which
+    * injects [[GroupTopKStrategy]]. */
   def topK(df: DataFrame, groupCols: Seq[Column], orderCol: Column, k: Int): DataFrame = {
     val spark: SparkSession = df.sparkSession
     ColumnBridge.ofRows(spark, GroupTopKNode(

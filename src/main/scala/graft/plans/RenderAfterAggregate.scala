@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -109,26 +108,5 @@ object RenderAfterAggregate extends Rule[LogicalPlan] {
           Project(projectList, newAgg)
         }
       }
-  }
-}
-
-/** `spark.sql.extensions` entry point: injects [[RenderAfterAggregate]] and
-  * registers the codec function family in every session built with
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => RenderAfterAggregate)
-    ext.injectPlannerStrategy(_ => GroupTopKStrategy)
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    def info(name: String) = new ExpressionInfo("graft", name)
-    ext.injectFunction((FunctionIdentifier("ip4_ntoa"), info("ip4_ntoa"),
-      (es: Seq[Expression]) => Ip4Ntoa(es.head)))
-    ext.injectFunction((FunctionIdentifier("ip6_ntoa"), info("ip6_ntoa"),
-      (es: Seq[Expression]) => Ip6Ntoa(es.head)))
-    ext.injectFunction((FunctionIdentifier("ip4_to_bin16"), info("ip4_to_bin16"),
-      (es: Seq[Expression]) => Ip4ToBin16(es.head)))
-    ext.injectFunction((FunctionIdentifier("reinterpret_uint32"), info("reinterpret_uint32"),
-      (es: Seq[Expression]) => graft.functions.ReinterpretUint32(es.head)))
   }
 }

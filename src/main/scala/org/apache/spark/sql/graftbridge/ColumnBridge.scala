@@ -7,8 +7,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Bridge to Spark's `private[sql]` Column ↔ catalyst Expression
   * converters (`org.apache.spark.sql.classic.ExpressionUtils`), so the
   * library can expose native codegen expressions through the public
-  * `Column` API. Lives in a subpackage of `org.apache.spark.sql` for
-  * access; contains no logic of its own.
+  * `Column` API, and to the `private[spark]` listener bus. Lives in a
+  * subpackage of `org.apache.spark.sql` for access; contains no logic of
+  * its own.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -33,4 +34,10 @@ object ColumnBridge {
   def logicalPlan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .queryExecution.analyzed
+
+  /** Block until every event posted so far reached every listener: the
+    * listener bus is asynchronous, so a job's end event may still be
+    * queued when the action that ran it returns. */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

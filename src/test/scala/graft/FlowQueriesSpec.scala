@@ -211,7 +211,6 @@ class FlowQueriesSpec extends SparkTestBase {
   }
 
   test("dashboard SQL through the registered function surface equals the DataFrame query") {
-    GraftFunctions.register(spark)
     FlowAdapter.flows(spark, sf).createOrReplaceTempView("flows_raw")
     // the viz-ch.json:233 panel, as literal SQL over the registered codecs
     val viaSql = spark.sql(
@@ -224,6 +223,16 @@ class FlowQueriesSpec extends SparkTestBase {
       .collect().map(_.toSeq).toSeq
     val viaDf = FlowQueries.topSrcIp(spark, sf).collect().map(_.toSeq).toSeq
     assert(viaSql === viaDf)
+    // the three parser codecs resolve in SQL too: each inverts its render,
+    // and an unaliased call is named after the function
+    val parsed = spark.sql(
+      """SELECT count(*), count_if(ip4_aton(ip4_ntoa(src_ip)) = src_ip),
+        |       count_if(ip6_aton(ip_string(ip4_to_bin16(src_ip))) = ip4_to_bin16(src_ip))
+        |FROM flows_raw""".stripMargin).head()
+    assert(parsed.getLong(0) > 0)
+    assert(parsed.getLong(1) === parsed.getLong(0) && parsed.getLong(2) === parsed.getLong(0))
+    val named = spark.sql("SELECT ip4_aton(ip4_ntoa(src_ip)) FROM flows_raw").columns.head
+    assert(named.startsWith("ip4_aton("), named)
   }
 
   test("parameterized time ranges: any (from, until) binds like the dashboard $timeFilter") {

@@ -72,7 +72,6 @@ class HeavyHittersSpec extends SparkTestBase {
   }
 
   test("SQL surface: heavy_hitters(item, capacity, k) equals the Column API; non-literal knobs fail loudly") {
-    GraftFunctions.register(spark)
     val xs = stream(40)
     xs.toDF("v").createOrReplaceTempView("hh_sql_input")
     val viaSql = spark.sql(
@@ -91,7 +90,6 @@ class HeavyHittersSpec extends SparkTestBase {
   }
 
   test("SQL surface: sketch -> fold -> merge pipeline equals the direct aggregate (r12)") {
-    GraftFunctions.register(spark)
     val xs = stream(40)
     xs.zipWithIndex.map { case (v, i) => (v, i % 4) }.toDF("v", "part")
       .createOrReplaceTempView("hh_fold_input")

@@ -109,7 +109,6 @@ class QuantileSketchSpec extends SparkTestBase {
   }
 
   test("SQL surface: quantile_sketch/quantile_merge equal the Column API; non-literal k fails loudly") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(5)
     val df = Seq.fill(120)(rnd.nextInt(10000).toDouble).toDF("v")
     df.createOrReplaceTempView("qs_sql_input")

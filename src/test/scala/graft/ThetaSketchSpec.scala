@@ -44,7 +44,6 @@ class ThetaSketchSpec extends SparkTestBase {
   }
 
   test("SQL surface: theta family equals the Column API; non-literal strict fails loudly") {
-    GraftFunctions.register(spark)
     val df = (0 until 500).map(i => (if (i % 2 == 0) "a" else "b", (i / 3).toLong))
       .toDF("g", "v")
     df.createOrReplaceTempView("th_sql_input")
@@ -85,8 +84,8 @@ class ThetaSketchSpec extends SparkTestBase {
 
   test("no graft SQL function shadows a Spark built-in; the built-in theta_union still resolves") {
     import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    // a bare new session: GraftExtensions alone brings every graft name
     val s = spark.newSession()
-    GraftFunctions.register(s)
     val reg = s.sessionState.functionRegistry
     val builtin = FunctionRegistry.builtin
     // graft's names: every function the session resolves to something
@@ -95,9 +94,10 @@ class ThetaSketchSpec extends SparkTestBase {
       builtin.lookupFunction(id).exists(_ eq reg.lookupFunction(id).get))
       .map(_.funcName).toSet
     assert(graftNames.size === 24 && graftNames.contains("theta_fold"), graftNames)
+    assert(graftNames === GraftFunctions.sqlFunctions.map(_._1).toSet)
     val shadowed = graftNames & builtin.listFunction().map(_.funcName).toSet
     assert(shadowed.isEmpty, s"graft functions shadow Spark built-ins: $shadowed")
-    // Spark's scalar theta_union over two sketches, in a registered session
+    // Spark's scalar theta_union over two sketches, in a graft session
     val n = s.sql(
       """SELECT theta_sketch_estimate(theta_union(a, b)) FROM (
         |  SELECT theta_sketch_agg(x) AS a, theta_sketch_agg(y) AS b
