@@ -205,7 +205,10 @@ object Bench {
     // summary as the FINAL stdout line — short enough that any tail ≥200
     // bytes contains it whole. Per-query detail stays in the full line and
     // in BENCH_full.json.
-    val summary = f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"cpus":$cpus,$git,"ingest_rows_per_sec":$ingestRate,"sf":"$sfDir","detail":"BENCH_full_c$cpus.json"}"""
+    // "detail" names the file the full line goes to (written below)
+    val detail = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH_full_c$cpus.json")
+    val outFile = new java.io.File(detail).getAbsolutePath
+    val summary = f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"cpus":$cpus,$git,"ingest_rows_per_sec":$ingestRate,"sf":"$sfDir","detail":"$detail"}"""
     println(summary)
     // ALSO persist the full line in-repo: the driver's BENCH_r{N}.json
     // keeps only the tail of stdout, which truncates per-query medians
@@ -221,8 +224,6 @@ object Bench {
     // BENCH_full.json. BENCH_full.json is still written for back-compat
     // readers, but it is now a copy of the LAST run, while
     // BENCH_full_c{cpus}.json is the stable per-configuration artifact.
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      new java.io.File(s"BENCH_full_c$cpus.json").getAbsolutePath)
     try {
       java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), line + "\n")
       if (!sys.env.contains("SPARK_GRAFT_BENCH_OUT")) {

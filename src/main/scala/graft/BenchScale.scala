@@ -198,24 +198,22 @@ object BenchScale {
         val triggerDiv = sys.env.getOrElse("SPARK_GRAFT_INGEST_TRIGGER_DIV", "16").toInt
         val stream = ProtoCodec.binaryFileStream(spark, wireDir,
           Map("maxFilesPerTrigger" -> (genFiles / triggerDiv).toString)).toDF()
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val b = batch.persist()
-            try {
-              // r17 verdict #1: repartitionForWrite keeps every core
-              // encoding parquet while bounding the batch to ~one file
-              // per task — the low-amp A/B's 30x file reduction WITHOUT
-              // its 6-task CPU ceiling (salt = the cheap sequence key)
-              ManifestTable.append(
-                Storage.repartitionForWrite(FlowStreams.projectRaw(b),
-                  "event_date", cpus.toInt, Some(col("sequenceNum"))),
-                rawTable, Some("event_date"), id, Some("timeReceived"))
-              ManifestTable.append(FlowStreams.rollupPartials(b), rollupTable, Some("event_date"), id,
-                Some("timeslot"))
-            } finally { b.unpersist(); () }
-          }
-          .option("checkpointLocation", checkpoint)
-          .start()
+        val q = FlowStreams.startBatches(stream, checkpoint,
+            FlowStreams.SparkDefaultTrigger) { (batch, id) =>
+          val b = batch.persist()
+          try {
+            // r17 verdict #1: repartitionForWrite keeps every core
+            // encoding parquet while bounding the batch to ~one file
+            // per task — the low-amp A/B's 30x file reduction WITHOUT
+            // its 6-task CPU ceiling (salt = the cheap sequence key)
+            ManifestTable.append(
+              Storage.repartitionForWrite(FlowStreams.projectRaw(b),
+                "event_date", cpus.toInt, Some(col("sequenceNum"))),
+              rawTable, Some("event_date"), id, Some("timeReceived"))
+            ManifestTable.append(FlowStreams.rollupPartials(b), rollupTable, Some("event_date"), id,
+              Some("timeslot"))
+          } finally { b.unpersist(); () }
+        }
         // online compaction RACES the running stream (r2 had to stop it).
         // The stop flag (not q.isActive) serializes against the FINAL
         // compaction below — and even a true overlap is safe now: a swap
@@ -341,19 +339,17 @@ object BenchScale {
       try {
         val stream = ProtoCodec.binaryFileStream(spark, wireDir,
           Map("maxFilesPerTrigger" -> (genFiles / 8).toString)).toDF()
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val b = batch.persist()
-            try {
-              ManifestTable.append(
-                FlowStreams.projectRaw(b).repartition(col("event_date")),
-                rawTableB, Some("event_date"), id, Some("timeReceived"))
-              ManifestTable.append(FlowStreams.rollupPartials(b),
-                rollupTableB, Some("event_date"), id, Some("timeslot"))
-            } finally { b.unpersist(); () }
-          }
-          .option("checkpointLocation", checkpointB)
-          .start()
+        val q = FlowStreams.startBatches(stream, checkpointB,
+            FlowStreams.SparkDefaultTrigger) { (batch, id) =>
+          val b = batch.persist()
+          try {
+            ManifestTable.append(
+              FlowStreams.projectRaw(b).repartition(col("event_date")),
+              rawTableB, Some("event_date"), id, Some("timeReceived"))
+            ManifestTable.append(FlowStreams.rollupPartials(b),
+              rollupTableB, Some("event_date"), id, Some("timeslot"))
+          } finally { b.unpersist(); () }
+        }
         q.processAllAvailable()
         q.stop()
       } finally spark.conf.set("spark.sql.parquet.compression.codec", oldCodec)

@@ -112,7 +112,7 @@ object BenchStreamDedup {
       // its cost is part of the operator's honest steady state.
       val c0 = System.nanoTime()
       if (compactEvery > 0 && b % compactEvery == 0)
-        Dedup.compactNearDupIndex(spark, idx, 1, eraSpan)
+        Dedup.compactNearDupIndex(spark, idx, eraSpan)
       val cSec = (System.nanoTime() - c0) / 1e9
       // mirror startStreamingNearDup: with a horizon, retire index files no
       // probe can select again — the storage side of the steady state

@@ -39,14 +39,18 @@ object Verify {
     // (CORRECTNESS_r01.json: every row "no_oracle"). Emit each oracle under
     // BOTH key forms, in every plausible location the driver might read:
     //   - outDir/oracle_sql.json      (primary contract)
-    //   - repo-root oracle_sql.json   (fallback)
+    //   - ./oracle_sql.json           (fallback, in the working directory:
+    //                                  the checkout a run starts from)
     //   - outDir/<name>.sql           (per-query sidecar)
     val json = SparkEntry.oracleSql
       .flatMap { case (k, v) => Seq(k -> v, s"$k.parquet" -> v) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    try Files.writeString(Paths.get("/root/repo/oracle_sql.json"), json)
-    catch { case _: Throwable => () }
+    val fallback = Paths.get("oracle_sql.json").toAbsolutePath
+    try Files.writeString(fallback, json)
+    catch { case e: java.io.IOException =>
+      System.err.println(s"[verify] could not write $fallback: ${e.getMessage}")
+    }
     SparkEntry.oracleSql.foreach { case (k, v) =>
       try Files.writeString(Paths.get(s"$outDir/$k.sql"), v)
       catch { case _: Throwable => () }

@@ -995,60 +995,58 @@ object Dedup {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(sweepEvery == 0 || probeHorizon > 0L,
       "sweepEvery is the horizon-escapee cadence — it needs probeHorizon > 0")
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        nearDupBatch(b, id, textCol, idCol, indexDir, outDir, threshold, numHashes,
-          bands, indexBuckets, probeHorizon)
-        if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
-          // era-scope the folds to the probe horizon: a fold that mixed
-          // in-horizon and beyond-horizon batches in one file would pin
-          // the whole file inside every future probe's range prune
-          compactNearDupIndex(b.sparkSession, indexDir,
-            eraSpan = probeHorizon); ()
-        }
-        if (sweepEvery > 0 && (id + 1) % sweepEvery == 0)
-          // retrospective self-purge (r11 carried #2): adjudicate the
-          // output window [frontier, id] against the pre-window index on
-          // the sweep cadence — async on the maintenance thread, off the
-          // trigger's critical path, frontier persisted on completion
-          scheduleEscapeeSweep(b.sparkSession, indexDir, outDir, upTo = id + 1,
-            textCol, idCol, threshold, numHashes, bands, indexBuckets)
-        if (probeHorizon > 0L) {
-          // storage-side horizon: retire index files no probe can select
-          // again (max src_batch entirely below the horizon); O(manifest)
-          // driver work per batch. With the sweep cadence on, retention is
-          // bounded by the SWEEP FRONTIER instead of the live horizon:
-          // the sweep of window [frontier, now) probes index
-          // [frontier - H, frontier), so those files must survive until
-          // the frontier passes them — total retention ~2H in batches,
-          // still O(horizon), never O(corpus).
-          // ... unless the sweep is persistently failing: a stuck
-          // frontier would silently disable expiry and retention would
-          // grow O(corpus lifetime) — after MaxSweepFailures consecutive
-          // failures, fall back to live-horizon expiry (bounded retention
-          // wins over retrospective purging; resets on the next success)
-          val frontierUsable =
-            sweepEvery > 0 && consecutiveSweepFailures(outDir) < MaxSweepFailures
-          val expiryHi =
-            if (frontierUsable) math.min(id + 1, sweepFrontier(outDir)) else id + 1
-          expireNearDupIndex(indexDir, expiryHi - probeHorizon)
-          // ... and reclaim the BYTES — without this the manifest is
-          // O(horizon) but the directory still grows O(corpus lifetime)
-          // in dead files. Vacuum is pure directory hygiene (listing +
-          // deletes, no query reads the files it removes), so it runs OFF
-          // the batch critical path on a daemon thread (r10 carried #3:
-          // a slow object-store listing must not stall the trigger), on
-          // its own cadence (`vacuumEvery`; defaults to the compaction
-          // cadence). The lease guard makes the async run safe against a
-          // concurrent holder (defers: -1), and the pending flag keeps a
-          // slow vacuum from queueing behind itself.
-          val cadence = if (vacuumEvery > 0) vacuumEvery else compactEvery
-          if (cadence > 0 && (id + 1) % cadence == 0)
-            scheduleVacuum(indexDir, vacuumGraceSeconds)
-        }
+    graft.streaming.FlowStreams.startBatches(stream, checkpoint,
+        graft.streaming.FlowStreams.SparkDefaultTrigger) { (b, id) =>
+      nearDupBatch(b, id, textCol, idCol, indexDir, outDir, threshold, numHashes,
+        bands, indexBuckets, probeHorizon)
+      if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
+        // era-scope the folds to the probe horizon: a fold that mixed
+        // in-horizon and beyond-horizon batches in one file would pin
+        // the whole file inside every future probe's range prune
+        compactNearDupIndex(b.sparkSession, indexDir,
+          eraSpan = probeHorizon); ()
       }
-      .start()
+      if (sweepEvery > 0 && (id + 1) % sweepEvery == 0)
+        // retrospective self-purge (r11 carried #2): adjudicate the
+        // output window [frontier, id] against the pre-window index on
+        // the sweep cadence — async on the maintenance thread, off the
+        // trigger's critical path, frontier persisted on completion
+        scheduleEscapeeSweep(b.sparkSession, indexDir, outDir, upTo = id + 1,
+          textCol, idCol, threshold, numHashes, bands, indexBuckets)
+      if (probeHorizon > 0L) {
+        // storage-side horizon: retire index files no probe can select
+        // again (max src_batch entirely below the horizon); O(manifest)
+        // driver work per batch. With the sweep cadence on, retention is
+        // bounded by the SWEEP FRONTIER instead of the live horizon:
+        // the sweep of window [frontier, now) probes index
+        // [frontier - H, frontier), so those files must survive until
+        // the frontier passes them — total retention ~2H in batches,
+        // still O(horizon), never O(corpus).
+        // ... unless the sweep is persistently failing: a stuck
+        // frontier would silently disable expiry and retention would
+        // grow O(corpus lifetime) — after MaxSweepFailures consecutive
+        // failures, fall back to live-horizon expiry (bounded retention
+        // wins over retrospective purging; resets on the next success)
+        val frontierUsable =
+          sweepEvery > 0 && consecutiveSweepFailures(outDir) < MaxSweepFailures
+        val expiryHi =
+          if (frontierUsable) math.min(id + 1, sweepFrontier(outDir)) else id + 1
+        expireNearDupIndex(indexDir, expiryHi - probeHorizon)
+        // ... and reclaim the BYTES — without this the manifest is
+        // O(horizon) but the directory still grows O(corpus lifetime)
+        // in dead files. Vacuum is pure directory hygiene (listing +
+        // deletes, no query reads the files it removes), so it runs OFF
+        // the batch critical path on a daemon thread (r10 carried #3:
+        // a slow object-store listing must not stall the trigger), on
+        // its own cadence (`vacuumEvery`; defaults to the compaction
+        // cadence). The lease guard makes the async run safe against a
+        // concurrent holder (defers: -1), and the pending flag keeps a
+        // slow vacuum from queueing behind itself.
+        val cadence = if (vacuumEvery > 0) vacuumEvery else compactEvery
+        if (cadence > 0 && (id + 1) % cadence == 0)
+          scheduleVacuum(indexDir, vacuumGraceSeconds)
+      }
+    }
   }
 
   // ------------------------------------- horizon-escapee sweep cadence
@@ -1275,21 +1273,15 @@ object Dedup {
   }
 
   /** ONLINE compaction of the streaming near-dup signature index: fold
-    * every fragmented bucket to ONE file and swap the folds in one
-    * manifest commit per table, stream still running. Without it an
-    * always-on ingest appends one file per probed bucket per micro-batch
-    * (~17k batches/day at a 5-second trigger), and probe cost degrades
-    * from O(bucket bytes) to O(bucket files × parquet footer). One file
-    * per bucket is the right target — the bucket is the probe's
-    * parallelism unit, and the repartition-by-bucket rewrite lands each
-    * bucket in exactly one task/file. Partition-selective like
-    * [[graft.streaming.FlowStreams.compactRawOnline]]: only buckets
-    * holding more than `fragmentThreshold` files are read or rewritten,
-    * so a merge cycle costs ∝ fresh fragmentation, not index size. The
-    * `src_batch` column rides through untouched — the reader's
-    * `src_batch < batchId` replay guard keeps working on folded files —
-    * and a swap whose snapshot went stale aborts cleanly, so racing the
-    * stream is safe.
+    * every fragmented bucket to ONE file per table through
+    * [[graft.streaming.ManifestTable.compact]], stream still running.
+    * Without it an always-on ingest appends one file per probed bucket
+    * per micro-batch (~17k batches/day at a 5-second trigger), and probe
+    * cost degrades from O(bucket bytes) to O(bucket files × parquet
+    * footer). One file per bucket is the right target — the bucket is the
+    * probe's parallelism unit. The `src_batch` column rides through
+    * untouched, so the reader's `src_batch < batchId` replay guard keeps
+    * working on folded files.
     *
     * `eraSpan` > 0 folds within ERAS of that many batches (era =
     * min `src_batch` / eraSpan, from the manifest stats): folded files
@@ -1300,48 +1292,15 @@ object Dedup {
     * state is ≤ (H/eraSpan + 1) files per bucket in-horizon. `eraSpan`
     * = 0 folds whole buckets (right when every batch is probed forever). */
   def compactNearDupIndex(spark: SparkSession, indexDir: String,
-      fragmentThreshold: Int = 1, eraSpan: Long = 0L): Boolean = {
-    val bands = compactBucketed(spark, s"$indexDir/bands", fragmentThreshold, eraSpan)
-    val shingles = compactBucketed(spark, s"$indexDir/shingles", fragmentThreshold, eraSpan)
+      eraSpan: Long = 0L): Boolean = {
+    // the hash-repartition on the bucket column lands each bucket whole in
+    // one task: one file per bucket dir (per era)
+    def compact(table: String, bucketCol: String): Boolean =
+      graft.streaming.ManifestTable.compact(spark, s"$indexDir/$table", Some(bucketCol),
+        Some("src_batch"), eraSpan = eraSpan)((rows, n) => rows.repartition(n, col(bucketCol)))
+    val bands = compact("bands", "bh_bucket")
+    val shingles = compact("shingles", "doc_bucket")
     bands && shingles
-  }
-
-  private def compactBucketed(spark: SparkSession, table: String,
-      fragmentThreshold: Int, eraSpan: Long = 0L): Boolean = {
-    import graft.streaming.ManifestTable
-    val (_, entries) = ManifestTable.snapshotEntries(table)
-    if (entries.isEmpty) return true
-    // group key: (bucket dir, era) — files without src_batch stats (legacy
-    // appends) fold in era -1 among themselves, conservatively readable
-    // as before
-    def eraOf(e: ManifestTable.FileEntry): Long = e.stats match {
-      case Some(("src_batch", mn, _)) if eraSpan > 0L => mn / eraSpan
-      case _ => -1L
-    }
-    val byBucket = entries.groupBy(e => (ManifestTable.partitionDir(e.path), eraOf(e)))
-    // legacy unpartitioned files (empty dir group) are left alone: mixing
-    // them into a bucket-partitioned rewrite would misfile them
-    val fragmentedGroups = byBucket.filter { case ((d, _), fs) =>
-      d.nonEmpty && fs.size > fragmentThreshold }
-    if (fragmentedGroups.isEmpty) return true
-    fragmentedGroups.keysIterator.map(_._1).find(_.nonEmpty).map(_.takeWhile(_ != '=')) match {
-      case None => true // unreachable: every group dir above is non-empty
-      case Some(bucketCol) =>
-        // one swap per era keeps each fold's output files within one era,
-        // so their re-recorded footer stats stay horizon-skippable; all
-        // eras' swaps commit independently (each aborts cleanly on a
-        // stale snapshot)
-        fragmentedGroups.groupBy(_._1._2).forall { case (_, groups) =>
-          val fragmented = groups.values.flatten.map(_.path).toSeq
-          // hash-repartition on the bucket column: each bucket lands whole
-          // in one task → one file per bucket dir (per era)
-          val compacted = spark.read.option("basePath", table)
-            .parquet(fragmented.map(f => s"$table/$f"): _*)
-            .repartition(math.max(1, groups.size), col(bucketCol))
-          ManifestTable.swap(compacted, table, Some(bucketCol), fragmented,
-            statsCol = Some("src_batch"))
-        }
-    }
   }
 
   /** Last [[nearDupBatch]] phase attribution keyed by outDir:

@@ -584,27 +584,11 @@ object Pq {
       model.codeIds.zipWithIndex.map { case (id, j) => (j, id) }
         .toDF("code", "seed_vec_id"),
       s"$indexDir/codeids", None, 0L)
-    // replay guard BEFORE the append (the buildIvfIndex pattern): a re-run
-    // over an already-built index is a no-op inside append — no job runs,
-    // so Observation.get would block forever
-    val replay = ManifestTable.hasBatch(s"$indexDir/cells", 0L)
-    val obs = org.apache.spark.sql.Observation()
-    ManifestTable.append(encodeCells(emb, cents, model, Some(obs)),
-      s"$indexDir/cells", Some("cid_part"), 0L)
-    if (!replay) Similarity.recordDrift(indexDir, 0L, obs)
-    else {
-      // ADVICE r17: replay after a crash between the batch-0 commit and the
-      // drift write re-derives the missing BASELINE line (the
-      // appendToIvfPqIndexBatch replay contract) — otherwise needsRetrain
-      // has no baseline and the retrain trigger is silently dead
-      val io = ManifestTable.io(s"$indexDir/cells")
-      if (!io.exists(java.nio.file.Paths.get(indexDir, "drift", "b0"))) {
-        val obs0 = org.apache.spark.sql.Observation()
-        encodeCells(emb, cents, model, Some(obs0))
-          .write.mode("overwrite").format("noop").save()
-        Similarity.recordDrift(indexDir, 0L, obs0)
-      }
-    }
+    // a replay after a crash between the batch-0 commit and the drift
+    // write re-derives the missing BASELINE line — otherwise needsRetrain
+    // has no baseline and the retrain trigger is silently dead
+    Similarity.appendWithDrift(s"$indexDir/cells", "cid_part", indexDir, 0L)(
+      obs => encodeCells(emb, cents, model, Some(obs)))
   }
 
   /** Rehydrate the persisted codebook as a driver [[PqModel]] (bounded:
@@ -644,23 +628,9 @@ object Pq {
     import graft.streaming.ManifestTable
     require(manifestBatch > 0L, "manifest batch 0 is the build baseline")
     val spark = newVecs.sparkSession
-    if (ManifestTable.hasBatch(s"$indexDir/cells", manifestBatch)) {
-      val io = ManifestTable.io(s"$indexDir/cells")
-      if (!io.exists(java.nio.file.Paths.get(indexDir, "drift", s"b$manifestBatch"))) {
-        val cents0 = ManifestTable.read(spark, s"$indexDir/centroids")
-        val obs0 = org.apache.spark.sql.Observation()
-        encodeCells(newVecs, cents0, readIvfPqModel(spark, indexDir), Some(obs0))
-          .write.mode("overwrite").format("noop").save()
-        Similarity.recordDrift(indexDir, manifestBatch, obs0)
-      }
-      return
-    }
-    val cents = ManifestTable.read(spark, s"$indexDir/centroids")
-    val model = readIvfPqModel(spark, indexDir)
-    val obs = org.apache.spark.sql.Observation()
-    ManifestTable.append(encodeCells(newVecs, cents, model, Some(obs)),
-      s"$indexDir/cells", Some("cid_part"), manifestBatch)
-    Similarity.recordDrift(indexDir, manifestBatch, obs)
+    Similarity.appendWithDrift(s"$indexDir/cells", "cid_part", indexDir, manifestBatch)(
+      obs => encodeCells(newVecs, ManifestTable.read(spark, s"$indexDir/centroids"),
+        readIvfPqModel(spark, indexDir), Some(obs)))
   }
 
   /** Close the code-cell index's retrain loop (r16 verdict #3): when the
@@ -701,15 +671,11 @@ object Pq {
     * [[retrainIvfPqIndex]] read the stream's quality trajectory with no
     * extra pass. One streaming writer per index dir. */
   def startStreamingIvfPqAppend(vecs: DataFrame, indexDir: String,
-      checkpoint: String, triggerMs: Long = 5000L)
+      checkpoint: String,
+      trigger: org.apache.spark.sql.streaming.Trigger = graft.streaming.FlowStreams.DefaultTrigger)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        appendToIvfPqIndexBatch(batch, indexDir, id + 1L)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .start()
+    graft.streaming.FlowStreams.startBatches(vecs, checkpoint, trigger)(
+      (batch, id) => appendToIvfPqIndexBatch(batch, indexDir, id + 1L))
 
   /** Serve top-k from the MATERIALIZED IVF-PQ index: rank cells per
     * query against the broadcast centroid table, read ONLY the probed

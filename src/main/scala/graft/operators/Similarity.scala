@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
 import graft.Tables
@@ -374,27 +375,9 @@ object Similarity {
     * signature" layout the LSH scaladoc promises. 8 bits → ≤256 partition
     * dirs; the payload moves once (repartition by bucket at build), and a
     * rebuild is one atomic manifest commit. */
-  def buildLshIndex(emb: DataFrame, indexDir: String, bits: Int = 8): Unit = {
-    import graft.streaming.ManifestTable
-    val table = s"$indexDir/buckets"
-    // replay guard BEFORE the append (the buildIvfIndex contract): on a
-    // re-run over a built index no job runs and Observation.get would
-    // block forever
-    val replay = ManifestTable.hasBatch(table, 0L)
-    val obs = org.apache.spark.sql.Observation()
-    ManifestTable.append(observedSign(emb, bits, obs), table,
-      Some("sig_part"), 0L)
-    if (!replay) recordDrift(indexDir, 0L, obs)
-    else {
-      val io = ManifestTable.io(table)
-      if (!io.exists(java.nio.file.Paths.get(indexDir, "drift", "b0"))) {
-        val obs0 = org.apache.spark.sql.Observation()
-        observedSign(emb, bits, obs0)
-          .write.mode("overwrite").format("noop").save()
-        recordDrift(indexDir, 0L, obs0)
-      }
-    }
-  }
+  def buildLshIndex(emb: DataFrame, indexDir: String, bits: Int = 8): Unit =
+    appendWithDrift(s"$indexDir/buckets", "sig_part", indexDir, 0L)(
+      observedSign(emb, bits, _))
 
   /** INCREMENTAL append to a materialized LSH index: sign only the new
     * vectors (hyperplanes are deterministic — no retraining, the family
@@ -424,60 +407,27 @@ object Similarity {
     * replayed batch is a manifest no-op. One streaming writer per index
     * dir. */
   def startStreamingLshAppend(vecs: DataFrame, indexDir: String,
-      checkpoint: String, bits: Int = 8, triggerMs: Long = 5000L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        appendToLshIndexBatch(batch, indexDir, id + 1L, bits)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .start()
+      checkpoint: String, bits: Int = 8,
+      trigger: Trigger = graft.streaming.FlowStreams.DefaultTrigger): StreamingQuery =
+    graft.streaming.FlowStreams.startBatches(vecs, checkpoint, trigger)(
+      (batch, id) => appendToLshIndexBatch(batch, indexDir, id + 1L, bits))
 
   /** The exactly-once micro-batch body of [[startStreamingLshAppend]],
     * exposed for combined-sink pipelines ([[graft.streaming.FlowPipeline]]):
     * a replayed manifest batch is a no-op before any job runs, so one
     * re-delivered micro-batch can land in several sinks with each sink
-    * committing at most once. */
+    * committing at most once; a replay whose drift line is missing
+    * re-derives it ([[graft.streaming.ManifestTable.appendObserved]]). */
   def appendToLshIndexBatch(batch: DataFrame, indexDir: String,
-      manifestBatch: Long, bits: Int = 8): Unit = {
-    import graft.streaming.ManifestTable
-    val table = s"$indexDir/buckets"
-    if (ManifestTable.hasBatch(table, manifestBatch)) {
-      // replayed delivery whose drift line is missing (crash landed
-      // between the manifest commit and recordDrift): re-derive the
-      // observation from the re-delivered rows, no second manifest write
-      // — the appendToIvfIndexBatch replay contract
-      val io = ManifestTable.io(table)
-      if (!io.exists(java.nio.file.Paths.get(indexDir, "drift",
-          s"b$manifestBatch"))) {
-        val obs0 = org.apache.spark.sql.Observation()
-        observedSign(batch, bits, obs0)
-          .write.mode("overwrite").format("noop").save()
-        recordDrift(indexDir, manifestBatch, obs0)
-      }
-      return
-    }
-    val obs = org.apache.spark.sql.Observation()
-    ManifestTable.append(observedSign(batch, bits, obs), table,
-      Some("sig_part"), manifestBatch)
-    recordDrift(indexDir, manifestBatch, obs)
-  }
+      manifestBatch: Long, bits: Int = 8): Unit =
+    appendWithDrift(s"$indexDir/buckets", "sig_part", indexDir, manifestBatch)(
+      observedSign(batch, bits, _))
 
   /** Online bucket compaction for the LSH index — [[compactIvfCells]]
-    * over `sig_part` bucket dirs; same atomic result-invisible swap,
-    * same race-abort-retry posture against a running maintainer. */
+    * over `sig_part` bucket dirs. */
   def compactLshBuckets(spark: SparkSession, indexDir: String,
-      filesPerBucket: Int = 1): Boolean = {
-    import graft.streaming.ManifestTable
-    val table = s"$indexDir/buckets"
-    val fragmented = ManifestTable.filesByPartition(ManifestTable.snapshot(table)._2)
-      .filter(_._2.size > filesPerBucket).values.flatten.toSeq
-    if (fragmented.isEmpty) return true
-    val compacted = ManifestTable.readSelected(spark, table, fragmented)
-      .repartition(col("sig_part"))
-    ManifestTable.swap(compacted, table, Some("sig_part"), fragmented)
-  }
+      filesPerBucket: Int = 1): Boolean =
+    compactBuckets(spark, s"$indexDir/buckets", "sig_part", filesPerBucket)
 
   /** Serve top-k from the materialized LSH index: sign the queries, expand
     * the multi-probe masks (hamming ≤ probeDist), collect the probed
@@ -809,29 +759,12 @@ object Similarity {
     val cents = kmeansCentroids(emb, nCentroids, kmeansIters, hashSeeds, trainBuckets)
     ManifestTable.append(cents.select(col("cid"), col("c_emb")),
       s"$indexDir/centroids", None, 0L)
-    // replay guard BEFORE the append: a re-run over an already-built index
-    // (the natural retry after a crash between commit and drift write) is
-    // a no-op inside append — no job runs, so Observation.get would block
-    // forever waiting for an action that never happens
-    val replay = ManifestTable.hasBatch(s"$indexDir/cells", 0L)
-    val obs = org.apache.spark.sql.Observation()
-    val assigned = observedAssign(withNearestCid(emb, cents), obs)
-    ManifestTable.append(assigned, s"$indexDir/cells", Some("cid_part"), 0L)
-    if (!replay) recordDrift(indexDir, 0L, obs)
-    else {
-      // ADVICE r17: a retry after a crash between the batch-0 commit and
-      // the drift write must re-derive the BASELINE line (the
-      // appendToIvfIndexBatch replay contract) — without it needsRetrain
-      // has no baseline and stays false forever, silently disabling the
-      // retrain trigger
-      val io = ManifestTable.io(s"$indexDir/cells")
-      if (!io.exists(java.nio.file.Paths.get(indexDir, "drift", "b0"))) {
-        val obs0 = org.apache.spark.sql.Observation()
-        observedAssign(withNearestCid(emb, cents), obs0)
-          .write.mode("overwrite").format("noop").save()
-        recordDrift(indexDir, 0L, obs0)
-      }
-    }
+    // a retry after a crash between the batch-0 commit and the drift write
+    // re-derives the BASELINE line — without it needsRetrain has no
+    // baseline and stays false forever, silently disabling the retrain
+    // trigger
+    appendWithDrift(s"$indexDir/cells", "cid_part", indexDir, 0L)(
+      observedAssign(withNearestCid(emb, cents), _))
   }
 
   /** INCREMENTAL append to a materialized IVF index: assign only the new
@@ -875,53 +808,32 @@ object Similarity {
       manifestBatch: Long): Unit = {
     import graft.streaming.ManifestTable
     require(manifestBatch > 0L, "manifest batch 0 is the build baseline")
-    if (ManifestTable.hasBatch(s"$indexDir/cells", manifestBatch)) {
-      // replayed delivery: the cells commit is durable, but a crash
-      // between that commit and recordDrift lost this batch's drift line
-      // — re-derive the observation from the re-delivered rows (no
-      // manifest write) so the one-line-per-batch contract survives the
-      // crash window
-      val io = ManifestTable.io(s"$indexDir/cells")
-      if (!io.exists(java.nio.file.Paths.get(indexDir, "drift", s"b$manifestBatch"))) {
-        val cents0 = ManifestTable.read(newVecs.sparkSession, s"$indexDir/centroids")
-        val obs0 = org.apache.spark.sql.Observation()
-        observedAssign(withNearestCid(newVecs, cents0), obs0)
-          .write.mode("overwrite").format("noop").save()
-        recordDrift(indexDir, manifestBatch, obs0)
-      }
-      return
+    appendWithDrift(s"$indexDir/cells", "cid_part", indexDir, manifestBatch) { obs =>
+      val cents = ManifestTable.read(newVecs.sparkSession, s"$indexDir/centroids")
+      observedAssign(withNearestCid(newVecs, cents), obs)
     }
-    val cents = ManifestTable.read(newVecs.sparkSession, s"$indexDir/centroids")
-    val obs = org.apache.spark.sql.Observation()
-    val assigned = observedAssign(withNearestCid(newVecs, cents), obs)
-    ManifestTable.append(assigned, s"$indexDir/cells", Some("cid_part"), manifestBatch)
-    recordDrift(indexDir, manifestBatch, obs)
   }
 
   /** ONLINE IVF cell compaction — the operational complement of the
     * streaming maintainer: every micro-batch append adds one file per
     * touched cell, so an always-on feed fragments the index
-    * (probe latency = files opened per probed cell). Rewrite every cell
-    * holding more than `filesPerCell` files into one file and swap them
-    * in a single atomic manifest commit — concurrent with appends and
-    * probes, the [[graft.streaming.FlowStreams.compactRawOnline]]
-    * protocol: a swap whose snapshot went stale (an append landed
-    * mid-rewrite) aborts harmlessly and the next call retries; probes
-    * see the pre- or post-compaction manifest, never a mix. Centroids,
-    * assignments, and drift lines are untouched — compaction is
-    * result-invisible by construction and the spec asserts it. Returns
-    * false on a lost race. */
+    * (probe latency = files opened per probed cell). Rewrites every cell
+    * holding more than `filesPerCell` files into one file through
+    * [[graft.streaming.ManifestTable.compact]], concurrent with appends
+    * and probes. Centroids, assignments, and drift lines are untouched —
+    * compaction is result-invisible by construction and the spec asserts
+    * it. Returns false on a lost race. */
   def compactIvfCells(spark: SparkSession, indexDir: String,
-      filesPerCell: Int = 1): Boolean = {
-    import graft.streaming.ManifestTable
-    val table = s"$indexDir/cells"
-    val fragmented = ManifestTable.filesByPartition(ManifestTable.snapshot(table)._2)
-      .filter(_._2.size > filesPerCell).values.flatten.toSeq
-    if (fragmented.isEmpty) return true
-    val compacted = ManifestTable.readSelected(spark, table, fragmented)
-      .repartition(col("cid_part"))
-    ManifestTable.swap(compacted, table, Some("cid_part"), fragmented)
-  }
+      filesPerCell: Int = 1): Boolean =
+    compactBuckets(spark, s"$indexDir/cells", "cid_part", filesPerCell)
+
+  /** One file per fragmented bucket directory of an index table: the
+    * hash-repartition on the bucket column lands each bucket whole in one
+    * task. */
+  private def compactBuckets(spark: SparkSession, table: String,
+      bucketCol: String, threshold: Int): Boolean =
+    graft.streaming.ManifestTable.compact(spark, table, Some(bucketCol), None, threshold)(
+      (rows, n) => rows.repartition(n, col(bucketCol)))
 
   /** STREAMING IVF index maintenance — the missing tier between "build
     * once" and "retrain": a micro-batch sink that keeps a materialized
@@ -938,15 +850,10 @@ object Similarity {
     * (the id mapping is the exactly-once contract; mixing in manual
     * [[appendToIvfIndex]] calls would collide ids). */
   def startStreamingIvfAppend(vecs: DataFrame, indexDir: String,
-      checkpoint: String, triggerMs: Long = 5000L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        appendToIvfIndexBatch(batch, indexDir, id + 1L)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .start()
+      checkpoint: String,
+      trigger: Trigger = graft.streaming.FlowStreams.DefaultTrigger): StreamingQuery =
+    graft.streaming.FlowStreams.startBatches(vecs, checkpoint, trigger)(
+      (batch, id) => appendToIvfIndexBatch(batch, indexDir, id + 1L))
 
   /** The cell layout projection with the drift metrics observed on the
     * same plan the append writes — count/mean/p05/p95 of the winning
@@ -986,6 +893,19 @@ object Similarity {
     else ManifestTable.io(s"$indexDir/cells")
   }
 
+  /** Where batch `batch`'s drift line of the index at `indexDir` lives. */
+  private def driftPath(indexDir: String, batch: Long): java.nio.file.Path =
+    java.nio.file.Paths.get(indexDir, "drift", s"b$batch")
+
+  /** The replay-guarded index commit with its drift line
+    * ([[graft.streaming.ManifestTable.appendObserved]]): every build and
+    * streaming append of the three indexes commits through here. */
+  private[operators] def appendWithDrift(table: String, bucketCol: String,
+      indexDir: String, batch: Long)
+      (plan: org.apache.spark.sql.Observation => DataFrame): Unit =
+    graft.streaming.ManifestTable.appendObserved(table, Some(bucketCol), batch,
+      driftPath(indexDir, batch))(plan)(recordDrift(indexDir, batch, _))
+
   private[operators] def recordDrift(indexDir: String, batch: Long,
       obs: org.apache.spark.sql.Observation): Unit = {
     val m = obs.get
@@ -995,8 +915,7 @@ object Similarity {
       case v: java.lang.Number => v.doubleValue()
     }
     val line = s"$n,${d("mean_cos")},${d("p05_cos")},${d("p95_cos")}"
-    try driftIo(indexDir).write(
-      java.nio.file.Paths.get(indexDir, "drift", s"b$batch"), line.getBytes("UTF-8"))
+    try driftIo(indexDir).write(driftPath(indexDir, batch), line.getBytes("UTF-8"))
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"graft: drift line b$batch for $indexDir lost (${e.getMessage})")
     }

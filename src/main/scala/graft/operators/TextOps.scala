@@ -646,6 +646,10 @@ object TextOps {
       avg(col("q_mean_milli")).as("mean_milli"),
       avg(col("q_keep").cast("double")).as("keep_rate"))
 
+  /** Where batch `batch`'s quality-drift line lives. */
+  private def qualityLinePath(outTable: String, batch: Long): java.nio.file.Path =
+    java.nio.file.Paths.get(outTable, "drift", s"b$batch")
+
   /** Persist one commit's quality-drift line under `outTable/drift/` —
     * advisory telemetry with the [[Similarity]] `recordDrift` contract:
     * written AFTER the commit, a failed write is logged never thrown
@@ -660,8 +664,7 @@ object TextOps {
       case v: java.lang.Number => v.doubleValue()
     }
     val line = s"$n,${d("mean_milli")},${d("keep_rate")}"
-    try ManifestTable.io(outTable).write(
-      java.nio.file.Paths.get(outTable, "drift", s"b$batch"),
+    try ManifestTable.io(outTable).write(qualityLinePath(outTable, batch),
       line.getBytes("UTF-8"))
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(
@@ -685,31 +688,16 @@ object TextOps {
   }
 
   /** One quality-leg micro-batch → replay-guarded manifest commit + one
-    * drift line, with the EXACTLY-ONCE replay semantics of
-    * [[Similarity.appendToIvfIndexBatch]]: streaming micro-batch N
-    * commits as manifest batch N+1 (the baseline owns 0); a replayed id
-    * whose commit is durable but whose drift line is missing (crash in
-    * the commit→line window) re-derives the observation from the
-    * re-delivered rows — no second manifest write — so lines stay
-    * exactly one-per-batch. */
+    * drift line ([[graft.streaming.ManifestTable.appendObserved]]):
+    * streaming micro-batch N commits as manifest batch N+1 (the baseline
+    * owns 0), and lines stay exactly one per batch across replays. */
   def qualityLegBatch(scored: DataFrame, outTable: String,
       streamBatchId: Long): Unit = {
-    import graft.streaming.ManifestTable
     val manifestBatch = streamBatchId + 1L
     val sel = scored.select("doc_id", "q_tokens", "q_mean_milli", "q_keep")
-    if (ManifestTable.hasBatch(outTable, manifestBatch)) {
-      val io = ManifestTable.io(outTable)
-      if (!io.exists(java.nio.file.Paths.get(outTable, "drift",
-          s"b$manifestBatch"))) {
-        val obs = org.apache.spark.sql.Observation()
-        observedQuality(sel, obs).write.mode("overwrite").format("noop").save()
-        recordQualityDrift(outTable, manifestBatch, obs)
-      }
-      return
-    }
-    val obs = org.apache.spark.sql.Observation()
-    ManifestTable.append(observedQuality(sel, obs), outTable, None, manifestBatch)
-    recordQualityDrift(outTable, manifestBatch, obs)
+    graft.streaming.ManifestTable.appendObserved(outTable, None, manifestBatch,
+        qualityLinePath(outTable, manifestBatch))(observedQuality(sel, _))(
+      recordQualityDrift(outTable, manifestBatch, _))
   }
 
   /** The drift history: one row per quality commit — `(batch, n,

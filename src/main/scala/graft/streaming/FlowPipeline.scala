@@ -112,13 +112,9 @@ object FlowPipeline {
       ivfIndexDir: String, lshIndexDir: String, checkpoint: String,
       vecEvery: Long = 1000L, dims: Int = 16, bits: Int = 8)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    decoded.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        pipelineBatch(batch, id, rawTable, rollupTable, ivfIndexDir,
-          lshIndexDir, vecEvery, dims, bits)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    FlowStreams.startBatches(decoded, checkpoint, FlowStreams.SparkDefaultTrigger)(
+      pipelineBatch(_, _, rawTable, rollupTable, ivfIndexDir, lshIndexDir,
+        vecEvery, dims, bits))
 
   /** Start the concurrent QUALITY leg: derived documents scored
     * in-flight by a trained token-weight model
@@ -136,14 +132,10 @@ object FlowPipeline {
       model: graft.operators.TextOps.TokenWeightModel, outTable: String,
       checkpoint: String, docEvery: Long = 100L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    graft.operators.TextOps.streamingQualityFilter(
-        deriveDocs(decoded, docEvery), "text", model, keepOnly = false)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        graft.operators.TextOps.qualityLegBatch(b, outTable, id)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    FlowStreams.startBatches(
+      graft.operators.TextOps.streamingQualityFilter(
+        deriveDocs(decoded, docEvery), "text", model, keepOnly = false),
+      checkpoint, FlowStreams.SparkDefaultTrigger)(graft.operators.TextOps.qualityLegBatch(_, outTable, _))
 
   /** Start the concurrent dedup leg: derived documents →
     * [[Dedup.streamingExactDedup]] (engine-managed watermark state) →
@@ -151,12 +143,9 @@ object FlowPipeline {
   def startDedupLeg(decoded: DataFrame, outTable: String, checkpoint: String,
       docEvery: Long = 100L, lateness: String = "1 hour")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    Dedup.streamingExactDedup(deriveDocs(decoded, docEvery), "text", "timeReceived",
-        lateness)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        ManifestTable.append(b.select("doc_id", "text_md5"), outTable, None, id)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    FlowStreams.startBatches(
+      Dedup.streamingExactDedup(deriveDocs(decoded, docEvery), "text", "timeReceived",
+        lateness),
+      checkpoint, FlowStreams.SparkDefaultTrigger)(
+      (b, id) => ManifestTable.append(b.select("doc_id", "text_md5"), outTable, None, id))
 }

@@ -51,9 +51,13 @@ object FlowStreams {
     * Spark's batch sizing. */
   val DefaultTrigger: Trigger = Trigger.ProcessingTime("5 seconds")
 
-  /** The one foreachBatch shell every always-on query here runs in: `f`
-    * receives each micro-batch with its id, under `checkpoint`. */
-  private def startBatches(stream: DataFrame, checkpoint: String, trigger: Trigger)
+  /** Spark's own default cadence — the next batch as soon as the previous
+    * one ends — for the starts that set no cadence of their own. */
+  private[graft] val SparkDefaultTrigger: Trigger = Trigger.ProcessingTime(0L)
+
+  /** The one foreachBatch shell every always-on query in the program runs
+    * in: `f` receives each micro-batch with its id, under `checkpoint`. */
+  private[graft] def startBatches(stream: DataFrame, checkpoint: String, trigger: Trigger)
       (f: (DataFrame, Long) => Unit): StreamingQuery =
     stream.writeStream
       .foreachBatch(f)
@@ -201,34 +205,21 @@ object FlowStreams {
         trigger: Trigger = DefaultTrigger): StreamingQuery =
       startBatches(stream, checkpoint, trigger)(append(_, table, _))
 
-    /** ONLINE `OPTIMIZE TABLE`: fold the multi-file partition groups of the
-      * current snapshot and swap them out in one manifest commit. Safe with
-      * the running stream: batches appended after the snapshot are not in
-      * the replaced set and survive; readers at every instant see exactly
-      * one committed snapshot; the folded output is durable parquet before
-      * the swap. Returns false if a concurrent compaction won the swap race
-      * (this one's snapshot went stale and it aborted cleanly).
-      *
-      * A one-file partition holds one task's partials, already one row per
-      * key (each partials plan aggregates within its task, and a write task
-      * puts one file in each partition directory), so only multi-file
-      * partitions are read and folded; an unpartitioned table is one group. */
-    def optimizeOnline(spark: SparkSession, table: String): Boolean = {
-      val groups = ManifestTable.filesByPartition(ManifestTable.snapshot(table)._2)
-        .filter(_._2.size > 1)
-      val unfolded = groups.values.flatten.toSeq
-      if (unfolded.isEmpty) return true
-      // one output file per folded group: the fold's final groupBy would
-      // otherwise leave ~shuffle.partitions tasks each writing a file into
-      // every date dir it holds rows for, the folded partitions would come
-      // back multi-file, and every later call would refold them forever
-      val folded = fold(ManifestTable.readSelected(spark, table, unfolded))
-      val bounded = partitionCol match {
-        case Some(c) => folded.repartition(math.max(1, groups.size), col(c))
-        case None => folded.coalesce(1)
+    /** ONLINE `OPTIMIZE TABLE`: [[ManifestTable.compact]] with `fold` as
+      * the rewrite. A one-file partition holds one task's partials,
+      * already one row per key (each partials plan aggregates within its
+      * task, and a write task puts one file in each partition directory),
+      * so only multi-file partitions are folded; an unpartitioned table is
+      * one group. Returns false on a lost swap race. */
+    def optimizeOnline(spark: SparkSession, table: String): Boolean =
+      ManifestTable.compact(spark, table, partitionCol, statsCol) { (parts, n) =>
+        // one output file per folded group: the fold's final groupBy would
+        // otherwise leave ~shuffle.partitions tasks each writing a file into
+        // every date dir it holds rows for, the folded partitions would come
+        // back multi-file, and every later call would refold them forever
+        val folded = fold(parts)
+        partitionCol.fold(folded.coalesce(1))(c => folded.repartition(n, col(c)))
       }
-      ManifestTable.swap(bounded, table, partitionCol, unfolded, statsCol)
-    }
   }
 
   /** The 5-minute rollup MV (`flows_5m`, `create.sh:70-110`): per-batch
@@ -608,40 +599,27 @@ object FlowStreams {
     ManifestTable.readRangePruned(spark, table, "timeReceived", fromSec, untilSec)
       .filter(col("timeReceived") >= fromSec && col("timeReceived") < untilSec)
 
-  /** ONLINE raw-table compaction: rewrite fragmented date partitions into
+  /** ONLINE raw-table compaction: [[ManifestTable.compact]] rewriting
+    * each date partition holding more than `filesPerPartition` files into
     * `filesPerPartition` time-sorted files (ClickHouse's background part
-    * merge restoring `ORDER BY TimeReceived` clustering) and swap them in
-    * one manifest commit, stream still running.
-    *
-    * PARTITION-SELECTIVE: only partitions holding more than
-    * `filesPerPartition` files are rewritten — cold partitions' files are
-    * not read, not rewritten, and keep their manifest entries. That makes
-    * each merge cycle cost ∝ freshly-appended fragmentation, not table
-    * size (the 50M proof run showed whole-table rewrites growing linearly
-    * as the table filled — exactly what ClickHouse's per-part merging
-    * avoids). Returns false on a lost swap race (aborted cleanly). */
+    * merge restoring `ORDER BY TimeReceived` clustering), stream still
+    * running. Cold partitions are not read (the 50M proof run showed
+    * whole-table rewrites growing linearly as the table filled), and the
+    * swap re-records timeReceived bounds, which the time-sorted rewrite
+    * makes TIGHT — contiguous ranges, not the arrival-order spread of raw
+    * appends. Returns false on a lost swap race (aborted cleanly). */
   def compactRawOnline(spark: SparkSession, table: String,
-      filesPerPartition: Int = 1): Boolean = {
-    val fragmentedGroups = ManifestTable.filesByPartition(ManifestTable.snapshot(table)._2)
-      .filter(_._2.size > filesPerPartition)
-    val fragmented = fragmentedGroups.values.flatten.toSeq
-    if (fragmented.isEmpty) return true
-    // range partitioning on (date, time): hash-partitioning by date alone
-    // would collapse each date into ONE task/file regardless of the
-    // target, serializing the hottest partition on a single core; ranges
-    // give ~filesPerPartition contiguous-time files per date, which also
-    // preserves the ORDER BY TimeReceived clustering ACROSS files
-    val compacted = ManifestTable.readSelected(spark, table, fragmented)
-      .repartitionByRange(fragmentedGroups.size * filesPerPartition,
-        col("event_date"), col("timeReceived"))
-      .sortWithinPartitions("timeReceived")
-    // compaction re-records timeReceived bounds for the merged files, so
-    // range skipping survives part merges (and the time-sorted rewrite
-    // makes the per-file bounds TIGHT — contiguous ranges, not the
-    // arrival-order spread of raw appends)
-    ManifestTable.swap(compacted, table, Some("event_date"), fragmented,
-      statsCol = Some("timeReceived"))
-  }
+      filesPerPartition: Int = 1): Boolean =
+    ManifestTable.compact(spark, table, Some("event_date"), Some("timeReceived"),
+        threshold = filesPerPartition) { (rows, n) =>
+      // range partitioning on (date, time): hash-partitioning by date alone
+      // would collapse each date into ONE task/file regardless of the
+      // target, serializing the hottest partition on a single core; ranges
+      // give ~filesPerPartition contiguous-time files per date, which also
+      // preserves the ORDER BY TimeReceived clustering ACROSS files
+      rows.repartitionByRange(n * filesPerPartition, col("event_date"), col("timeReceived"))
+        .sortWithinPartitions("timeReceived")
+    }
 
   /** STREAMING AS-OF ENRICHMENT: annotate flows in-flight against a
     * TIME-VERSIONED dimension that itself updates mid-stream — the

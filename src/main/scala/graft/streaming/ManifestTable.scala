@@ -405,7 +405,7 @@ object ManifestTable {
       case None => throw new IllegalArgumentException(emptyMsg)
     }
     else {
-      val (part, flat) = files.partition(f => f.contains('/') && f.contains('='))
+      val (part, flat) = files.partition(isPartitioned)
       val reads = Seq(
         if (part.nonEmpty)
           Some(spark.read.option("basePath", table).parquet(part.map(f => s"$table/$f"): _*))
@@ -416,6 +416,9 @@ object ManifestTable {
       reads.reduceLeft((a, b) => a.unionByName(b, allowMissingColumns = true))
     }
   }
+
+  private def isPartitioned(path: String): Boolean =
+    path.contains('/') && path.contains('=')
 
   /** Read an explicit committed-file subset (compaction inputs) with the
     * same mixed-layout handling as [[read]] — a single basePath read over
@@ -429,8 +432,8 @@ object ManifestTable {
   def partitionDir(path: String): String =
     path.lastIndexOf('/') match { case -1 => ""; case i => path.substring(0, i) }
 
-  /** Group a committed file list by partition directory — how every
-    * partition-selective compactor finds its fragmented groups. */
+  /** Group a committed file list by partition directory — the groups
+    * [[compact]] judges (layout inspection for callers and specs). */
   def filesByPartition(files: Seq[String]): Map[String, Seq[String]] =
     files.groupBy(partitionDir)
 
@@ -447,44 +450,22 @@ object ManifestTable {
     * a corpus-sized index costs O(files in probed buckets), not O(table).
     * Files outside any `partitionCol=` directory (a legacy unpartitioned
     * append) are conservatively kept — correctness never depends on the
-    * layout. */
+    * layout. `range` = (statsCol, lo, hi) additionally drops files whose
+    * recorded (min,max) does not overlap [lo, hi), as [[readRangePruned]]:
+    * bucket and range pruning compose (the streaming near-dup probe
+    * horizon skips beyond-horizon index files this way). */
   def readPruned(spark: SparkSession, table: String, partitionCol: String,
       keep: Set[String], emptySchema: Option[org.apache.spark.sql.types.StructType] = None,
       range: Option[(String, Long, Long)] = None): DataFrame = {
-    val (_, entries) = snapshotEntries(table)
     val dirs = keep.map(v => s"$partitionCol=$v/")
     // anchored at the path start: an unanchored contains() misclassified a
     // probed column whose name is a SUFFIX of the real partition column
     // ("date" vs "event_date") and silently dropped committed files
     // (r8 review); a file not partitioned by this column is kept
-    // `range` = (statsCol, lo, hi) additionally drops files whose recorded
-    // (min,max) for statsCol does NOT overlap [lo, hi) — bucket pruning
-    // and range pruning compose (the streaming near-dup probe horizon
-    // skips beyond-horizon index files this way); files without stats are
-    // conservatively kept, as in [[readRangePruned]]
-    val selected = entries.filter { e =>
-      val f = e.path
-      val inBucket = !f.startsWith(s"$partitionCol=") || dirs.exists(f.startsWith)
-      val inRange = range match {
-        case Some((c, lo, hi)) => e.stats match {
-          case Some((sc, mn, mx)) if sc == c => mx >= lo && mn < hi
-          case _ => true
-        }
-        case None => true
-      }
-      inBucket && inRange
-    }.map(_.path)
-    pruneStats.put(Paths.get(table).toAbsolutePath.normalize.toString,
-      (selected.size, entries.size))
-    if (selected.isEmpty && emptySchema.isEmpty && entries.nonEmpty) {
-      // same empty-overlap handling as [[readRangePruned]]: derive the
-      // schema from committed files rather than throwing
-      val paths = entries.map(_.path)
-      val sample = (paths.find(p => p.contains('/') && p.contains('='))
-        ++ paths.find(p => !(p.contains('/') && p.contains('=')))).toSeq
-      readFiles(spark, table, sample, None, "unreachable").limit(0)
-    } else readFiles(spark, table, selected, emptySchema,
-      s"no files selected in manifest table: $table (pass emptySchema)")
+    readSelection(spark, table, emptySchema) { e =>
+      (!e.path.startsWith(s"$partitionCol=") || dirs.exists(e.path.startsWith)) &&
+        range.forall { case (c, lo, hi) => overlaps(e, c, lo, hi) }
+    }
   }
 
   private[graft] def lastPruneStats(table: String): Option[(Int, Int)] =
@@ -503,26 +484,43 @@ object ManifestTable {
     * partition pruning. */
   def readRangePruned(spark: SparkSession, table: String, statsCol: String,
       lo: Long, hi: Long,
-      emptySchema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    val (_, entries) = snapshotEntries(table)
-    val selected = entries.filter(e => e.stats match {
+      emptySchema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
+    readSelection(spark, table, emptySchema)(overlaps(_, statsCol, lo, hi))
+
+  /** True unless `e` records `statsCol` bounds wholly outside `[lo, hi)`. */
+  private def overlaps(e: FileEntry, statsCol: String, lo: Long, hi: Long): Boolean =
+    e.stats match {
       case Some((c, mn, mx)) if c == statsCol => mx >= lo && mn < hi
       case _ => true
-    }).map(_.path)
+    }
+
+  /** The one file selection every pruned read shares: the snapshot
+    * entries `keep` accepts, with the selectivity recorded in
+    * [[pruneStats]]. Returns (selected paths, every snapshot path). */
+  private def selectFiles(table: String)(keep: FileEntry => Boolean)
+      : (Seq[String], Seq[String]) = {
+    val entries = snapshotEntries(table)._2
+    val selected = entries.filter(keep).map(_.path)
     pruneStats.put(Paths.get(table).toAbsolutePath.normalize.toString,
       (selected.size, entries.size))
-    if (selected.isEmpty && emptySchema.isEmpty && entries.nonEmpty) {
-      // a range with NO overlapping file is a legitimate empty result (a
-      // quiet hour, a future window) — derive the schema from committed
-      // files (footer-only reads) instead of throwing. One file of EACH
-      // layout group: on a mixed flat+partitioned table a single flat
-      // file would omit the partition column the non-empty result carries
-      // via unionByName (r8 review)
-      val paths = entries.map(_.path)
-      val sample = (paths.find(p => p.contains('/') && p.contains('='))
-        ++ paths.find(p => !(p.contains('/') && p.contains('=')))).toSeq
-      readFiles(spark, table, sample, None, "unreachable").limit(0)
-    } else readFiles(spark, table, selected, emptySchema,
+    (selected, entries.map(_.path))
+  }
+
+  /** Read a [[selectFiles]] selection. A selection with NO file is a
+    * legitimate empty result (a quiet hour, a future window, unprobed
+    * buckets): without `emptySchema` its schema comes from committed files
+    * (footer-only reads) instead of an error — one file of EACH layout
+    * group, since on a mixed flat+partitioned table a single flat file
+    * would omit the partition column the non-empty result carries via
+    * unionByName (r8 review). */
+  private def readSelection(spark: SparkSession, table: String,
+      emptySchema: Option[org.apache.spark.sql.types.StructType])
+      (keep: FileEntry => Boolean): DataFrame = {
+    val (selected, all) = selectFiles(table)(keep)
+    if (selected.isEmpty && emptySchema.isEmpty && all.nonEmpty)
+      readFiles(spark, table, (all.find(isPartitioned) ++ all.find(!isPartitioned(_))).toSeq,
+        None, "unreachable").limit(0)
+    else readFiles(spark, table, selected, emptySchema,
       s"no files selected in manifest table: $table (pass emptySchema)")
   }
 
@@ -617,6 +615,26 @@ object ManifestTable {
     commit(table, absorbBatch = Some(batchId))(files => files ++ staged.map(_.line))
   }
 
+  /** [[append]] of a plan carrying an [[org.apache.spark.sql.Observation]],
+    * followed by `record` of the observed metrics — the per-commit line
+    * (an index's drift line, a quality leg's score line) written AFTER
+    * the commit as advisory telemetry. The replay guard runs first: on an
+    * absorbed `batch` no append job runs, so `Observation.get` would block
+    * forever. A replay whose commit is durable but whose line at
+    * `linePath` is missing (a crash landed between the commit and
+    * `record`) re-derives the observation from the re-delivered rows —
+    * one `noop` write, no second manifest commit — so lines stay exactly
+    * one per batch. */
+  def appendObserved(table: String, partitionCol: Option[String], batch: Long,
+      linePath: Path)(plan: org.apache.spark.sql.Observation => DataFrame)
+      (record: org.apache.spark.sql.Observation => Unit): Unit = {
+    val obs = org.apache.spark.sql.Observation()
+    if (!hasBatch(table, batch)) append(plan(obs), table, partitionCol, batch)
+    else if (ioFor(table).exists(linePath)) return
+    else plan(obs).write.mode("overwrite").format("noop").save()
+    record(obs)
+  }
+
   /** Replace `replaced` files with the staged contents of `df` in one
     * commit — the compaction swap. Files appended concurrently (present in
     * the latest snapshot but not in `replaced`) survive untouched.
@@ -660,16 +678,49 @@ object ManifestTable {
     committed.nonEmpty
   }
 
-  /** RETIRE committed files whose recorded `statsCol` maximum is below
-    * `beforeMax` — the storage-side horizon bound for append-forever
-    * tables (a probe that range-prunes on `statsCol` never selects them
-    * again, so they are dead weight): one manifest commit drops them from
-    * the snapshot, [[vacuum]] later reclaims the bytes. Files WITHOUT
-    * recorded stats are never expired (their content is unknowable from
-    * the manifest — conservative, like every stats path here). Returns
-    * the number of files retired. Concurrent appends/swaps are safe: the
-    * delta re-applies per CAS attempt against the fresh snapshot, and it
-    * only ever REMOVES entries it re-judged against that snapshot. */
+  /** ONLINE compaction — the one every always-on table here runs
+    * (ClickHouse's background part merge, `README.md:164-172`): rewrite
+    * each fragmented group of the current snapshot and [[swap]] it in,
+    * while appends keep landing. The decisions are all made here; a
+    * caller states only `rewrite`, which receives the group's committed
+    * rows and the number of partition directories they span, and returns
+    * what to stage in their place (its partitioning decides the output
+    * files per directory).
+    *  - A group is one partition directory's files (an unpartitioned
+    *    table is one group); it is fragmented when it holds more than
+    *    `threshold` files. Only fragmented groups are read or rewritten,
+    *    so a cycle costs ∝ fresh fragmentation, not table size. Flat
+    *    files in a table partitioned by `partitionCol` (legacy appends)
+    *    are never rewritten: a partitioned rewrite would misfile them.
+    *  - `eraSpan` > 0 also splits groups by ERA — min `statsCol` /
+    *    eraSpan, from the manifest stats; files without stats share one
+    *    era — and swaps once per era, so a folded file spans at most one
+    *    era and range pruning and [[expireByStats]] keep skipping it.
+    *  - Each swap re-records `statsCol`, so range skipping survives.
+    *  - Safe beside the running stream: files appended after the snapshot
+    *    are not in the replaced set and survive; readers see exactly one
+    *    committed snapshot; the rewrite is durable parquet before the
+    *    swap. A swap whose snapshot went stale (another compaction won)
+    *    aborts cleanly and the call returns false; the next call retries.
+    * Returns true when every era committed (or nothing was fragmented). */
+  def compact(spark: SparkSession, table: String, partitionCol: Option[String],
+      statsCol: Option[String], threshold: Int = 1, eraSpan: Long = 0L)
+      (rewrite: (DataFrame, Int) => DataFrame): Boolean = {
+    def eraOf(e: FileEntry): Long = e.stats match {
+      case Some((c, mn, _)) if eraSpan > 0L && statsCol.contains(c) => mn / eraSpan
+      case _ => -1L
+    }
+    val fragmented = snapshotEntries(table)._2
+      .groupBy(e => (partitionDir(e.path), eraOf(e)))
+      .filter { case ((dir, _), files) =>
+        files.size > threshold && (dir.nonEmpty || partitionCol.isEmpty) }
+    fragmented.groupBy(_._1._2).forall { case (_, groups) =>
+      val replaced = groups.values.flatten.map(_.path).toSeq
+      swap(rewrite(readSelected(spark, table, replaced), groups.size),
+        table, partitionCol, replaced, statsCol)
+    }
+  }
+
   /** Batch id encoded in an append's file name (`b<id>-<uuid>.parquet`,
     * the [[append]] prefix); None for allocate (`a…`) / compaction (`c…`)
     * files, which carry no batch identity. */
@@ -688,31 +739,27 @@ object ManifestTable {
     * correctness never depends on it. Selectivity lands in
     * [[lastPruneStats]] so callers can prove the bound. */
   def readBatchSince(spark: SparkSession, table: String, sinceBatch: Long,
-      emptySchema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    val (_, entries) = snapshotEntries(table)
-    val selected = entries.map(_.path)
-      .filter(p => batchOfPath(p).forall(_ >= sinceBatch))
-    pruneStats.put(Paths.get(table).toAbsolutePath.normalize.toString,
-      (selected.size, entries.size))
-    if (selected.isEmpty && emptySchema.isEmpty && entries.nonEmpty) {
-      val paths = entries.map(_.path)
-      val sample = (paths.find(p => p.contains('/') && p.contains('='))
-        ++ paths.find(p => !(p.contains('/') && p.contains('=')))).toSeq
-      readFiles(spark, table, sample, None, "unreachable").limit(0)
-    } else readFiles(spark, table, selected, emptySchema,
-      s"no files selected in manifest table: $table (pass emptySchema)")
-  }
+      emptySchema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
+    readSelection(spark, table, emptySchema)(batchSince(_, sinceBatch))
 
   /** The since-bounded file list itself (paths with batch ≥ `sinceBatch`)
-    * — for callers that rewrite the window via [[swap]]. */
-  private[graft] def batchSinceFiles(table: String, sinceBatch: Long): Seq[String] = {
-    val entries = snapshotEntries(table)._2.map(_.path)
-    val selected = entries.filter(p => batchOfPath(p).forall(_ >= sinceBatch))
-    pruneStats.put(Paths.get(table).toAbsolutePath.normalize.toString,
-      (selected.size, entries.size))
-    selected
-  }
+    * — for callers that rewrite the window via [[swapAsBatch]]. */
+  private[graft] def batchSinceFiles(table: String, sinceBatch: Long): Seq[String] =
+    selectFiles(table)(batchSince(_, sinceBatch))._1
 
+  private def batchSince(e: FileEntry, sinceBatch: Long): Boolean =
+    batchOfPath(e.path).forall(_ >= sinceBatch)
+
+  /** RETIRE committed files whose recorded `statsCol` maximum is below
+    * `beforeMax` — the storage-side horizon bound for append-forever
+    * tables (a probe that range-prunes on `statsCol` never selects them
+    * again, so they are dead weight): one manifest commit drops them from
+    * the snapshot, [[vacuum]] later reclaims the bytes. Files WITHOUT
+    * recorded stats are never expired (their content is unknowable from
+    * the manifest — conservative, like every stats path here). Returns
+    * the number of files retired. Concurrent appends/swaps are safe: the
+    * delta re-applies per CAS attempt against the fresh snapshot, and it
+    * only ever REMOVES entries it re-judged against that snapshot. */
   def expireByStats(table: String, statsCol: String, beforeMax: Long): Long = {
     var removed = 0L
     tryCommit(table) { lines =>

@@ -470,7 +470,7 @@ class DedupSpec extends SparkTestBase {
     }
     // eraSpan = H: batches {0,1} fold separately from {2,3}, so no folded
     // file straddles a future horizon boundary
-    assert(Dedup.compactNearDupIndex(spark, idx, 1, eraSpan = H))
+    assert(Dedup.compactNearDupIndex(spark, idx, eraSpan = H))
     // folded files must carry re-recorded src_batch stats spanning ≤ 1 era
     val spans = ManifestTable.snapshotEntries(s"$idx/bands")._2.flatMap(_.stats)
     assert(spans.nonEmpty, "compacted files must re-record src_batch stats")

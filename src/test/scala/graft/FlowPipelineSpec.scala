@@ -160,4 +160,46 @@ class FlowPipelineSpec extends SparkTestBase {
     val stats = graft.operators.Similarity.ivfDriftStats(spark, ivf).collect()
     assert(stats.map(_.getLong(0)).toSeq === Seq(0L, 1L))
   }
+
+  test("every replay-guarded observed append re-emits a crash-lost line without a new manifest version") {
+    import graft.operators.{Pq, Similarity, TextOps}
+    val lsh = tmp(); val ivf = tmp(); val pq = tmp(); val qual = tmp()
+    val emb = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    val build = emb.filter(col("vec_id") < 40)
+    val vecs = emb.filter(col("vec_id") >= 40 && col("vec_id") < 80)
+    val batch = genBatch(500, seed = 7, baseTime = 1704067200L).toDS().toDF()
+    val model = TextOps.TokenWeightModel(Seq("stream", " "), Seq(900L, 900L),
+      unkWeight = 500L)
+    val scored = TextOps.streamingQualityFilter(
+      FlowPipeline.deriveDocs(batch, 5L), "text", model, keepOnly = false)
+    def line(dir: String, b: Long) = java.nio.file.Paths.get(dir, "drift", s"b$b")
+    // (case, table, its line, the call) — builds first: the appends need
+    // the centroids and codebook the builds commit at batch 0
+    val cases: Seq[(String, String, java.nio.file.Path, () => Unit)] = Seq(
+      ("LSH build", s"$lsh/buckets", line(lsh, 0L),
+        () => Similarity.buildLshIndex(build, lsh)),
+      ("IVF build", s"$ivf/cells", line(ivf, 0L),
+        () => Similarity.buildIvfIndex(build, ivf, nCentroids = 4, kmeansIters = 1)),
+      ("IVF-PQ build", s"$pq/cells", line(pq, 0L),
+        () => Pq.buildIvfPqIndex(build, pq, nCentroids = 4, kmIters = 1)),
+      ("LSH append", s"$lsh/buckets", line(lsh, 1L),
+        () => Similarity.appendToLshIndexBatch(vecs, lsh, 1L)),
+      ("IVF append", s"$ivf/cells", line(ivf, 1L),
+        () => Similarity.appendToIvfIndexBatch(vecs, ivf, 1L)),
+      ("IVF-PQ append", s"$pq/cells", line(pq, 1L),
+        () => Pq.appendToIvfPqIndexBatch(vecs, pq, 1L)),
+      ("quality leg", qual, line(qual, 1L),
+        () => TextOps.qualityLegBatch(scored, qual, streamBatchId = 0L)))
+    cases.foreach { case (name, table, drift, call) =>
+      call()
+      val version = ManifestTable.snapshot(table)._1
+      assert(java.nio.file.Files.exists(drift), s"$name: the commit writes its line")
+      // the crash window: commit durable, line lost
+      java.nio.file.Files.delete(drift)
+      call()
+      assert(java.nio.file.Files.exists(drift), s"$name: the replay re-emits the line")
+      assert(ManifestTable.snapshot(table)._1 === version,
+        s"$name: the replay must not commit again")
+    }
+  }
 }

@@ -565,6 +565,23 @@ class ManifestTableSpec extends SparkTestBase {
     val pruned = ManifestTable.readPruned(spark, table, "bkt", Set("20"))
     assert(pruned.select("id").as[Long].collect().toSet === Set(1L, 2L),
       "probe = matching bucket + conservative legacy files")
+    // compaction folds a fragmented bucket and leaves the flat legacy file
+    // alone: a partitioned rewrite would misfile it
+    ManifestTable.append(
+      Seq((4L, 20L)).toDF("id", "bucket").withColumn("bkt", col("bucket")),
+      table, Some("bkt"), 2L)
+    def reads(): (Set[String], Set[String]) = (
+      ManifestTable.read(spark, table).collect().map(_.toString).toSet,
+      ManifestTable.readPruned(spark, table, "bkt", Set("20")).collect().map(_.toString).toSet)
+    val before = reads()
+    val flat = ManifestTable.snapshot(table)._2.filterNot(_.contains('/'))
+    assert(flat.size === 1)
+    assert(ManifestTable.compact(spark, table, Some("bkt"), None)(
+      (rows, n) => rows.repartition(n, col("bkt"))))
+    val after = ManifestTable.snapshot(table)._2
+    assert(flat.forall(after.contains), s"the flat file must stay: $after")
+    assert(after.count(_.startsWith("bkt=20/")) === 1, s"bucket 20 folded: $after")
+    assert(reads() === before, "compaction must not change what reads return")
   }
 
   // ----------------------------------------------- CAS fault injection

@@ -371,7 +371,8 @@ class PqSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[(Long, Seq[Float])]
     val q = Pq.startStreamingIvfPqAppend(
-      ms.toDF().toDF("vec_id", "embedding"), dirS, cp, triggerMs = 100L)
+      ms.toDF().toDF("vec_id", "embedding"), dirS, cp,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(100L))
     try {
       ms.addData(rest.filter(_._1 < 60).toSeq: _*)
       q.processAllAvailable()

@@ -769,7 +769,8 @@ class SimilaritySpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[(Long, Seq[Float])]
     val q = Similarity.startStreamingIvfAppend(
-      ms.toDF().toDF("vec_id", "embedding"), dir, cp, triggerMs = 100L)
+      ms.toDF().toDF("vec_id", "embedding"), dir, cp,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(100L))
     try {
       ms.addData(rest.filter(_._1 < 60).toSeq: _*)
       q.processAllAvailable()
@@ -839,7 +840,8 @@ class SimilaritySpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[(Long, Seq[Float])]
     val q = Similarity.startStreamingLshAppend(
-      ms.toDF().toDF("vec_id", "embedding"), dir, cp, bits = 8, triggerMs = 100L)
+      ms.toDF().toDF("vec_id", "embedding"), dir, cp, bits = 8,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(100L))
     try {
       ms.addData(rest.filter(_._1 < 60).toSeq: _*)
       q.processAllAvailable()
