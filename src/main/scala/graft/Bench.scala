@@ -205,9 +205,12 @@ object Bench {
     // summary as the FINAL stdout line — short enough that any tail ≥200
     // bytes contains it whole. Per-query detail stays in the full line and
     // in BENCH_full.json.
-    // "detail" names the file the full line goes to (written below)
-    val detail = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH_full_c$cpus.json")
-    val outFile = new java.io.File(detail).getAbsolutePath
+    // "detail" names the file the full line goes to (written below); a
+    // SPARK_GRAFT_ONLY subset run writes none unless SPARK_GRAFT_BENCH_OUT
+    // names one, so it cannot replace the tracked full-run artifacts
+    val out = sys.env.get("SPARK_GRAFT_BENCH_OUT")
+      .orElse(if (only.isEmpty) Some(s"BENCH_full_c$cpus.json") else None)
+    val detail = out.getOrElse("stdout")
     val summary = f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"cpus":$cpus,$git,"ingest_rows_per_sec":$ingestRate,"sf":"$sfDir","detail":"$detail"}"""
     println(summary)
     // ALSO persist the full line in-repo: the driver's BENCH_r{N}.json
@@ -224,16 +227,19 @@ object Bench {
     // BENCH_full.json. BENCH_full.json is still written for back-compat
     // readers, but it is now a copy of the LAST run, while
     // BENCH_full_c{cpus}.json is the stable per-configuration artifact.
-    try {
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), line + "\n")
-      if (!sys.env.contains("SPARK_GRAFT_BENCH_OUT")) {
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(new java.io.File("BENCH_full.json").getAbsolutePath),
-          line + "\n")
-        ()
+    out.foreach { f =>
+      val outFile = new java.io.File(f).getAbsolutePath
+      try {
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), line + "\n")
+        if (!sys.env.contains("SPARK_GRAFT_BENCH_OUT")) {
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get(new java.io.File("BENCH_full.json").getAbsolutePath),
+            line + "\n")
+          ()
+        }
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] could not write $outFile: ${e.getMessage}")
       }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $outFile: ${e.getMessage}")
     }
     spark.stop()
   }

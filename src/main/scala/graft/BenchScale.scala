@@ -17,9 +17,13 @@ import graft.streaming.{FlowStreams, ManifestTable}
   *
   * Row count via SPARK_GRAFT_SCALE_ROWS (default 50M ≈ 83× the sf0.1
   * table; ~3.6 GB of wire bytes, 5.8 simulated days of event time).
-  * Writes one JSON line and, when run in the repo, BENCH_scale.json.
+  * Writes one JSON line and, at the default row count, BENCH_scale.json;
+  * a run at any other row count (a smoke run) only prints its line.
   */
 object BenchScale {
+
+  /** The row count `BENCH_scale.json` records. */
+  private val DefaultRows = 50000000L
 
   private def timed[A](f: => A): (A, Double) = {
     val t0 = System.nanoTime()
@@ -82,7 +86,9 @@ object BenchScale {
   }
 
   def main(args: Array[String]): Unit = {
-    val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_ROWS", "50000000").toLong
+    val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_ROWS", DefaultRows.toString).toLong
+    // BENCH_scale.json holds the default-row-count run; other sizes print only
+    val artifact = Option.when(n == DefaultRows)(java.nio.file.Paths.get("BENCH_scale.json"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val genFiles = 256
     // the shipped session (extensions, local file system), with this
@@ -278,20 +284,21 @@ object BenchScale {
         f""""before":{"write_mb_per_sec":$ioW0%.1f,"read_mb_per_sec":$ioR0%.1f},""" +
         f""""after_ingest":{"write_mb_per_sec":$ioW1%.1f,"read_mb_per_sec":$ioR1%.1f}}}"""
       println(s"""{"metric":"scale_ingest_refresh","refresh":$refresh}""")
-      try {
-        val f = java.nio.file.Paths.get("BENCH_scale.json")
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root =
-          if (java.nio.file.Files.exists(f))
-            mapper.readTree(java.nio.file.Files.readString(f))
-              .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-          else mapper.createObjectNode()
-        root.set[com.fasterxml.jackson.databind.JsonNode](
-          "ingest_refresh", mapper.readTree(refresh))
-        java.nio.file.Files.writeString(f, mapper.writeValueAsString(root) + "\n")
-        ()
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench-scale] ingest refresh merge failed: ${e.getMessage}")
+      artifact.foreach { f =>
+        try {
+          val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+          val root =
+            if (java.nio.file.Files.exists(f))
+              mapper.readTree(java.nio.file.Files.readString(f))
+                .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+            else mapper.createObjectNode()
+          root.set[com.fasterxml.jackson.databind.JsonNode](
+            "ingest_refresh", mapper.readTree(refresh))
+          java.nio.file.Files.writeString(f, mapper.writeValueAsString(root) + "\n")
+          ()
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench-scale] ingest refresh merge failed: ${e.getMessage}")
+        }
       }
       Storage.deleteTree(work)
       spark.stop()
@@ -882,33 +889,36 @@ object BenchScale {
         f""","fam_rows":{"events":$n,"documents":$nDocs,"embeddings":$nVecs},""" +
         f""""fam_gen_sec":$famGenSec%.1f,"queries":$queriesJson}"""
       println(json)
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_scale.json"), json + "\n")
-      catch { case _: Throwable => () }
+      artifact.foreach { f =>
+        try java.nio.file.Files.writeString(f, json + "\n")
+        catch { case _: Throwable => () }
+      }
     } else {
       // merge the refreshed rows into the existing artifact (Jackson is
       // on the Spark classpath); every other field stays as measured by
       // the last full run
       println(s"""{"metric":"scale_refresh","queries":$queriesJson}""")
-      try {
-        val f = java.nio.file.Paths.get("BENCH_scale.json")
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root =
-          if (java.nio.file.Files.exists(f))
-            mapper.readTree(java.nio.file.Files.readString(f))
-              .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-          else mapper.createObjectNode()
-        val qn = root.get("queries") match {
-          case o: com.fasterxml.jackson.databind.node.ObjectNode => o
-          case _ =>
-            val o = mapper.createObjectNode(); root.set("queries", o); o
+      artifact.foreach { f =>
+        try {
+          val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+          val root =
+            if (java.nio.file.Files.exists(f))
+              mapper.readTree(java.nio.file.Files.readString(f))
+                .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+            else mapper.createObjectNode()
+          val qn = root.get("queries") match {
+            case o: com.fasterxml.jackson.databind.node.ObjectNode => o
+            case _ =>
+              val o = mapper.createObjectNode(); root.set("queries", o); o
+          }
+          queries.foreach { case (k, v) =>
+            qn.put(k, math.round(v * 1000.0) / 1000.0); ()
+          }
+          java.nio.file.Files.writeString(f, mapper.writeValueAsString(root) + "\n")
+          ()
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench-scale] merge failed: ${e.getMessage}")
         }
-        queries.foreach { case (k, v) =>
-          qn.put(k, math.round(v * 1000.0) / 1000.0); ()
-        }
-        java.nio.file.Files.writeString(f, mapper.writeValueAsString(root) + "\n")
-        ()
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench-scale] merge failed: ${e.getMessage}")
       }
     }
 

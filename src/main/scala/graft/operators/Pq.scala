@@ -93,6 +93,13 @@ object Pq {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
       .sortBy(_._1) // ascending code-id order inside each sub
+    // a codeword sliced past a shorter vector's end is EMPTY, and the
+    // encode kernel indexes it: reject the mismatch here, by name (fewer
+    // than k vectors is fine — the codebook has as many codes as seeds)
+    seedRows.find(_._2.length != dims).foreach { case (id, q) =>
+      throw new IllegalArgumentException(s"PQ training expects $dims-dim vectors " +
+        s"(m = $m subspaces of $dsub); vec_id $id has ${q.length} dimensions")
+    }
     val codeIds = seedRows.map(_._1).toSeq
     var cb: Array[Array[Array[Long]]] = Array.tabulate(m) { s =>
       seedRows.map { case (_, q) => q.slice(s * dsub, (s + 1) * dsub) }

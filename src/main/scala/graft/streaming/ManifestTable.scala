@@ -96,6 +96,8 @@ object ManifestTable {
     /** Remove everything under the prefix (POSIX: the directory tree). */
     def deletePrefix(dir: Path): Unit
     def lastModifiedMillis(path: Path): Long
+    /** Byte length of a stored object (an object store's HEAD). */
+    def size(path: Path): Long
     /** Publish a finished staging file at its final name and drop the
       * staged copy. NO atomicity required: a data file is invisible until
       * a manifest commit names it, so a half-copied object is just one
@@ -131,6 +133,7 @@ object ManifestTable {
     def deletePrefix(dir: Path): Unit = graft.Storage.deleteTree(dir)
     def lastModifiedMillis(path: Path): Long =
       Files.getLastModifiedTime(path).toMillis
+    def size(path: Path): Long = Files.size(path)
     def promote(src: Path, target: Path): Unit =
       promoteImpl(src, target, p => Files.setLastModifiedTime(p,
         java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis())))
@@ -309,73 +312,95 @@ object ManifestTable {
       .maxByOption(versionOf))
   }
 
-  /** One committed file with its optional column statistics. A manifest
-    * line is either a bare relative path (legacy, and files whose stats
-    * column had no usable footer stats) or
-    * `path<TAB>statsCol<TAB>min<TAB>max` — the (min,max) of one LONG/INT
-    * column, recorded by [[stage]] from the parquet footer the writer just
-    * produced. Stats ride the manifest so range queries skip files at the
+  /** One committed file with its optional column statistics and byte
+    * size. A manifest line is tab-separated:
+    *  - `path` — a bare relative path (legacy);
+    *  - `path<TAB>size` — a sized file without stats;
+    *  - `path<TAB>statsCol<TAB>min<TAB>max` — the (min,max) of one
+    *    LONG/INT column, recorded by [[stage]] from the parquet footer the
+    *    writer just produced (legacy, unsized);
+    *  - `path<TAB>statsCol<TAB>min<TAB>max<TAB>size` — both.
+    * Stats ride the manifest so range queries skip files at the
     * MANIFEST, before any footer read — the ClickHouse
     * `ORDER BY TimeReceived` intra-partition range-scan parity for managed
     * tables (create.sh:62); at ~10^5 files/day of always-on ingest the
-    * difference is a string compare per file vs a footer fetch per file. */
-  final case class FileEntry(path: String, stats: Option[(String, Long, Long)]) {
-    def line: String = stats match {
-      case Some((c, mn, mx)) => s"$path\t$c\t$mn\t$mx"
-      case None => path
-    }
+    * difference is a string compare per file vs a footer fetch per file.
+    * The size lets a reader plan the file without a stat (see [[read]]). */
+  final case class FileEntry(path: String, stats: Option[(String, Long, Long)],
+      size: Option[Long] = None) {
+    def line: String =
+      (Seq(path) ++ stats.toSeq.flatMap { case (c, mn, mx) => Seq(c, mn.toString, mx.toString) } ++
+        size.map(_.toString)).mkString("\t")
   }
 
-  private def parseEntry(line: String): FileEntry =
+  private[graft] def parseEntry(line: String): FileEntry = {
+    def num(s: String): Option[Long] = s.toLongOption
+    def stats(c: String, mn: String, mx: String) =
+      for (lo <- num(mn); hi <- num(mx)) yield (c, lo, hi)
     line.split('\t') match {
-      case Array(p, c, mn, mx) =>
-        try FileEntry(p, Some((c, mn.toLong, mx.toLong)))
-        catch { case _: NumberFormatException => FileEntry(p, None) }
+      case Array(p) => FileEntry(p, None)
+      case Array(p, sz) => FileEntry(p, None, num(sz))
+      case Array(p, c, mn, mx) => FileEntry(p, stats(c, mn, mx))
+      case Array(p, c, mn, mx, sz) => FileEntry(p, stats(c, mn, mx), num(sz))
       case _ => FileEntry(pathOf(line), None)
     }
+  }
 
   private def pathOf(line: String): String = {
     val i = line.indexOf('\t')
     if (i < 0) line else line.substring(0, i)
   }
 
-  /** Latest committed (version, relative file list); (0, empty) if none.
-    * Header lines (`#…`) carry snapshot metadata and are not files. */
+  /** One committed manifest: the highest absorbed batch id (`#maxBatch:`
+    * header, -1 if none), the schema of the table's rows (`#schema:`
+    * header, Spark's JSON form; None in manifests written before it
+    * existed) and the file lines. Header lines start with `#`; a file
+    * line never does. */
+  private[graft] final case class Manifest(maxBatch: Long,
+      schema: Option[org.apache.spark.sql.types.StructType], lines: Seq[String]) {
+    def render: String =
+      (s"#maxBatch:$maxBatch" +: (schema.map(s => s"#schema:${s.json}").toSeq ++ lines))
+        .mkString("\n")
+  }
+
+  private[graft] def parseManifest(text: String, source: String): Manifest = {
+    val lines = text.split("\n", -1).toSeq.filter(_.nonEmpty)
+    def header(tag: String) = lines.find(_.startsWith(tag)).map(_.stripPrefix(tag))
+    val maxBatch = header("#maxBatch:").fold(-1L) { h =>
+      // fail LOUDLY with context on a corrupt header — silently
+      // degrading to -1 would disarm the replay guard and
+      // double-append on the next checkpoint replay (r8 review:
+      // descriptive beats a bare NumberFormatException, but this
+      // must not be a silent fallback)
+      h.toLongOption.getOrElse(throw new IllegalStateException(
+        s"corrupt manifest header '#maxBatch:$h' in $source — the table's replay " +
+          "guard cannot be trusted; restore the manifest from the " +
+          "previous version (vacuum retains history)"))
+    }
+    // an unreadable schema only costs the inference a header spares
+    val schema = header("#schema:").flatMap(j =>
+      scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(j)).toOption.collect {
+        case s: org.apache.spark.sql.types.StructType => s
+      })
+    Manifest(maxBatch, schema, lines.filterNot(_.startsWith("#")))
+  }
+
+  /** Latest committed (version, relative file list); (0, empty) if none. */
   def snapshot(table: String): (Long, Seq[String]) =
-    readLatest(table) match { case (v, _, lines) => (v, lines.map(pathOf)) }
+    readLatest(table) match { case (v, m) => (v, m.lines.map(pathOf)) }
 
   /** [[snapshot]] with per-file statistics preserved. */
   def snapshotEntries(table: String): (Long, Seq[FileEntry]) =
-    readLatest(table) match { case (v, _, lines) => (v, lines.map(parseEntry)) }
+    readLatest(table) match { case (v, m) => (v, m.lines.map(parseEntry)) }
 
   /** Highest batch id any committed snapshot has absorbed; -1 if none. */
-  def maxBatchId(table: String): Long = readLatest(table)._2
+  def maxBatchId(table: String): Long = readLatest(table)._2.maxBatch
 
-  private def readLatest(table: String): (Long, Long, Seq[String]) = {
+  private def readLatest(table: String): (Long, Manifest) = {
     val io = ioFor(table)
-    val dir = manifestDir(table)
-    latestManifest(io, dir) match {
-      case None => (0L, -1L, Nil)
-      case Some(m) =>
-        val lines = new String(io.read(m), "UTF-8")
-          .split("\n", -1).toSeq.filter(_.nonEmpty)
-        val maxBatch = lines.find(_.startsWith("#maxBatch:")) match {
-          case None => -1L
-          case Some(h) =>
-            // fail LOUDLY with context on a corrupt header — silently
-            // degrading to -1 would disarm the replay guard and
-            // double-append on the next checkpoint replay (r8 review:
-            // descriptive beats a bare NumberFormatException, but this
-            // must not be a silent fallback)
-            try h.stripPrefix("#maxBatch:").toLong
-            catch { case _: NumberFormatException =>
-              throw new IllegalStateException(
-                s"corrupt manifest header '$h' in $m — the table's replay " +
-                  "guard cannot be trusted; restore the manifest from the " +
-                  "previous version (vacuum retains history)")
-            }
-        }
-        (versionOf(m), maxBatch, lines.filterNot(_.startsWith("#")))
+    latestManifest(io, manifestDir(table)) match {
+      case None => (0L, Manifest(-1L, None, Nil))
+      case Some(m) => (versionOf(m), parseManifest(new String(io.read(m), "UTF-8"), m.toString))
     }
   }
 
@@ -384,19 +409,29 @@ object ManifestTable {
     * we hand Spark an explicit file list. A committed-but-empty table (all
     * batches so far produced zero rows) composes as an empty DataFrame when
     * the caller supplies the table schema; without one there is nothing to
-    * infer from, so it stays an error. */
+    * infer from, so it stays an error.
+    *
+    * A manifest with a `#schema:` header is read from the manifest alone:
+    * the header replaces Spark's schema-inference job and each entry's
+    * recorded size stands in for a file stat, so opening the snapshot runs
+    * no Spark job and touches no data file. A manifest without the header
+    * (written before it existed) reads through inference, as it always
+    * did. */
   def read(spark: SparkSession, table: String,
-      emptySchema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
-    readFiles(spark, table, snapshot(table)._2, emptySchema,
+      emptySchema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+    val m = readLatest(table)._2
+    readFiles(spark, table, m.lines.map(parseEntry), m.schema, emptySchema,
       s"empty manifest table: $table (pass emptySchema to read it as an empty DataFrame)")
+  }
 
-  /** The one "read this committed file list" step both [[read]] and
-    * [[readPruned]] share. A MIXED layout (flat legacy appends + later
-    * partitioned appends in one table) is read as two groups and unioned
-    * by name — handing Spark both leaf shapes under one basePath would
-    * fail partition discovery ("conflicting directory structures"); flat
-    * files surface the partition column as null. */
-  private def readFiles(spark: SparkSession, table: String, files: Seq[String],
+  /** The one "read this committed file list" step every read shares. A
+    * MIXED layout (flat legacy appends + later partitioned appends in one
+    * table) is read as two groups and unioned by name — handing Spark both
+    * leaf shapes under one basePath would fail partition discovery
+    * ("conflicting directory structures"); flat files surface the
+    * partition column as null. */
+  private def readFiles(spark: SparkSession, table: String, files: Seq[FileEntry],
+      schema: Option[org.apache.spark.sql.types.StructType],
       emptySchema: Option[org.apache.spark.sql.types.StructType],
       emptyMsg: String): DataFrame = {
     if (files.isEmpty) emptySchema match {
@@ -405,15 +440,21 @@ object ManifestTable {
       case None => throw new IllegalArgumentException(emptyMsg)
     }
     else {
-      val (part, flat) = files.partition(isPartitioned)
-      val reads = Seq(
-        if (part.nonEmpty)
-          Some(spark.read.option("basePath", table).parquet(part.map(f => s"$table/$f"): _*))
-        else None,
-        if (flat.nonEmpty)
-          Some(spark.read.parquet(flat.map(f => s"$table/$f"): _*))
-        else None).flatten
-      reads.reduceLeft((a, b) => a.unionByName(b, allowMissingColumns = true))
+      val (part, flat) = files.partition(e => isPartitioned(e.path))
+      def group(es: Seq[FileEntry], basePath: Option[String]): Option[DataFrame] =
+        if (es.isEmpty) None
+        else Some(schema match {
+          case Some(s) =>
+            val root = new org.apache.hadoop.fs.Path(table)
+            org.apache.spark.sql.graftbridge.KnownFiles.parquet(spark,
+              es.map(e => (new org.apache.hadoop.fs.Path(root, e.path), e.size)),
+              basePath.map(new org.apache.hadoop.fs.Path(_)), s)
+          case None =>
+            val reader = basePath.fold(spark.read)(spark.read.option("basePath", _))
+            reader.parquet(es.map(e => s"$table/${e.path}"): _*)
+        })
+      Seq(group(part, Some(table)), group(flat, None)).flatten
+        .reduceLeft((a, b) => a.unionByName(b, allowMissingColumns = true))
     }
   }
 
@@ -424,8 +465,15 @@ object ManifestTable {
     * same mixed-layout handling as [[read]] — a single basePath read over
     * flat + partitioned leaves fails partition discovery. */
   private[graft] def readSelected(spark: SparkSession, table: String,
-      files: Seq[String]): DataFrame =
-    readFiles(spark, table, files, None, s"no files to read in manifest table: $table")
+      files: Seq[String]): DataFrame = {
+    val m = readLatest(table)._2
+    val sized = m.lines.map(parseEntry).map(e => e.path -> e).toMap
+    readEntries(spark, table, files.map(f => sized.getOrElse(f, FileEntry(f, None))), m.schema)
+  }
+
+  private def readEntries(spark: SparkSession, table: String, files: Seq[FileEntry],
+      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+    readFiles(spark, table, files, schema, None, s"no files to read in manifest table: $table")
 
   /** The partition directory a committed file lives in (`event_date=…`,
     * nested dirs included); "" for an unpartitioned file. */
@@ -496,31 +544,35 @@ object ManifestTable {
 
   /** The one file selection every pruned read shares: the snapshot
     * entries `keep` accepts, with the selectivity recorded in
-    * [[pruneStats]]. Returns (selected paths, every snapshot path). */
+    * [[pruneStats]]. Returns (selected, every snapshot entry, the
+    * manifest's schema header). */
   private def selectFiles(table: String)(keep: FileEntry => Boolean)
-      : (Seq[String], Seq[String]) = {
-    val entries = snapshotEntries(table)._2
-    val selected = entries.filter(keep).map(_.path)
+      : (Seq[FileEntry], Seq[FileEntry], Option[org.apache.spark.sql.types.StructType]) = {
+    val m = readLatest(table)._2
+    val entries = m.lines.map(parseEntry)
+    val selected = entries.filter(keep)
     pruneStats.put(Paths.get(table).toAbsolutePath.normalize.toString,
       (selected.size, entries.size))
-    (selected, entries.map(_.path))
+    (selected, entries, m.schema)
   }
 
   /** Read a [[selectFiles]] selection. A selection with NO file is a
     * legitimate empty result (a quiet hour, a future window, unprobed
-    * buckets): without `emptySchema` its schema comes from committed files
-    * (footer-only reads) instead of an error — one file of EACH layout
-    * group, since on a mixed flat+partitioned table a single flat file
-    * would omit the partition column the non-empty result carries via
-    * unionByName (r8 review). */
+    * buckets): without `emptySchema` its schema is the table's — planned
+    * over one committed file of EACH layout group and cut to zero rows,
+    * since on a mixed flat+partitioned table a single flat file would omit
+    * the partition column the non-empty result carries via unionByName
+    * (r8 review). The zero-row limit plans as an empty local relation, so
+    * no file is read; with a `#schema:` header not even a footer is. */
   private def readSelection(spark: SparkSession, table: String,
       emptySchema: Option[org.apache.spark.sql.types.StructType])
       (keep: FileEntry => Boolean): DataFrame = {
-    val (selected, all) = selectFiles(table)(keep)
+    val (selected, all, schema) = selectFiles(table)(keep)
     if (selected.isEmpty && emptySchema.isEmpty && all.nonEmpty)
-      readFiles(spark, table, (all.find(isPartitioned) ++ all.find(!isPartitioned(_))).toSeq,
-        None, "unreachable").limit(0)
-    else readFiles(spark, table, selected, emptySchema,
+      readEntries(spark, table,
+        (all.find(e => isPartitioned(e.path)) ++ all.find(e => !isPartitioned(e.path))).toSeq,
+        schema).limit(0)
+    else readFiles(spark, table, selected, schema, emptySchema,
       s"no files selected in manifest table: $table (pass emptySchema)")
   }
 
@@ -543,15 +595,16 @@ object ManifestTable {
     * DUPLICATE the staged copy; the 50M scale run caught exactly that). */
   def tryCommit(table: String, absorbBatch: Option[Long] = None)
       (delta: Seq[String] => Option[Seq[String]]): Option[Long] =
-    tryCommitCore(table)((files, maxB) =>
+    tryCommitCore(table, None)((files, maxB) =>
       delta(files).map(next => (next, math.max(maxB, absorbBatch.getOrElse(-1L)))))
 
   /** The CAS loop itself: `delta` sees the snapshot's (files, maxBatch)
     * and returns the next (files, maxBatch) — re-evaluated per attempt, so
     * anything derived from the snapshot (an allocated batch id, a
     * membership check) is decided ATOMICALLY with the commit that uses
-    * it. */
-  private def tryCommitCore(table: String)
+    * it. The `#schema:` header is carried over from the snapshot; a
+    * snapshot without one takes `schema` (the committing writer's). */
+  private def tryCommitCore(table: String, schema: Option[org.apache.spark.sql.types.StructType])
       (delta: (Seq[String], Long) => Option[(Seq[String], Long)]): Option[Long] =
     lockFor(table).synchronized {
       val io = ioFor(table)
@@ -560,11 +613,11 @@ object ManifestTable {
       var attempts = 0
       while (attempts < 100) {
         attempts += 1
-        val (v, maxB, files) = readLatest(table)
-        delta(files, maxB) match {
+        val (v, m) = readLatest(table)
+        delta(m.lines, m.maxBatch) match {
           case None => return None
           case Some((next, newMax)) =>
-            val bytes = (s"#maxBatch:$newMax" +: next).mkString("\n").getBytes("UTF-8")
+            val bytes = Manifest(newMax, m.schema.orElse(schema), next).render.getBytes("UTF-8")
             val target = manifestPath(dir, v + 1)
             // publish-if-absent IS the CAS — a loser retries its delta on
             // the new snapshot
@@ -587,9 +640,9 @@ object ManifestTable {
     * every caller's files land exactly once. Returns the absorbed id. */
   def appendAllocate(df: DataFrame, table: String, partitionCol: Option[String],
       statsCol: Option[String] = None): Long = {
-    val staged = stage(df, table, partitionCol, s"a${System.nanoTime()}", statsCol)
+    val (staged, schema) = stage(df, table, partitionCol, s"a${System.nanoTime()}", statsCol)
     var allocated = -1L
-    tryCommitCore(table) { (files, maxB) =>
+    tryCommitCore(table, Some(schema)) { (files, maxB) =>
       allocated = maxB + 1
       Some((files ++ staged.map(_.line), maxB + 1))
     }
@@ -609,10 +662,11 @@ object ManifestTable {
   def append(df: DataFrame, table: String, partitionCol: Option[String],
       batchId: Long, statsCol: Option[String] = None): Unit = {
     if (hasBatch(table, batchId)) return
-    val staged = stage(df, table, partitionCol, s"b$batchId", statsCol)
+    val (staged, schema) = stage(df, table, partitionCol, s"b$batchId", statsCol)
     // commit even when the batch produced no files: the id must be
     // absorbed into the manifest header or a replay would re-run it
-    commit(table, absorbBatch = Some(batchId))(files => files ++ staged.map(_.line))
+    tryCommitCore(table, Some(schema))((files, maxB) =>
+      Some((files ++ staged.map(_.line), math.max(maxB, batchId))))
   }
 
   /** [[append]] of a plan carrying an [[org.apache.spark.sql.Observation]],
@@ -662,15 +716,15 @@ object ManifestTable {
 
   private def swapPrefixed(df: DataFrame, table: String, partitionCol: Option[String],
       replaced: Seq[String], prefix: String, statsCol: Option[String]): Boolean = {
-    val staged = stage(df, table, partitionCol, prefix, statsCol)
+    val (staged, schema) = stage(df, table, partitionCol, prefix, statsCol)
     val dead = replaced.toSet // PATHS; manifest lines may carry stats
-    val committed = tryCommit(table) { lines =>
+    val committed = tryCommitCore(table, Some(schema)) { (lines, maxB) =>
       // Set membership both ways: replaced.forall(files.contains) was a
       // quadratic Seq scan held under the per-table commit lock on every
       // CAS attempt — ~10^8 comparisons for a 10k-file swap (r7 review)
       val livePaths = lines.map(pathOf).toSet
       if (dead.subsetOf(livePaths))
-        Some(lines.filterNot(l => dead(pathOf(l))) ++ staged.map(_.line))
+        Some((lines.filterNot(l => dead(pathOf(l))) ++ staged.map(_.line), maxB))
       else None
     }
     if (committed.isEmpty)
@@ -710,14 +764,15 @@ object ManifestTable {
       case Some((c, mn, _)) if eraSpan > 0L && statsCol.contains(c) => mn / eraSpan
       case _ => -1L
     }
-    val fragmented = snapshotEntries(table)._2
+    val m = readLatest(table)._2
+    val fragmented = m.lines.map(parseEntry)
       .groupBy(e => (partitionDir(e.path), eraOf(e)))
       .filter { case ((dir, _), files) =>
         files.size > threshold && (dir.nonEmpty || partitionCol.isEmpty) }
     fragmented.groupBy(_._1._2).forall { case (_, groups) =>
-      val replaced = groups.values.flatten.map(_.path).toSeq
-      swap(rewrite(readSelected(spark, table, replaced), groups.size),
-        table, partitionCol, replaced, statsCol)
+      val replaced = groups.values.flatten.toSeq
+      swap(rewrite(readEntries(spark, table, replaced, m.schema), groups.size),
+        table, partitionCol, replaced.map(_.path), statsCol)
     }
   }
 
@@ -745,7 +800,7 @@ object ManifestTable {
   /** The since-bounded file list itself (paths with batch ≥ `sinceBatch`)
     * — for callers that rewrite the window via [[swapAsBatch]]. */
   private[graft] def batchSinceFiles(table: String, sinceBatch: Long): Seq[String] =
-    selectFiles(table)(batchSince(_, sinceBatch))._1
+    selectFiles(table)(batchSince(_, sinceBatch))._1.map(_.path)
 
   private def batchSince(e: FileEntry, sinceBatch: Long): Boolean =
     batchOfPath(e.path).forall(_ >= sinceBatch)
@@ -775,10 +830,13 @@ object ManifestTable {
 
   /** Write `df` as parquet into a scratch dir, then move the data files to
     * their final partition-aware names inside the table. Returns the
-    * relative paths. The files are durable and complete BEFORE any
-    * manifest references them. */
+    * entries (relative path, stats, byte size) and the schema a reader of
+    * these files sees: the file columns, then the partition column, which
+    * lives in the directory names. The files are durable and complete
+    * BEFORE any manifest references them. */
   private def stage(df: DataFrame, table: String, partitionCol: Option[String],
-      prefix: String, statsCol: Option[String] = None): Seq[FileEntry] = {
+      prefix: String, statsCol: Option[String])
+      : (Seq[FileEntry], org.apache.spark.sql.types.StructType) = {
     val io = ioFor(table)
     val scratch = Paths.get(table, s".stage-${java.util.UUID.randomUUID()}")
     val writer = df.write.mode("overwrite")
@@ -795,14 +853,16 @@ object ManifestTable {
         // the file is still in scratch — a one-time writer-side cost that
         // every later range query avoids paying per file
         val stats = statsCol.flatMap(c => footerStats(p, c).map(mm => (c, mm._1, mm._2)))
+        val size = io.size(p)
         // promotion needs no atomicity: the file stays invisible until the
         // manifest commit that names it
         io.promote(p, Paths.get(table, relOut))
-        moved += FileEntry(relOut, stats)
+        moved += FileEntry(relOut, stats, Some(size))
       }
     // scratch now holds only _SUCCESS/metadata droppings
     io.deletePrefix(scratch)
-    moved.toSeq
+    val (parts, cols) = df.schema.partition(f => partitionCol.contains(f.name))
+    (moved.toSeq, org.apache.spark.sql.types.StructType(cols ++ parts))
   }
 
   /** One read-only Hadoop conf for all footer reads — constructing one per

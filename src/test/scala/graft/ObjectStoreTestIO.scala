@@ -47,6 +47,7 @@ final class ObjectStoreTestIO extends ManifestTable.FileIO {
     }
   def deletePrefix(dir: Path): Unit = graft.Storage.deleteTree(dir)
   def lastModifiedMillis(path: Path): Long = Files.getLastModifiedTime(path).toMillis
+  def size(path: Path): Long = Files.size(path)
   def promote(src: Path, target: Path): Unit = {
     // object-store upload: copy bytes to the final key, delete the staged
     // source — NOT a rename; needs no atomicity because the file is

@@ -453,4 +453,24 @@ class PqSpec extends SparkTestBase {
     assert(asg.collect().isEmpty)
     assert(asg.columns.contains("cid") && asg.columns.contains("assign_cos"))
   }
+
+  test("pq training on a short 16-dim training set: a dims mismatch is rejected by name, fewer seeds than codes train") {
+    import org.apache.spark.sql.functions.col
+    val idx = java.nio.file.Files.createTempDirectory("graft_pq_short").toString
+    // 50 16-dim vectors; buildIvfPqIndex trains at the default 64 dims,
+    // which used to slice empty codewords and crash inside the encode kernel
+    val emb = graft.streaming.FlowPipeline.deriveVecs(
+      graft.flow.FlowGen.flows(spark, 500L, seed = 99L).toDF(), every = 10L)
+    val err = intercept[IllegalArgumentException](
+      Pq.buildIvfPqIndex(emb, idx, nCentroids = 4, kmIters = 1))
+    assert(err.getMessage.contains("64-dim") && err.getMessage.contains("has 16 dimensions"),
+      err.getMessage)
+    // the same vectors at their own width, with fewer rows than codes:
+    // the codebook holds one code per seed and every vector encodes
+    val few = emb.orderBy("vec_id").limit(5)
+    val model = Pq.train(few, m = M, k = K, iters = 1, dims = 16)
+    assert(model.codeIds.size === 5 && model.codebook.forall(_.size == 5))
+    val codes = Pq.encoded(emb, model).select(col("codes")).collect().map(_.getSeq[Int](0))
+    assert(codes.length === 50 && codes.forall(c => c.size == M && c.forall(j => j >= 0 && j < 5)))
+  }
 }
