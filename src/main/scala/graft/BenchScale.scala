@@ -25,6 +25,10 @@ object BenchScale {
   /** The row count `BENCH_scale.json` records. */
   private val DefaultRows = 50000000L
 
+  /** Streaming ingest micro-batches carry `genFiles / IngestTriggerDiv`
+    * wire files each. */
+  private val IngestTriggerDiv = 16
+
   private def timed[A](f: => A): (A, Double) = {
     val t0 = System.nanoTime()
     val r = f
@@ -101,13 +105,13 @@ object BenchScale {
       // spark.file.transferTo=false measured NO win (154.8k vs 195.3k
       // rows/s on adjacent windows), so the default stays — the storm
       // correlates with, but does not gate, throughput here.
-      // r19 A/B knob: ObjectHashAggregate falls back to SORT-based
-      // aggregation after this many distinct groups per partition
-      // (default 128) — the wide-group sketch rows (15M (day, src)
-      // groups) live far past it, turning every sketch aggregate into a
-      // sort of the fact table plus per-group buffer serialization
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "128"))
+      // ObjectHashAggregate falls back to SORT-based aggregation after
+      // this many distinct groups per partition. The wide-group sketch
+      // rows (15M (day, src) groups) live far past it. The r19 A/B is
+      // done: raising it to 1M made scale_flow_port_scan_sketch 1.8x
+      // slower at 50M (678.7 s vs 383.9 s; the live Union objects in the
+      // hash map cost more than the sort), so it stays at Spark's 128
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "128")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
@@ -197,13 +201,12 @@ object BenchScale {
         // than the old 4-partition scan, so the same trigger size that
         // fit before OOMs the default heap at 50M — half-size batches
         // restore the headroom (measured: /8 OOMs at 12g, /16 fits 8g).
-        // r19 (verdict #7): divisor env-tunable for the fewer/larger-
-        // shuffle-files A/B — fewer micro-batches mean fewer (shuffle
-        // files × batches) on the write path; needs the raised driver
-        // heap (SPARK_DRIVER_MEM) below /16.
-        val triggerDiv = sys.env.getOrElse("SPARK_GRAFT_INGEST_TRIGGER_DIV", "16").toInt
+        // The r19 fewer/larger-batches A/B is done: /8 read 190.8k rows/s
+        // at 50M, but its /16 control landed on a degraded-storage window
+        // (write probe 181 vs 406 MB/s), so no change was justified and
+        // /16 stays (a divisor under 16 also needs a raised driver heap).
         val stream = ProtoCodec.binaryFileStream(spark, wireDir,
-          Map("maxFilesPerTrigger" -> (genFiles / triggerDiv).toString)).toDF()
+          Map("maxFilesPerTrigger" -> (genFiles / IngestTriggerDiv).toString)).toDF()
         val q = FlowStreams.startBatches(stream, checkpoint,
             FlowStreams.SparkDefaultTrigger) { (batch, id) =>
           val b = batch.persist()
@@ -273,10 +276,9 @@ object BenchScale {
       val (genSec, ingestSec, compactSec, nCompactions, rawRows, rollupFlows,
         ioW0, ioR0, ioW1, ioR1, ioMode) = ingestLeg()
       val rate = (n / ingestSec).toLong
-      val trigDiv = sys.env.getOrElse("SPARK_GRAFT_INGEST_TRIGGER_DIV", "16")
       val refresh =
         f"""{"rows":$n,"gen_sec":$genSec%.1f,"ingest_sec":$ingestSec%.1f,""" +
-        f""""trigger_div":$trigDiv,""" +
+        f""""trigger_div":$IngestTriggerDiv,""" +
         f""""ingest_rows_per_sec":$rate,"final_compact_sec":$compactSec%.1f,""" +
         f""""online_compactions_during_ingest":$nCompactions,""" +
         f""""raw_rows":$rawRows,"rollup_flow_count":$rollupFlows,""" +

@@ -48,6 +48,13 @@ object GraftSession {
       // existing session should set the conf in their own builder.
       .config("spark.sql.codegen.cache.maxEntries",
         sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
+      // list files on the driver, whatever the path count: past the
+      // default 32 paths Spark stats them in a separate job, one task per
+      // path. Every graft master is local[N], so that job only moves the
+      // getFileStatus calls onto the task slots the queries need and adds
+      // a Hadoop-conf deserialization per task — about 50 extra tasks on
+      // every 5 s live micro-batch of 50 landed files
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
       .config("spark.ui.enabled", "false")

@@ -570,7 +570,8 @@ object Pq {
     * manifest layout as the plain IVF index (centroids at batch 0,
     * cell-partitioned commits), so compaction
     * ([[Similarity.compactIvfCells]] pointed at `cells`) and the
-    * append/retrain lifecycle carry over unchanged. */
+    * append/retrain lifecycle carry over unchanged. The vectors may have
+    * any width that `m` divides: the codebook takes it from the data. */
   def buildIvfPqIndex(emb: DataFrame, indexDir: String, nCentroids: Int = 8,
       kmIters: Int = 2, m: Int = 4, nCodes: Int = 8, iters: Int = 2): Unit = {
     import graft.streaming.ManifestTable
@@ -579,7 +580,10 @@ object Pq {
     val cents = Similarity.kmeansCentroids(emb, nCentroids, kmIters)
     ManifestTable.append(cents.select(col("cid"), col("c_emb")),
       s"$indexDir/centroids", None, 0L)
-    val model = train(emb, m, nCodes, iters)
+    // the codebook is as wide as the corpus' vectors (every centroid has
+    // their width); an empty corpus trains an empty codebook at any width
+    val dims = cents.select(size(col("c_emb"))).as[Int].take(1).headOption.getOrElse(m)
+    val model = train(emb, m, nCodes, iters, dims)
     val cbRows = for {
       s <- model.codebook.indices
       c <- model.codebook(s).indices

@@ -476,7 +476,12 @@ object ProtoCodec {
     * while the rest of the machine idles. For a CPU-bound ingest, set
     * maxPartitionBytes near the wire-file size (one decode task per
     * file); a real Kafka source doesn't have this problem — its
-    * parallelism is topic partitions. */
+    * parallelism is topic partitions.
+    *
+    * Each batch's files are stat'ed on the driver when the batch's
+    * relation is built: a graft session lists any number of paths there
+    * (`GraftSession.builder`), so a batch of more than 32 files runs no
+    * separate listing job on the task slots the batch itself needs. */
   def binaryFileStream(spark: org.apache.spark.sql.SparkSession, dir: String,
       options: Map[String, String] = Map.empty): org.apache.spark.sql.Dataset[FlowMessage] = {
     import org.apache.spark.sql.types._

@@ -8,11 +8,12 @@ import org.apache.spark.sql.types.StructType
 
 /** A parquet relation over files whose schema and sizes the caller already
   * knows (a table log that records them). `spark.read.parquet(files…)`
-  * would run a schema-inference job and stat every file (with a listing
-  * job past `parallelPartitionDiscovery.threshold` paths); here the schema
+  * would run a schema-inference job and stat every file; here the schema
   * is given and the file index's status cache is seeded from the sizes,
   * so building the relation runs no Spark job and opens no file. Files
-  * without a known size are stat'ed as Spark would. The relation is the
+  * without a known size are stat'ed as Spark would, on the driver: a
+  * graft session lists any number of paths there (`GraftSession.builder`),
+  * so no listing job exists either. The relation is the
   * one `DataFrameReader` builds (same index, format, options and nullable
   * data schema), so planning and scans are unchanged. Lives here for
   * `StructType.asNullable`.

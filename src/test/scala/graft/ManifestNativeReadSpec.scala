@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.flow.{DashboardSql, FlowGen, FlowMessage, TimeRange}
 import graft.streaming.{FlowStreams, ManifestTable}
 
@@ -31,18 +29,6 @@ class ManifestNativeReadSpec extends SparkTestBase {
       q1.processAllAvailable(); q2.processAllAvailable()
     } finally { q1.stop(); q2.stop() }
     (rawT, rollT)
-  }
-
-  /** Spark jobs started while `f` runs (listener bus drained both sides). */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { started.incrementAndGet(); () }
-    }
-    ColumnBridge.drainListenerBus(spark)
-    spark.sparkContext.addSparkListener(l)
-    try { val out = f; ColumnBridge.drainListenerBus(spark); (out, started.get) }
-    finally spark.sparkContext.removeSparkListener(l)
   }
 
   private def latestManifest(table: String): Path = {
@@ -87,17 +73,17 @@ class ManifestNativeReadSpec extends SparkTestBase {
     }
     val range = TimeRange(day1, day1 + 86400L)
     val (_, registerJobs) = jobsDuring(DashboardSql.registerManaged(spark, rawT, rollT, Some(range)))
-    assert(registerJobs === 0, "registerManaged must plan from the manifest alone")
+    assert(registerJobs.size === 0, "registerManaged must plan from the manifest alone")
     val (_, readJobs) = jobsDuring {
       ManifestTable.read(spark, rawT); ManifestTable.read(spark, rollT)
     }
-    assert(readJobs === 0, "ManifestTable.read must plan from the manifest alone")
+    assert(readJobs.size === 0, "ManifestTable.read must plan from the manifest alone")
     // an empty selection has the table's schema and reads nothing
     val (empty, emptyJobs) = jobsDuring {
       val e = FlowStreams.readRawManagedRange(spark, rawT, day1 + 30 * 86400L, day1 + 31 * 86400L)
       (e.schema, e.collect().length)
     }
-    assert(emptyJobs === 0 && empty._2 === 0)
+    assert(emptyJobs.size === 0 && empty._2 === 0)
     assert(empty._1 === ManifestTable.read(spark, rawT).schema)
     // the panels answer from the native relation
     assert(DashboardSql.runManaged(spark, "m_instant_traffic_30s", Some(range)).collect().nonEmpty)

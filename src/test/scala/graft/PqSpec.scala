@@ -456,13 +456,11 @@ class PqSpec extends SparkTestBase {
 
   test("pq training on a short 16-dim training set: a dims mismatch is rejected by name, fewer seeds than codes train") {
     import org.apache.spark.sql.functions.col
-    val idx = java.nio.file.Files.createTempDirectory("graft_pq_short").toString
-    // 50 16-dim vectors; buildIvfPqIndex trains at the default 64 dims,
-    // which used to slice empty codewords and crash inside the encode kernel
+    // 50 16-dim vectors trained at 64 dims used to slice empty codewords
+    // and crash inside the encode kernel
     val emb = graft.streaming.FlowPipeline.deriveVecs(
       graft.flow.FlowGen.flows(spark, 500L, seed = 99L).toDF(), every = 10L)
-    val err = intercept[IllegalArgumentException](
-      Pq.buildIvfPqIndex(emb, idx, nCentroids = 4, kmIters = 1))
+    val err = intercept[IllegalArgumentException](Pq.train(emb, m = M, k = K, iters = 1, dims = 64))
     assert(err.getMessage.contains("64-dim") && err.getMessage.contains("has 16 dimensions"),
       err.getMessage)
     // the same vectors at their own width, with fewer rows than codes:
@@ -472,5 +470,35 @@ class PqSpec extends SparkTestBase {
     assert(model.codeIds.size === 5 && model.codebook.forall(_.size == 5))
     val codes = Pq.encoded(emb, model).select(col("codes")).collect().map(_.getSeq[Int](0))
     assert(codes.length === 50 && codes.forall(c => c.size == M && c.forall(j => j >= 0 && j < 5)))
+  }
+
+  test("ivfpq index over 16-dim vectors: the codebook takes the data's width; appends and probes serve") {
+    import org.apache.spark.sql.functions.col
+    val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq_16").toString
+    // 50 vectors, vec_id 0, 10, …, 490
+    val emb = graft.streaming.FlowPipeline.deriveVecs(
+      graft.flow.FlowGen.flows(spark, 500L, seed = 99L).toDF(), every = 10L)
+    Pq.buildIvfPqIndex(emb, idx, nCentroids = 4, kmIters = 1)
+    val model = Pq.readIvfPqModel(spark, idx)
+    assert(model.m === M && model.dsub === 16 / M)
+    assert(model === Pq.train(emb, dims = 16))
+    val cents = graft.streaming.ManifestTable.read(spark, s"$idx/centroids")
+    def served(corpus: org.apache.spark.sql.DataFrame) = (
+      Pq.knnIvfPqIndexed(spark, idx, emb.filter(col("vec_id") < 21)).collect().toSeq,
+      Pq.knnIvfPqOver(spark, corpus, model, cents, nQueries = 21, k = 5, nProbe = 3).collect().toSeq)
+    val (got, want) = served(emb)
+    assert(got.map(_.getLong(0)).distinct.sorted === Seq(0L, 10L, 20L))
+    assert(got === want, "materialized serving diverged from the inline stack")
+    // an exactly-once append of new 16-dim vectors encodes at the same width
+    val extra = emb.filter(col("vec_id") < 70)
+      .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
+    Pq.appendToIvfPqIndexBatch(extra, idx, 1L)
+    Pq.appendToIvfPqIndexBatch(extra, idx, 1L)
+    val cells = graft.streaming.ManifestTable.read(spark, s"$idx/cells")
+    assert(cells.count() === 57L, "replayed append must not double-encode")
+    assert(cells.select(col("codes")).collect().forall(_.getSeq[Int](0).size == M))
+    val (gotAfter, wantAfter) = served(emb.union(extra))
+    assert(gotAfter === wantAfter, "served appends diverged from the inline stack")
+    assert(gotAfter.exists(_.getLong(1) >= 100000L), "no appended vector served")
   }
 }
